@@ -56,6 +56,31 @@ object Bench {
     }
   }
 
+  /** A JSON string literal: `\`, `"` and control characters escaped,
+    * so an environment value can never break the line it lands in. */
+  def jsonString(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"' => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
+      case c => b += c
+    }
+    (b += '"').toString
+  }
+
+  /** Bare when numeric (the GraftSession contract), else a quoted
+    * string — an override may make either setting non-numeric. */
+  def jsonNum(s: String): String =
+    if (s.nonEmpty && s.forall(_.isDigit)) s else jsonString(s)
+
+  /** The `cpus`/`master`/`shuffle_parts` fields both bench records
+    * carry: the EFFECTIVE session settings, not the requested ones. */
+  def sessionFields(cpus: String, master: String,
+      shufflePartitions: String): String =
+    s""""cpus":${jsonNum(cpus)},"master":${jsonString(master)},""" +
+      s""""shuffle_parts":${jsonNum(shufflePartitions)}"""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -73,14 +98,8 @@ object Bench {
     // genuinely data-bound queries show task time ≈ cores × wall.
     // Listener delivery is async; the per-query attribution can skew
     // by the few ms of queue drain — harmless for a scaling signal.
-    val effMaster = spark.sparkContext.master
-    // rendered bare into JSON — numeric by the GraftSession contract,
-    // quoted defensively if an override made either non-numeric
-    def jsonNum(s: String): String =
-      if (s.nonEmpty && s.forall(_.isDigit)) s else "\"" + s + "\""
-    val effCpus = jsonNum(cpus)
-    val effShufflePartitions =
-      jsonNum(spark.conf.get("spark.sql.shuffle.partitions"))
+    val sessionJson = sessionFields(cpus, spark.sparkContext.master,
+      spark.conf.get("spark.sql.shuffle.partitions"))
     val taskTimeMs = new java.util.concurrent.atomic.AtomicLong(0L)
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
@@ -266,7 +285,7 @@ object Bench {
       // task seconds over the official (min-wall) recordings — the
       // scaling-sensitive signal wall time at sf0.1 is not (r18 #2)
       val taskTotal = allNames.map(bestTaskOf).sum
-      s"""{"metric":"total","value":${num(total, 2)},"unit":"sec","queries":$qs,"sf":"$sfName","timing":"min2","cpus":$effCpus,"master":"$effMaster","shuffle_parts":$effShufflePartitions,"task_total":${num(taskTotal, 1)},"passes":$passJson,"calib_bound":${num(calibBound, 2)}$failedJson,"calib_before":${num(calibBefore, 3)},"calib_after":${num(calibAfter, 3)},"calib_io":${num(calibIo, 3)}}"""
+      s"""{"metric":"total","value":${num(total, 2)},"unit":"sec","queries":$qs,"sf":"$sfName","timing":"min2",$sessionJson,"task_total":${num(taskTotal, 1)},"passes":$passJson,"calib_bound":${num(calibBound, 2)}$failedJson,"calib_before":${num(calibBefore, 3)},"calib_after":${num(calibAfter, 3)},"calib_io":${num(calibIo, 3)}}"""
     }
     // harness tail is 2000 chars; the sbt "[success] Total time: ..."
     // trailer plus newlines takes ~75, leaving ~1925 for this line
@@ -305,7 +324,7 @@ object Bench {
       try w.println(
         s"""{"total":${num(total, 6)},"queries":${fullMap(results)},""" +
         s""""task_times":${fullMap(allNames.map(n => n -> bestTaskOf(n)))},""" +
-        s""""cpus":$effCpus,"master":"$effMaster","shuffle_parts":$effShufflePartitions,""" +
+        s"""$sessionJson,""" +
         s""""passes":$passesFull,""" +
         s""""calib_bound":${num(calibBound, 3)},""" +
         s""""failed":$failedFull,""" +

@@ -4,18 +4,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, explode}
 import org.apache.spark.sql.types._
 
-/** O5/O6 — paginated OData scan over local JSON page fixtures.
+/** O5/O6 — paginated OData scan over local JSON page fixtures or a
+  * live chain.
   *
   * A page is one JSON object `{"value": [...], "@odata.nextLink": "..."}`
   * (MD-PS:164-194). The reference accumulates all pages into one
-  * driver-side list; here only the *link chain* is walked on the driver
-  * — a plain Jackson read per page for the cursor (PageCursor, shared
-  * with the V2 connector; no Spark job, no value parsing) — and row
-  * data stays distributed: the per-page DataFrames are combined with
-  * a balanced `unionByName`. Against a live service this becomes the
-  * DataSource V2 connector (graft.sources.v2) emitting one
-  * InputPartition per page so executors process pages in parallel;
-  * this reader keeps the same page semantics as a simple fixture path.
+  * driver-side list; here the driver walks only the *link chain* — one
+  * streaming cursor scan per page ([[graft.sources.v2.PageCursor]],
+  * shared with the V2 connector; no Spark job, no tree of the rows) —
+  * and the rows are parsed by executors in ONE plan per chain:
+  *  - URL pages (whose bodies the walk had to fetch) are parsed together
+  *    by one `read.json` over a local Dataset of the bodies, in page
+  *    order;
+  *  - file pages are re-read distributed from their paths, so their
+  *    row data never sits on the driver;
+  *  - a mixed chain keeps each run of consecutive same-kind pages
+  *    together, which preserves page order.
+  * Against a live service at scale this becomes the DataSource V2
+  * connector (graft.sources.v2) emitting one InputPartition per page so
+  * executors fetch pages in parallel; this reader keeps the same page
+  * semantics as a simple driver-loop path.
   */
 object ODataPageReader {
 
@@ -28,23 +36,23 @@ object ODataPageReader {
   private case class Page(path: String, body: Option[String])
 
   /** Walk the nextLink chain: pages in order, plus the final page's
-    * body (for cursors that live only on the last page, e.g.
-    * deltaLink). Throws if the chain exceeds `maxPages` rather than
+    * deltaLink (the cursor that lives only on the last page of a delta
+    * chain). Throws if the chain exceeds `maxPages` rather than
     * truncating — a silently shortened walk is indistinguishable from
     * a complete one downstream, which merely shortens a full refresh
     * but CORRUPTS an incremental sync. Each page is fetched once,
     * through the caller's transport (wrap in RetryingPageFetcher for
-    * live 429 handling).
+    * live 429 handling), and its cursors are read in one scan.
     *
     * URL bodies are RETAINED (they cannot be re-read by a distributed
-    * scan) and later ride the plan as local relations, so the driver
+    * scan) and later ride the plan as a local relation, so the driver
     * pays O(retained bytes); `urlBodyBudget` fails the walk before
     * that becomes an OOM — a full live scan past the budget belongs on
     * the DSv2 connector, whose executors fetch their own pages. */
   private def walkChain(firstPagePath: String, maxPages: Int,
       fetcher: graft.sources.v2.PageFetcher,
       urlBodyBudget: Long)
-      : (Seq[Page], String) = {
+      : (Seq[Page], Option[String]) = {
     import graft.sources.v2.PageCursor
     var retained = 0L
     def page(path: String, body: String): Page =
@@ -60,41 +68,50 @@ object ODataPageReader {
               "their own pages)")
         Page(path, Some(body))
       }
-    var body = fetcher.fetch(firstPagePath)
-    val pages = scala.collection.mutable.ArrayBuffer(
-      page(firstPagePath, body))
-    var next = PageCursor.nextLink(body, firstPagePath)
+    val pages = scala.collection.mutable.ArrayBuffer.empty[Page]
+    var next: Option[String] = Some(firstPagePath)
+    var deltaLink: Option[String] = None
     while (next.isDefined) {
-      if (pages.size >= maxPages)
+      if (pages.nonEmpty && pages.size >= maxPages)
         throw new IllegalStateException(
           s"page chain exceeds maxPages=$maxPages at ${pages.last.path}; " +
             "raise maxPages — a truncated read would be silently incomplete")
-      body = fetcher.fetch(next.get)
-      pages += page(next.get, body)
-      next = PageCursor.nextLink(body, next.get)
+      val path = next.get
+      val body = fetcher.fetch(path)
+      pages += page(path, body)
+      val meta = PageCursor.pageMeta(body, path)
+      next = meta.nextLink
+      deltaLink = meta.deltaLink
     }
-    (pages.toSeq, body)
+    (pages.toSeq, deltaLink)
   }
 
-  /** Parse one page's `value[]` rows. File pages re-read distributed
-    * (row data never sits on the driver); URL pages parse the body the
-    * chain walk already fetched — acceptable for delta rounds, whose
-    * volume is O(changes); the DSv2 connector is the scale path for
-    * full live scans (executors fetch pages in parallel there). */
-  private def pageDf(spark: SparkSession, pageSchema: StructType,
-      p: Page): DataFrame = {
+  /** All pages' `value[]` rows as one DataFrame, in page order. Each run
+    * of consecutive URL pages is ONE `read.json` over a local Dataset of
+    * its bodies — one plan however long the chain, parsed by executors
+    * (`from_json` over the same Dataset would be folded into the local
+    * relation by the optimizer and parsed single-threaded on the
+    * driver). Each file page is its own distributed path read; those
+    * reads are combined with a balanced union, since a left-nested one
+    * builds an O(pages)-deep plan that strains the analyzer. */
+  private def chainDf(spark: SparkSession, pageSchema: StructType,
+      pages: Seq[Page]): DataFrame = {
     import spark.implicits._
-    val raw = p.body match {
-      case Some(b) =>
-        spark.read.schema(pageSchema).json(spark.createDataset(Seq(b)))
-      case None =>
-        spark.read.schema(pageSchema).option("multiLine", "true").json(p.path)
+    val runs = pages.foldLeft(Vector.empty[Vector[Page]]) { (acc, p) =>
+      if (acc.nonEmpty && acc.last.head.body.isDefined == p.body.isDefined)
+        acc.init :+ (acc.last :+ p)
+      else acc :+ Vector(p)
     }
-    raw.select(explode(col("value")).as("v")).select(col("v.*"))
+    val raws = runs.flatMap { run =>
+      if (run.head.body.isDefined)
+        Seq(spark.read.schema(pageSchema)
+          .json(spark.createDataset(run.flatMap(_.body))))
+      else run.map(p => spark.read.schema(pageSchema)
+        .option("multiLine", "true").json(p.path))
+    }
+    union(raws).select(explode(col("value")).as("v")).select(col("v.*"))
   }
 
-  /** Balanced union: a left-nested reduce builds an O(pages)-deep plan
-    * that strains the analyzer on long chains. */
   private def union(dfs: Seq[DataFrame]): DataFrame =
     if (dfs.size == 1) dfs.head
     else union(dfs.grouped(2).map {
@@ -117,7 +134,7 @@ object ODataPageReader {
       StructField(nextLinkField, StringType)))
     val (pages, _) =
       walkChain(firstPagePath, maxPages, fetcher, urlBodyBudgetBytes)
-    union(pages.map(pageDf(spark, pageSchema, _)))
+    chainDf(spark, pageSchema, pages)
   }
 
   val removedField = "@removed"
@@ -137,9 +154,9 @@ object ODataPageReader {
     *
     * Returns the change set — `valueSchema`'s columns plus a boolean
     * `removed` (tombstones carry only the id; their other columns are
-    * NULL) — and the deltaLink. Page walking matches [[readPages]]:
-    * the driver touches only the link chain, row data stays
-    * distributed. Apply with `Sinks.applyDelta`. */
+    * NULL) — and the final page's deltaLink, read by the same walk.
+    * Page walking and parsing match [[readPages]]. Apply with
+    * `Sinks.applyDelta`. */
   def readDeltaPages(spark: SparkSession, firstPagePath: String,
       valueSchema: StructType, maxPages: Int = 10000,
       fetcher: graft.sources.v2.PageFetcher =
@@ -151,11 +168,9 @@ object ODataPageReader {
     val pageSchema = StructType(Seq(
       StructField("value", ArrayType(deltaValueSchema)),
       StructField(nextLinkField, StringType)))
-    val (pages, lastBody) =
+    val (pages, link) =
       walkChain(firstPagePath, maxPages, fetcher, urlBodyBudgetBytes)
-    val link =
-      graft.sources.v2.PageCursor.deltaLink(lastBody, pages.last.path)
-    val changes = union(pages.map(pageDf(spark, pageSchema, _)))
+    val changes = chainDf(spark, pageSchema, pages)
       .withColumn("removed", col(removedField).isNotNull)
       .drop(removedField)
     (changes, link)

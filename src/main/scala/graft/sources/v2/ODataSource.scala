@@ -846,8 +846,8 @@ case class ODataCountPartition(count: Long) extends InputPartition
   * stop, byte/row statistics) and the streaming delta rounds
   * (deltaLink extraction), so the two can never drift on budget
   * accounting, maxPages discipline, or partition construction. Each
-  * page body is JSON-parsed exactly once ([[PageCursor.pageMeta]]:
-  * nextLink + deltaLink + row count from the same tree). */
+  * page body is scanned exactly once ([[PageCursor.pageMeta]]:
+  * nextLink + deltaLink + row count from one streaming pass). */
 private[v2] object PageWalk {
   final case class Result(parts: Array[InputPartition], totalBytes: Long,
       totalRows: Long, deltaLink: Option[String])
@@ -1329,39 +1329,53 @@ class HttpPageFetcher(tokenProvider: Option[TokenProvider])
       }
   }
 
-  /** Right(body) on 200, Left(401) on auth rejection, throws otherwise. */
+  /** Right(body) on 200, Left(401) on auth rejection, throws otherwise.
+    *
+    * Every answered request leaves its connection reusable: the 200 body
+    * is read to the end, any error body is drained, and both streams are
+    * closed (not disconnected), so the JDK keep-alive cache hands the
+    * same socket — and, against live Graph, the same TLS session — to
+    * the next page. Only a transport failure, after which the socket's
+    * state is unknown, disconnects. */
   private def fetchOnce(path: String): Either[Int, String] = {
     val conn = java.net.URI.create(path).toURL.openConnection()
       .asInstanceOf[java.net.HttpURLConnection]
-    try {
-      conn.setRequestMethod("GET")
-      conn.setConnectTimeout(30000)
-      conn.setReadTimeout(120000)
-      conn.setRequestProperty("Accept", "application/json")
-      tokenProvider.foreach(p =>
-        conn.setRequestProperty("Authorization", s"Bearer ${p.token()}"))
-      val code =
-        try conn.getResponseCode
-        catch { case e: java.io.IOException =>
-          throw new RetryableFetchException(s"transport error for $path", e) }
-      code match {
-        case 200 =>
+    def transportError(what: String, e: java.io.IOException): Nothing = {
+      conn.disconnect()
+      throw new RetryableFetchException(s"transport error $what $path", e)
+    }
+    conn.setRequestMethod("GET")
+    conn.setConnectTimeout(30000)
+    conn.setReadTimeout(120000)
+    conn.setRequestProperty("Accept", "application/json")
+    tokenProvider.foreach(p =>
+      conn.setRequestProperty("Authorization", s"Bearer ${p.token()}"))
+    val code =
+      try conn.getResponseCode
+      catch { case e: java.io.IOException => transportError("for", e) }
+    code match {
+      case 200 =>
+        // a reset mid-body is as transient as one before the status
+        // line — both must reach the O7 retry loop
+        try {
           val in = conn.getInputStream
-          // a reset mid-body is as transient as one before the status
-          // line — both must reach the O7 retry loop
           try Right(new String(in.readAllBytes(),
             java.nio.charset.StandardCharsets.UTF_8))
-          catch { case e: java.io.IOException =>
-            throw new RetryableFetchException(
-              s"transport error reading body for $path", e) }
           finally in.close()
-        case 401 => Left(401)
-        case 429 | 503 =>
-          throw new RetryableFetchException(s"HTTP $code for $path")
-        case other =>
-          throw new java.io.IOException(s"HTTP $other for $path")
-      }
-    } finally conn.disconnect()
+        } catch { case e: java.io.IOException =>
+          transportError("reading body for", e) }
+      case _ =>
+        try Option(conn.getErrorStream).foreach { es =>
+          try es.readAllBytes() finally es.close()
+        } catch { case _: java.io.IOException => conn.disconnect() }
+        code match {
+          case 401 => Left(401)
+          case 429 | 503 =>
+            throw new RetryableFetchException(s"HTTP $code for $path")
+          case other =>
+            throw new java.io.IOException(s"HTTP $other for $path")
+        }
+    }
   }
 }
 
@@ -1452,8 +1466,6 @@ object ODataUrl {
 }
 
 object PageCursor {
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
   def isUrl(p: String): Boolean =
     p.startsWith("http://") || p.startsWith("https://")
 
@@ -1500,45 +1512,88 @@ object PageCursor {
       }
     }
 
-  private def link(body: String, field: String): Option[String] = {
-    val node = mapper.readTree(body).get(field)
-    Option(node).filter(!_.isNull).map(_.asText())
-  }
-
   /** Extract @odata.deltaLink from a (final) delta page body — the
     * cursor a caller persists to resume incremental sync on the next
     * run. Live cursors are absolute and pass through verbatim;
     * relative fixture cursors resolve against the final page's
     * location so the persisted cursor is usable from any cwd. */
   def deltaLink(body: String, currentPath: String): Option[String] =
-    link(body, "@odata.deltaLink").map(resolve(_, currentPath))
-
-  /** Extract @odata.nextLink from a page body, resolved. */
-  def nextLink(body: String, currentPath: String): Option[String] =
-    link(body, nextLinkField).map(resolve(_, currentPath))
+    pageMeta(body, currentPath).deltaLink
 
   /** The OData inline count (`@odata.count`, stated when the request
     * carried `$count=true` or the fixture declares it) — the chain's
     * TOTAL row count as asserted by the server on the first page. */
-  def inlineCount(body: String): Option[Long] = {
-    val node = mapper.readTree(body).get("@odata.count")
-    Option(node).filter(_.canConvertToLong).map(_.asLong())
+  def inlineCount(body: String): Option[Long] = scan(body).count
+
+  /** A page's root-level cursor fields: links resolved (by
+    * [[pageMeta]]), `rows` = the size of `value[]`, `count` =
+    * `@odata.count` when it is a number within Long range. */
+  final case class PageMeta(nextLink: Option[String],
+      deltaLink: Option[String], rows: Int, count: Option[Long])
+
+  /** Everything the cursor walk needs from a page, in ONE streaming
+    * pass over the body. */
+  def pageMeta(body: String, currentPath: String): PageMeta = {
+    val m = scan(body)
+    m.copy(nextLink = m.nextLink.map(resolve(_, currentPath)),
+      deltaLink = m.deltaLink.map(resolve(_, currentPath)))
   }
 
-  final case class PageMeta(nextLink: Option[String],
-      deltaLink: Option[String], rows: Int)
+  private val factory = new com.fasterxml.jackson.core.JsonFactory()
 
-  /** Everything the cursor walk needs from a page, in ONE JSON parse
-    * (the walk previously re-parsed the same body per cursor field). */
-  def pageMeta(body: String, currentPath: String): PageMeta = {
-    val root = mapper.readTree(body)
-    def l(field: String): Option[String] =
-      Option(root.get(field)).filter(!_.isNull)
-        .map(n => resolve(n.asText(), currentPath))
-    val v = root.get("value")
-    PageMeta(l(nextLinkField), l("@odata.deltaLink"),
-      if (v != null && v.isArray) v.size else 0)
+  /** One root-level token scan: the cursor fields are read, every other
+    * field's children are skipped without building a tree (a page is
+    * mostly `value[]` rows the cursor never looks at). Semantics match
+    * a `readTree` of the page: only ROOT-level keys count (a row's own
+    * `@odata.nextLink` inside `value[]` is not a cursor), the last
+    * duplicate key wins, an explicit `null` link is absent, and a
+    * truncated or malformed body — or a link that is an object or an
+    * array — throws: a shortened walk must never pass for a complete
+    * one. */
+  private def scan(body: String): PageMeta = {
+    import com.fasterxml.jackson.core.{JsonParseException, JsonParser}
+    import com.fasterxml.jackson.core.JsonToken._
+    val p = factory.createParser(body)
+    def link(field: String): Option[String] = p.currentToken match {
+      case VALUE_NULL => None
+      case START_OBJECT | START_ARRAY => throw new JsonParseException(p,
+        s"$field must be a string, found a JSON container")
+      case _ => Some(p.getText)
+    }
+    def count(): Option[Long] = p.currentToken match {
+      case VALUE_NUMBER_INT
+          if p.getNumberType != JsonParser.NumberType.BIG_INTEGER =>
+        Some(p.getLongValue)
+      case VALUE_NUMBER_FLOAT =>
+        val d = p.getDoubleValue
+        if (d >= Long.MinValue && d <= Long.MaxValue) Some(d.toLong) else None
+      case _ => p.skipChildren(); None
+    }
+    def elements(): Int = {
+      if (p.currentToken != START_ARRAY) { p.skipChildren(); return 0 }
+      var n = 0
+      while (p.nextToken() != END_ARRAY) { p.skipChildren(); n += 1 }
+      n
+    }
+    try {
+      var meta = PageMeta(None, None, 0, None)
+      if (p.nextToken() == START_OBJECT) {
+        while (p.nextToken() == FIELD_NAME) {
+          val field = p.currentName
+          p.nextToken()
+          field match {
+            case `nextLinkField` => meta = meta.copy(nextLink = link(field))
+            case `deltaLinkField` => meta = meta.copy(deltaLink = link(field))
+            case "@odata.count" => meta = meta.copy(count = count())
+            case "value" => meta = meta.copy(rows = elements())
+            case _ => p.skipChildren()
+          }
+        }
+      } else p.skipChildren()
+      meta
+    } finally p.close()
   }
 
   private val nextLinkField = "@odata.nextLink"
+  private val deltaLinkField = "@odata.deltaLink"
 }

@@ -63,6 +63,36 @@ class SourcesSpec extends SparkSpec {
       loop.orderBy("id").collect().toSeq)
   }
 
+  test("a mixed file-then-URL chain keeps page order; the URL run is one read") {
+    import graft.core.EntitySchemas
+    import graft.sources.v2.{LocalPageFetcher, PageFetcher}
+    import org.apache.spark.sql.catalyst.plans.logical.Union
+    val dir = Files.createTempDirectory("graft_mixed")
+    def rows(p: String) = (1 to 2).map(j =>
+      s"""{"id": "$p-r$j", "displayName": "CPC-$p-$j"}""").mkString(",")
+    Files.writeString(dir.resolve("f1.json"),
+      s"""{"value": [${rows("f1")}], "@odata.nextLink": "f2.json"}""")
+    Files.writeString(dir.resolve("f2.json"),
+      s"""{"value": [${rows("f2")}], "@odata.nextLink": "https://svc/u1"}""")
+    // remote pages served from memory: the walk retains their bodies
+    val remote = Map(
+      "https://svc/u1" -> s"""{"value": [${rows("u1")}], "@odata.nextLink": "u2"}""",
+      "https://svc/u2" -> s"""{"value": [${rows("u2")}], "@odata.nextLink": "u3"}""",
+      "https://svc/u3" -> s"""{"value": [${rows("u3")}]}""")
+    val fetcher = new PageFetcher {
+      private val local = new LocalPageFetcher
+      override def fetch(path: String): String =
+        remote.getOrElse(path, local.fetch(path))
+    }
+    val df = ODataPageReader.readPages(spark, dir.resolve("f1.json").toString,
+      EntitySchemas.cloudPcSource, fetcher = fetcher)
+    // two file reads + ONE read of the three URL bodies
+    assert(df.queryExecution.analyzed.collectLeaves().size == 3)
+    assert(df.queryExecution.analyzed.collect { case u: Union => u }.nonEmpty)
+    assert(df.select("id").collect().map(_.getString(0)).toSeq ==
+      Seq("f1", "f2", "u1", "u2", "u3").flatMap(p => Seq(s"$p-r1", s"$p-r2")))
+  }
+
   test("delta sync: tombstones flagged, deltaLink surfaced, applyDelta merges update/insert/delete") {
     import graft.core.EntitySchemas
     import graft.operators.Sinks

@@ -621,8 +621,9 @@ class ODataSourceSpec extends SparkSpec {
         |{"id":"a","os":"linux"},
         |{"id":"b","os":"mac","@removed":{"reason":"deleted"}}],
         |"@odata.nextLink":"page2"}""".stripMargin))
+    // a row's own link-shaped key is data, not the page's cursor
     server.createContext("/delta/page2", (ex: HttpExchange) => respond(ex,
-      """{"value":[{"id":"c","os":"linux"}],
+      """{"value":[{"id":"c","os":"linux","@odata.deltaLink":"row"}],
         |"@odata.deltaLink":"start?$deltatoken=t9"}""".stripMargin))
     server.start()
     try {
@@ -635,9 +636,9 @@ class ODataSourceSpec extends SparkSpec {
         maxRetries = 2, sleepMs = 0)
       val (changes, link) = ODataPageReader.readDeltaPages(spark,
         s"http://127.0.0.1:$port/delta/start", schema, fetcher = fetcher)
-      val byId = changes.collect()
-        .map(r => r.getString(0) -> r.getBoolean(2)).toMap
-      assert(byId == Map("a" -> false, "b" -> true, "c" -> false))
+      // rows in page order, tombstones flagged
+      assert(changes.collect().map(r => r.getString(0) -> r.getBoolean(2))
+        .toSeq == Seq("a" -> false, "b" -> true, "c" -> false))
       // the persisted cursor came back absolute, resolved against page2
       assert(link.contains(
         s"http://127.0.0.1:$port/delta/start?$$deltatoken=t9"))
@@ -1094,6 +1095,148 @@ class ODataSourceSpec extends SparkSpec {
       if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(e).exists(m => m.contains("delta=true") ||
       m.toLowerCase.contains("does not support")), e.toString)
+  }
+
+  // ------------------------------------------------ one plan per chain
+
+  /** Loopback stub serving `pages` (path → body); `throttleOnce` paths
+    * answer 429 to their first request. Records every exchange's
+    * (path, client port) so a test can see which connection carried it. */
+  private def withStub[T](pages: Map[String, String],
+      throttleOnce: Set[String] = Set.empty)
+      (body: (String, java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]) => T): T = {
+    import com.sun.net.httpserver.{HttpExchange, HttpServer}
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val throttled = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val server = HttpServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/", (ex: HttpExchange) => try {
+      val path = ex.getRequestURI.getPath
+      seen.add(path -> ex.getRemoteAddress.getPort)
+      // Graph's throttle answer carries a JSON error body, which a
+      // client must drain to keep the connection
+      val (code, text) =
+        if (throttleOnce(path) && throttled.add(path))
+          429 -> """{"error":{"code":"TooManyRequests"}}"""
+        else 200 -> pages(path)
+      val b = text.getBytes("UTF-8")
+      ex.sendResponseHeaders(code, b.length)
+      ex.getResponseBody.write(b)
+    } finally ex.close())
+    server.start()
+    try body(s"http://127.0.0.1:${server.getAddress.getPort}", seen)
+    finally server.stop(0)
+  }
+
+  private val idOsSchema = new org.apache.spark.sql.types.StructType()
+    .add("id", org.apache.spark.sql.types.StringType)
+    .add("os", org.apache.spark.sql.types.StringType)
+
+  private def httpFetcher =
+    new RetryingPageFetcher(new HttpPageFetcher(None), maxRetries = 2,
+      sleepMs = 0)
+
+  test("a URL chain parses in one plan: one local relation, no Union, page order kept") {
+    import org.apache.spark.sql.catalyst.plans.logical.Union
+    import org.apache.spark.sql.execution.LogicalRDD
+    val n = 5
+    val pages = (1 to n).map { i =>
+      val rows = (1 to 3).map(j => s"""{"id":"p$i-r$j","os":"linux"}""")
+      val next = if (i < n) s""","@odata.nextLink":"p${i + 1}"""" else ""
+      s"/chain/p$i" -> s"""{"value":[${rows.mkString(",")}]$next}"""
+    }.toMap
+    withStub(pages) { (base, _) =>
+      val df = ODataPageReader.readPages(spark, s"$base/chain/p1",
+        idOsSchema, fetcher = httpFetcher)
+      val plan = df.queryExecution.analyzed
+      assert(plan.collect { case u: Union => u }.isEmpty, plan.treeString)
+      // the single leaf is the one read.json of all bodies; its input
+      // is ONE local relation (a single parallelized collection)
+      val leaves = plan.collectLeaves()
+      assert(leaves.size == 1, plan.treeString)
+      def lineage(r: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.rdd.RDD[_]] =
+        r +: r.dependencies.flatMap(d => lineage(d.rdd))
+      val roots = lineage(leaves.head.asInstanceOf[LogicalRDD].rdd)
+        .filter(_.dependencies.isEmpty)
+      assert(roots.map(_.getClass.getSimpleName) ==
+        Seq("ParallelCollectionRDD"))
+      val ids = df.select("id").collect().map(_.getString(0)).toSeq
+      assert(ids == (1 to n).flatMap(i => (1 to 3).map(j => s"p$i-r$j")))
+    }
+  }
+
+  test("HTTP fetches reuse one keep-alive connection, across a 429 retry too") {
+    val pages = Map(
+      "/ka/p1" -> """{"value":[{"id":"a"}],"@odata.nextLink":"p2"}""",
+      "/ka/p2" -> """{"value":[{"id":"b"}],"@odata.nextLink":"p3"}""",
+      "/ka/p3" -> """{"value":[{"id":"c"}]}""")
+    withStub(pages, throttleOnce = Set("/ka/p2")) { (base, seen) =>
+      val df = ODataPageReader.readPages(spark, s"$base/ka/p1", idOsSchema,
+        fetcher = httpFetcher)
+      assert(df.select("id").collect().map(_.getString(0)).toSeq ==
+        Seq("a", "b", "c"))
+      val exchanges = seen.asScala.toSeq
+      // p2 was throttled once, retried, and answered
+      assert(exchanges.map(_._1) ==
+        Seq("/ka/p1", "/ka/p2", "/ka/p2", "/ka/p3"))
+      assert(exchanges.map(_._2).distinct.size == 1,
+        s"expected one connection, saw client ports $exchanges")
+    }
+  }
+
+  test("cursor scan reads root-level keys only, in one pass, as readTree would") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def viaTree(body: String): (Option[String], Option[String], Int, Option[Long]) = {
+      val root = mapper.readTree(body)
+      def l(f: String) = Option(root.get(f)).filter(!_.isNull).map(_.asText())
+      val v = root.get("value")
+      val c = Option(root.get("@odata.count")).filter(_.canConvertToLong)
+      (l("@odata.nextLink"), l("@odata.deltaLink"),
+        if (v != null && v.isArray) v.size else 0, c.map(_.asLong()))
+    }
+    val cases = Seq(
+      // nextLink ahead of value
+      """{"@odata.nextLink":"https://g/p2","value":[{"id":"a"},{"id":"b"}]}""",
+      // a row's own nextLink is not the page's
+      """{"value":[{"id":"a","@odata.nextLink":"https://g/row"}]}""",
+      // nested non-cursor objects are skipped whole
+      """{"meta":{"@odata.nextLink":"https://g/x","value":[1,2]},"value":[]}""",
+      // an explicit null link is no link
+      """{"value":[{"id":"a"}],"@odata.nextLink":null,"@odata.deltaLink":"https://g/d"}""",
+      // duplicate root keys: the last wins, also when it is null
+      """{"@odata.nextLink":"https://g/a","value":[1],"@odata.nextLink":"https://g/b","value":[1,2,3]}""",
+      """{"@odata.nextLink":"https://g/a","@odata.nextLink":null}""",
+      // the inline count: numbers only
+      """{"@odata.count":42,"value":[[1],{"x":[2]}]}""",
+      """{"@odata.count":"42","value":{"id":"not-an-array"}}""",
+      """[{"@odata.nextLink":"https://g/top-level-array"}]""")
+    for (b <- cases) {
+      val m = PageCursor.pageMeta(b, "https://g/p1")
+      assert((m.nextLink, m.deltaLink, m.rows, m.count) == viaTree(b), b)
+      assert(PageCursor.inlineCount(b) == viaTree(b)._4, b)
+    }
+    assert(PageCursor.pageMeta(cases.head, "https://g/p1").nextLink
+      .contains("https://g/p2"))
+    assert(PageCursor.pageMeta(cases(4), "https://g/p1").rows == 3)
+  }
+
+  test("a truncated page, or a link that is not a scalar, throws from the cursor scan and from readPages") {
+    import com.fasterxml.jackson.core.JsonProcessingException
+    for (b <- Seq("""{"value":[{"id":"a"},{"id":""",
+        """{"value":[{"id":"a"}]""",
+        """{"value":[{"id":"a"}],"@odata.nextLink":"p2"""",
+        """{"value":[{"id":"a","nested":{"x":[1,""",
+        """{"value":[],"@odata.nextLink":{"href":"p2"}}""")) {
+      intercept[JsonProcessingException](PageCursor.pageMeta(b, "p1.json"))
+      intercept[JsonProcessingException](PageCursor.inlineCount(b))
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_torn")
+    java.nio.file.Files.writeString(dir.resolve("p1.json"),
+      """{"value":[{"id":"a"}],"@odata.nextLink":"p2.json"}""")
+    java.nio.file.Files.writeString(dir.resolve("p2.json"),
+      """{"value":[{"id":"b"},{"id":""")
+    intercept[JsonProcessingException](ODataPageReader.readPages(spark,
+      dir.resolve("p1.json").toString, idOsSchema))
   }
 
   test("utf8Length counts real encoded bytes: multi-byte and surrogate pairs") {
