@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.ListenerBusBridge
 
 /** Benchmark entry: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query seconds. */
@@ -96,8 +97,8 @@ object Bench {
     // wall >> task time identifies the fixed driver/planning overhead
     // that no core count changes (why sf0.1 wall cannot scale), while
     // genuinely data-bound queries show task time ≈ cores × wall.
-    // Listener delivery is async; the per-query attribution can skew
-    // by the few ms of queue drain — harmless for a scaling signal.
+    // Listener delivery is async, so the listener bus is drained
+    // before each read of the sum, outside the timed region.
     val sessionJson = sessionFields(cpus, spark.sparkContext.master,
       spark.conf.get("spark.sql.shuffle.partitions"))
     val taskTimeMs = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -139,11 +140,13 @@ object Bench {
     // advice). taskSec is the listener-summed executor task time
     // attributed to this query (r18 verdict #2 — the scaling signal).
     def timeQuery(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean, Double) = {
+      ListenerBusBridge.drain(spark.sparkContext) // e.g. calibrateIo's tasks
       val tt0 = taskTimeMs.get()
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true }
                catch { case _: Throwable => false }
       val dt = (System.nanoTime() - t0) / 1e9
+      ListenerBusBridge.drain(spark.sparkContext)
       // drop per-query caches so later queries aren't taxed by
       // accumulated executor memory pressure
       spark.catalog.clearCache()

@@ -252,7 +252,8 @@ object Dedup {
     // is exclusively stop-shingles — default OFF to stay oracle-exact.
     // The cap helps ONLY when signal df and noise df are separable:
     // sized above the corpus's background df and below the hot-clique
-    // df it is meant to cut (SKEW_PROBE_r9: cap 500 vs background 148
+    // df it is meant to cut (round-9 skew probe, in git history:
+    // cap 500 vs background 148
     // vs clique 5000 drops exactly the clique). A cap below background
     // silently prunes every pair (the retracted round-8 "df50 flat"
     // cell); against high-df BACKGROUND the exact path stays Σdf² and
@@ -291,7 +292,8 @@ object Dedup {
     * re-scanned, so it is not cached.)
     *
     * `maxDocFreq` is the same bounded-join escape hatch as
-    * [[ngramJaccardPairs]]' (Scale10Probe: this family's Σdf² term is
+    * [[ngramJaccardPairs]]' (the 10× scale probe, in git history: this
+    * family's Σdf² term is
     * the one super-linear cost in the shipped operator set): shingles
     * present in more than `cap` documents are dropped from the INDEX
     * while denominators keep full set sizes, so reported containment
@@ -325,67 +327,6 @@ object Dedup {
       .filter(col("containment") >= threshold)
   }
 
-  /** Exact n-gram Jaccard pairs with PREFIX FILTERING — the classic
-    * lossless candidate reduction for set-similarity joins: two sets
-    * with Jaccard ≥ t MUST share a token inside each set's prefix of
-    * its (|s| − ceil(t·|s|) + 1) rarest tokens under one global token
-    * order (here (document frequency, token) — pigeonhole: missing
-    * every prefix token caps the possible overlap below t). Candidates
-    * are enumerated from prefix tokens only and then verified with the
-    * exact full-set intersection, so the answer is IDENTICAL to
-    * [[ngramJaccardPairs]] (DedupSpec pins pair sets AND scores).
-    *
-    * When it helps: corpora whose candidate blow-up comes from
-    * ubiquitous BOILERPLATE shingles (high df, low signal) — those
-    * land in almost no document's prefix, so candidate volume tracks
-    * rarity-weighted similarity. This is the exactness-preserving
-    * counterpart to the lossy `maxDocFreq` cap.
-    *
-    * MEASURED NEGATIVE RESULT on this corpus (tools.JaccardProbe,
-    * sf0.1, equal input warmth per op): 6.8s vs the plain index's
-    * 3.3s at 1×, 292s vs 22s at 10× wholesale duplication — exact
-    * copies share their ENTIRE prefix (no pruning), and the fixture's
-    * shingles are already rare, so the extra df/rank/verify passes
-    * never pay for themselves. Kept as the documented alternative for
-    * boilerplate-dominated corpora; MinHash-LSH (d03/d07) remains the
-    * at-scale dedup path here.
-    *
-    * Caching contract: the shingle frame feeds sizes, the df count,
-    * the prefix, and the verification joins — cached like the other
-    * pair producers (callers `clearCache()` between corpora). */
-  def ngramJaccardPairsPrefix(docs: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, threshold: Double = 0.5): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      "threshold must be in (0, 1] — prefix filtering needs a positive bound")
-    import org.apache.spark.sql.expressions.Window
-    val shs = withShingles(docs, idCol, textCol, n).cache()
-    val tok = shs
-      .select(col(idCol), size(col("sh")).as("n_sh"), explode(col("sh")).as("s"))
-    val dfreq = tok.groupBy("s").agg(count(lit(1)).as("df"))
-    val prefix = tok.join(dfreq, "s")
-      .withColumn("_pf_rn", row_number().over(
-        Window.partitionBy(col(idCol)).orderBy(col("df"), col("s"))))
-      .filter(col("_pf_rn") <=
-        col("n_sh") - ceil(lit(threshold) * col("n_sh")) + lit(1))
-    val cand = prefix.as("a").join(prefix.as("b"),
-        col("a.s") === col("b.s") && col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("a_id"), col(s"b.$idCol").as("b_id"))
-      .distinct()
-    val aTok = tok.select(col(idCol).as("a_id"), col("s"))
-    val bTok = tok.select(col(idCol).as("b_id"), col("s"))
-    // sizes come from the pre-explode frame — one row per doc already,
-    // no distinct() shuffle over the exploded token table
-    val sizes = shs.select(col(idCol), size(col("sh")).as("n_sh"))
-    cand.join(aTok, Seq("a_id")).join(bTok, Seq("b_id", "s"))
-      .groupBy("a_id", "b_id").agg(count(lit(1)).as("inter"))
-      .join(sizes.select(col(idCol).as("a_id"), col("n_sh").as("na")), "a_id")
-      .join(sizes.select(col(idCol).as("b_id"), col("n_sh").as("nb")), "b_id")
-      .withColumn("jaccard",
-        col("inter") / (col("na") + col("nb") - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select("a_id", "b_id", "jaccard")
-  }
-
   /** MinHash signature: k independent 64-bit hashes (xxhash64 seeded by
     * slot index), each the min over the document's shingles.
     * `sh` must be the shingles' 64-bit hashes (`array<long>`) — hashing
@@ -405,12 +346,11 @@ object Dedup {
 
   /** The ONE rendering of the LSH banding: explode a signature frame
     * into `(…, band, bhash)` rows, band hash = xxhash64 over the
-    * band's slice of the signature. Shared by [[minhashLshPairs]],
-    * [[minhashLshPairsFromIndexes]], and `tools.LshBucketProbe` — the
-    * probe's bucket-distribution measurements are, by construction,
-    * of the same banding the production join uses. `carryCols` ride
+    * band's slice of the signature. Shared by [[minhashLshPairs]] and
+    * [[minhashLshPairsFromIndexes]] (the round-5 LSH bucket probe, in
+    * git history, measured this same banding). `carryCols` ride
     * through unchanged. */
-  private[graft] def bandedOf(sigs: DataFrame, idCol: String,
+  private def bandedOf(sigs: DataFrame, idCol: String,
       bands: Int, rows: Int, carryCols: Seq[String] = Nil): DataFrame = {
     val cols = col(idCol) +: carryCols.map(col)
     sigs.select(cols :+ posexplode(array(

@@ -385,7 +385,8 @@ case class PqAdc(left: Expression, right: Expression,
   * first-min ties). The declarative formulation builds m·k
   * aggregate(zip_with(...)) subtrees — several hundred Catalyst nodes
   * whose janino compilation dominated s10's wall time at every corpus
-  * size (Scale10Probe: factor 1.0 at 10× rows = all fixed cost). The
+  * size (the 10× scale probe, in git history: factor 1.0 at 10× rows
+  * = all fixed cost). The
   * kernel is one node; the int codebook rides as a reference object and
   * the generated code is identical across (m, k) VALUES of the same
   * shape, so the codegen cache hits. */

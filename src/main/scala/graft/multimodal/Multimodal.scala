@@ -504,30 +504,6 @@ object Multimodal {
     * embeds the same literal, as oracles do). */
   val EditedIdOffset: Long = 10000000L
 
-  /** Probe fixture (SkewProbe, round 11): the PNG corpus with every
-    * `cliqueEvery`-th image replaced by ONE byte-identical image
-    * (rendered from `cliqueSrc`'s pixel function and dimensions) — the
-    * mass-duplicate IMAGE clique (re-hosted thumbnails, default
-    * avatars, tracking pixels) whose identical signatures meet in
-    * every 16-bit chunk bucket of the hamming join; the shape
-    * [[graft.dedup.Dedup.hammingPairsFromSignatures]]' `maxBucketSize`
-    * guard exists for. Clique members keep their own media_id. */
-  def pngWithClique(spark: SparkSession, sfDir: String,
-      cliqueEvery: Int = 10, cliqueSrc: Long = 42L): Dataset[MediaRecord] = {
-    import spark.implicits._
-    graft.core.Tables.documents(spark, sfDir)
-      .select(col("doc_id")).as[Long]
-      .transform(spreadForCodec)
-      .mapPartitions { ids =>
-        ids.map { id =>
-          if (id % cliqueEvery == 0)
-            pngRecord(cliqueSrc, id, s"mem://png-clique/$id",
-              pngPixel(cliqueSrc))
-          else pngRecord(id, id, s"mem://png/$id", pngPixel(id))
-        }
-      }
-  }
-
   /** Deterministic WAV fixture table: each document id becomes a REAL
     * mono-PCM16 WAV whose samples are a closed-form function of
     * (id, i) — the audio analog of [[pngFromDocuments]]: the engine

@@ -33,9 +33,9 @@ import graft.functions.{KllFunctions, KllKernel, ThetaFunctions, ThetaKernel}
   * pass over the layout; the skip decision collects ONLY stats rows.
   * This is the engine-level analog of parquet footer min/max pruning,
   * lifted to whole partitions and enriched with sketch semantics
-  * min/max cannot express (membership, rank). Probe artifact:
-  * tools.PartitionProbe (files_read with value/user skipping vs the
-  * full layout).
+  * min/max cannot express (membership, rank). DataSkippingSpec pins
+  * it; the round-10 partition probe (in git history) read 15 of 30
+  * files for the value skip and 21–22 of 30 for the user skip.
   */
 object DataSkipping {
 

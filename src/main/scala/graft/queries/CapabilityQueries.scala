@@ -1382,7 +1382,8 @@ object CapabilityQueries {
     * (the price of a transparent, multiplicity-preserving rewrite;
     * d02's aggregation form is the narrow-shuffle path when the
     * OUTPUT can be pair counts), so the demo stays result-size-bound,
-    * not payload-bound (probe: tools.OverlapProbe). */
+    * not payload-bound (measured by the overlap probe, now in git
+    * history). */
   def q54OverlapJoinAuto(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
       .filter(col("doc_id") % 5 === 0)

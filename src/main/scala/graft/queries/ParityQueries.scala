@@ -612,9 +612,10 @@ object ParityQueries {
     * scan through the stats-pruned read (partitions whose exact max
     * is below the bar are never listed — at this corpus roughly half
     * skip). The oracle filters the flat events table relationally, so
-    * the hash-match proves skipping loses no row; DataSkippingSpec +
-    * PartitionProbe pin the files-read reduction and the membership
-    * rule's soundness. */
+    * the hash-match proves skipping loses no row; DataSkippingSpec
+    * pins the files-read reduction and the membership rule's
+    * soundness (the round-10 partition probe, in git history, read
+    * 15 of 30 files). */
   def p15(s: SparkSession, d: String): DataFrame = {
     val base = tempDirCleanedOnExit("graft_p15")
     val layout = base.resolve("events_by_day").toString

@@ -1796,8 +1796,9 @@ object TrainingQueries {
     * brings in batches 2–3 — and the served answer must be
     * bit-identical to serving the raw tree (s13's oracle), because
     * a publish, full or incremental, is a pure relayout.
-    * tools.IngestProbe's publish cell pins the cost claim: delta
-    * fold wall scales with the delta, not the corpus. */
+    * The ingest probe's publish cell (rounds 14–18, in git history)
+    * measured the cost claim: delta fold wall scales with the delta,
+    * not the corpus. */
   def s16IncrementalPublish(s: SparkSession, d: String): DataFrame = {
     val (idx, cen) = sharedIvfIngest(s, d)
     val pub = tempDirCleanedOnExit("graft_s16").resolve("serving").toString
@@ -1976,8 +1977,8 @@ object TrainingQueries {
     * update `pu`/`pc`, `iters` times), then codes/dtab JOIN the
     * trained `pc{iters}` instead of embedding a literal table.
     * Parameterized over the serve tuning knobs so s20's TUNED point
-    * (iters=5, shortlist=100 — the committed IngestProbe sweep's
-    * pick) re-derives through the identical machinery, and over the
+    * (iters=5, shortlist=100 — the round-14 ingest probe sweep's
+    * pick, in git history) re-derives through the identical machinery, and over the
     * CAPACITY knobs (`k` codes per subspace; `cellsExpr`/`nprobeExpr`
     * as SQL expressions over an optional `cap` CTE) so s21's
     * corpus-scaled point re-derives through it too, and over the
@@ -2129,8 +2130,8 @@ object TrainingQueries {
     * re-measure the committed sweep. */
   private val s20GatePermille = 350
 
-  /** s20: the TUNED PQ serving point — the committed IngestProbe
-    * sweep (`pq_sweep`/`pq_nprobe`, r14) showed recall@5 0.424 at
+  /** s20: the TUNED PQ serving point — the ingest probe's sweep
+    * (`pq_sweep`/`pq_nprobe`, r14, in git history) showed recall@5 0.424 at
     * shortlist=100/iters=5 for LESS serve wall than the shipped
     * 0.200 point (shortlist=20/iters=2), so this query ADOPTS that
     * operating point end to end (train iters=5 on batch-0 residuals,
@@ -3444,7 +3445,8 @@ object TrainingQueries {
     * bit-reproduced.
     *
     * The shipped path runs with the hot-bucket cap ON
-    * (`maxBucketSize = 256`, the SKEW_PROBE-selected setting: at the
+    * (`maxBucketSize = 256`, the setting the round-11 skew probe
+    * selected — in git history: at the
     * 10× corpus the uncapped join emits 178M collision pairs in
     * 37.7 s vs 1.4M in 3.2 s capped — the 100 TB default must be the
     * capped one), and the oracle applies the IDENTICAL rule: a

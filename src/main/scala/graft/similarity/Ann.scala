@@ -22,7 +22,8 @@ object Ann {
   /** The CAPACITY RULE for an IVF serving index: model size must grow
     * with the corpus or recall decays (measured: s20's recall@5 fell
     * 0.532 → 0.380 when the corpus grew 4× at fixed cells=8/nprobe=2 —
-    * and the round-16 CapacityProbe sweep shows that loss is mostly
+    * and the round-16 capacity sweep (CAPACITY_r16.json; the probe
+    * lives in git history) shows that loss is mostly
     * PROBE loss: the exact-within-probed-cells ceiling at that point
     * is 0.444, so no codebook can rescue a fixed probe under a grown
     * corpus). The rule, each clause pinned by a sweep axis:
@@ -99,8 +100,10 @@ object Ann {
     * more nprobe is NOT evidence-backed past that point (coding loss,
     * not probe loss, binds); the caller must change the capacity
     * family (more PQ codes, larger shortlist, exact rerank width)
-    * rather than silently over-probing. Gated by a CAPACITY_r17
-    * `recall_target` cell at a non-default target. */
+    * rather than silently over-probing. Measured at a non-default
+    * target by the round-17 capacity probe (in git history): target
+    * 0.55 picks the 1/2-fraction point and recall clears it at every
+    * SF (0.728 / 0.736 / 0.588). */
   def nprobeForRecall(n: Long, target: Double): Option[IvfCapacity] = {
     require(target > 0 && target <= 1, "target must be in (0, 1]")
     val cells = ivfCapacityForCorpus(n).cells
@@ -700,7 +703,8 @@ object Ann {
     * Native kernel ([[graft.functions.PortablePqEncode]]): the
     * declarative witness below builds m·k aggregate/zip_with subtrees
     * whose codegen compilation was s10's dominant FIXED cost
-    * (Scale10Probe measured factor ~1.0 at 10× rows); the kernel is
+    * (the 10× scale probe, in git history, measured factor ~1.0 at
+    * 10× rows); the kernel is
     * one Catalyst node, same bits (spec cross-checks on real
     * embeddings). */
   def portablePqEncode(vec: Column, dim: Int, m: Int, k: Int): Column = {

@@ -1364,9 +1364,9 @@ object AnnStream {
     * partition (pruned — training never rescans the corpus);
     * per-iteration work is one scan of that slice
     * ([[graft.similarity.Ann.portablePqTrainCodebooks]]). The default
-    * `iters = 5` is the committed IngestProbe sweep's operating point
-    * (recall@5 0.424 vs 0.200 at iters=2/shortlist=20, for less serve
-    * wall) — s20 gates it. */
+    * `iters = 5` is the operating point of the round-14 ingest probe's
+    * PQ sweep (recall@5 0.424 vs 0.200 at iters=2/shortlist=20, for
+    * less serve wall; the probe lives in git history) — s20 gates it. */
   def trainPqCodebook(spark: SparkSession, indexPath: String,
       centroidsPath: String, m: Int, k: Int, iters: Int = 5,
       salt: String = "pqres"): Seq[Seq[Seq[Long]]] = {
@@ -1517,10 +1517,11 @@ object AnnStream {
     * end with ties to the lower id, so the full pipeline — probe
     * order, codes, ADC sums, shortlist, final ranks — is
     * bit-reproducible (s17's oracle re-derives it in DuckDB). The
-    * `nprobe = 2, shortlist = 100` defaults are the committed
-    * IngestProbe sweep's operating point (s20 gates its recall);
-    * spend nprobe for more recall once shortlist saturates —
-    * the sweep's `pq_nprobe` axis prices that path. */
+    * `nprobe = 2, shortlist = 100` defaults are the operating point
+    * of the round-14 ingest probe's PQ sweep (s20 gates its recall;
+    * the probe lives in git history); spend nprobe for more recall
+    * once shortlist saturates — the sweep's `pq_nprobe` axis priced
+    * that path. */
   def pqServeTopK(spark: SparkSession, codedPath: String,
       centroidsPath: String, vectors: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, m: Int, k: Int, nprobe: Int = 2,

@@ -221,7 +221,7 @@ object DedupStream {
     * zero writer changes and zero staleness invariants).
     *
     * Cost discipline, each clause measured by the retire_probe cells
-    * in INGEST_PROBE_r16:
+    * of the round-16 ingest probe (in git history):
     *  - the retire ids collect to the driver under a bounded limit
     *    (erasure requests are requester-sized — the [[driverLosers]]
     *    eligibility rule; past the limit or for non-integral id types
@@ -299,7 +299,8 @@ object DedupStream {
     * opened; dirs without one keep the footer walk. This is what makes
     * proving absence O(dirs) instead of O(files) on maintained trees,
     * and the mod-sliced worst case ~the ranged case
-    * (INGEST_PROBE_r17 manifest cells). */
+    * (round-17 ingest probe, in git history: mod600 2.55 s → 0.66 s,
+    * ranged600 1.12 s → 0.61 s). */
   private[streaming] def footerCandidateParts(spark: SparkSession,
       treePath: String, prefix: String, idCol: String,
       partFilter: Long => Boolean, idsOpt: Option[Array[Long]] = None)
@@ -412,7 +413,8 @@ object DedupStream {
     * counts with the same zero-staleness property as their min/max
     * stats (they travel with the data files), and the pooled walk is
     * the same near-flat metadata cost the retire probe measured
-    * (INGEST_PROBE_r16: 0.46 s at 60 dirs → 0.92 s at 600). Counts
+    * (round-16 ingest probe, in git history: 0.46 s at 60 dirs →
+    * 0.92 s at 600). Counts
     * only `<prefix>` partition directories, so maintenance staging
     * debris beside them never counts. */
   private[streaming] def footerRowCount(spark: SparkSession,
@@ -1058,7 +1060,7 @@ object DedupStream {
     *    (AFTER the batch commits its writes — the N-1 bound rule).
     *
     * Returns the `(batch, batchId) => Unit` body for `foreachBatch`.
-    * The AqeCheck spec (DedupStreamSpec) pins this helper itself, so
+    * DedupStreamSpec's adaptive-plan spec pins this helper itself, so
     * every wrapper built through it inherits the pinned behavior. */
   private[streaming] def ingestBody(parent: SparkSession,
       retireQueue: Option[String] = None,
@@ -1373,7 +1375,7 @@ object DedupStream {
     * clone's forced disable, not to override a user who deliberately
     * turned AQE off globally — shipped wrappers capture the parent's
     * value at stream-build time through [[ingestBody]]; the `true`
-    * default serves direct diagnostic callers (tools.AqeCheck, specs)
+    * default serves direct callers (ParityQueries' foreachBatch body)
     * where the parent is known to run the engine default. */
   private[graft] def restoreAqe(batch: DataFrame,
       parentAdaptive: Boolean = true): Unit = {

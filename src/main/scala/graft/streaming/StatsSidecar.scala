@@ -21,8 +21,9 @@ import org.apache.spark.sql.types.LongType
   * Underscore-prefixed files are invisible to parquet reads, so the
   * data path is unchanged.
   *
-  * WHAT it buys (INGEST_PROBE_r17 `retire_probe_scaling` manifest
-  * cells): the footer walk's two documented blind spots close —
+  * WHAT it buys (round-17 ingest probe, `retire_probe_scaling` cells,
+  * in git history: mod600 2.55 s → 0.66 s with the sidecar): the
+  * footer walk's two documented blind spots close —
   * proving a dir ABSENT becomes one small read instead of opening
   * every footer (O(dirs) reads instead of O(files)), and HASHED id
   * layouts, where every dir spans the full id range and min/max prunes

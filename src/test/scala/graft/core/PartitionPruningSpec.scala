@@ -8,8 +8,9 @@ import org.apache.spark.sql.execution.FileSourceScanExec
   * a day-filtered query over the date-partitioned layout must PLAN
   * partition filters and READ strictly fewer files than the layout
   * holds — and return exactly the rows the flat table's
-  * `to_date(ts)` filter returns. Probe artifact with per-SF file
-  * counts: tools.PartitionProbe → PARTITION_PROBE_r9.json. */
+  * `to_date(ts)` filter returns. The round-9 partition probe this
+  * spec replaces (in git history) read 1 of 30 files at sf0.01 and
+  * sf0.1. */
 class PartitionPruningSpec extends SparkSpec {
 
   test("date-partitioned events: day filter prunes directories and agrees with the flat path") {

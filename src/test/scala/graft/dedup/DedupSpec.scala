@@ -155,19 +155,6 @@ class DedupSpec extends SparkSpec {
     assert(out == Map(2L -> 2L, 9L -> 1L))
   }
 
-  test("prefix filtering is lossless: identical pairs AND jaccard values") {
-    val docs = Tables.documents(spark, sf)
-    def asSet(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val plain = asSet(Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-      n = 3, threshold = 0.5))
-    val prefixed = asSet(Dedup.ngramJaccardPairsPrefix(docs, "doc_id", "text",
-      n = 3, threshold = 0.5))
-    assert(prefixed == plain)
-    assert(plain.nonEmpty)
-    spark.catalog.clearCache()
-  }
-
   test("span dedup: first corpus-wide occurrence survives, docs reassemble in order") {
     val ten = "a b c d e f g h i j"       // one full window
     val other = "k l m n o p q r s t"
