@@ -186,20 +186,14 @@ object Sinks {
     * tombstone contract); absent, every change row is an upsert.
     * Assumes ≤ one change per id per call (the OData delta contract).
     *
-    * Crash safety mirrors [[overwriteViaSwap]], scoped to buckets:
-    * the merged buckets materialize under `_next`, live bucket dirs
-    * are set aside under `_old`, staged dirs promote, `_old` drops
-    * last — a complete copy of every bucket exists on disk at every
-    * instant; `_next` doubles as the commit marker (it drops first,
-    * mandatorily, so leftover `_old` without `_next` is completed-
-    * merge debris, never rolled back). A call interrupted mid-swap is
-    * repaired on the NEXT call's entry ([[repairBuckets]]: promote a
-    * staged copy where one exists, roll the set-aside copy back
-    * otherwise), after which a
+    * The merged buckets commit through [[commitPartitions]] (a bucket
+    * whose every row was tombstoned is dropped); a call interrupted
+    * mid-commit is repaired on the NEXT call's entry, after which a
     * replay of the same change set lands the identical state — the
     * same replay-the-uncommitted-delta contract as
     * [[graft.pipeline.IncrementalSync]] (the cursor only advances
-    * after a completed merge).
+    * after a completed merge). A merge that empties every bucket
+    * leaves the path absent, the store's canonical empty form.
     *
     * The store records its bucket count in a `_graft_buckets` file
     * (underscore-prefixed → invisible to parquet reads); a later call
@@ -215,7 +209,7 @@ object Sinks {
       df.withColumn("bucket", pmod(xxhash64(col(idCol)), lit(buckets.toLong)))
     val upserts = if (hasRemoved) changes.filter(!col("removed")).drop("removed")
       else changes
-    if (fs.exists(hPath)) repairBuckets(fs, path)
+    repairPartitions(spark, path)
     if (!fs.exists(hPath) || !hasBucketDirs(fs, hPath)) {
       // absent store, or an empty shell left by a merge that
       // tombstoned every bucket: recreate from scratch. An
@@ -252,36 +246,11 @@ object Sinks {
       val existing = spark.read.parquet(path)
         .filter(col("bucket").isin(touched: _*)) // partition-pruned scan
       val changedIds = ch.select(col(idCol))
-      val merged = existing.join(changedIds, Seq(idCol), "left_anti")
+      existing.join(changedIds, Seq(idCol), "left_anti")
         .unionByName(withBucket(upserts))
-      val next = new org.apache.hadoop.fs.Path(path + "_next")
-      val old = new org.apache.hadoop.fs.Path(path + "_old")
-      merged.write.mode(SaveMode.Overwrite).partitionBy("bucket")
-        .parquet(next.toString)
-      if (fs.exists(old) && !fs.delete(old, true))
-        throw new java.io.IOException(s"upsert: cannot clear $old")
-      if (!fs.mkdirs(old))
-        throw new java.io.IOException(s"upsert: cannot stage $old")
-      touched.foreach { b =>
-        val live = new org.apache.hadoop.fs.Path(path, s"bucket=$b")
-        val staged = new org.apache.hadoop.fs.Path(next, s"bucket=$b")
-        if (fs.exists(live) &&
-            !fs.rename(live, new org.apache.hadoop.fs.Path(old, s"bucket=$b")))
-          throw new java.io.IOException(s"upsert: cannot set aside $live")
-        // a bucket can vanish entirely (all rows tombstoned): staged
-        // dir absent is a valid outcome, the set-aside already removed it
-        if (fs.exists(staged) && !fs.rename(staged, live))
-          throw new java.io.IOException(s"upsert: cannot promote $staged")
-      }
-      // `_next` is the commit marker: it drops FIRST, and mandatorily —
-      // repairBuckets rolls a set-aside bucket back only while `_next`
-      // still exists, so "_old without _next" unambiguously means a
-      // COMPLETED merge whose debris must never be rolled back (a
-      // rollback there would resurrect buckets the merge legitimately
-      // emptied, after the caller's cursor advanced)
-      if (!fs.delete(next, true))
-        throw new java.io.IOException(s"upsert: cannot clear $next")
-      fs.delete(old, true) // best-effort; repair clears completed debris
+        .write.mode(SaveMode.Overwrite).partitionBy("bucket")
+        .parquet(partitionStage(path))
+      commitPartitions(spark, path, touched.map(b => s"bucket=$b"))
       // a merge that tombstoned every bucket leaves an empty shell:
       // drop it so the store's empty form is "path absent", keeping
       // every future read and upsert on the defined entry paths
@@ -321,48 +290,98 @@ object Sinks {
     }
   }
 
-  /** Restore a [[bucketedUpsert]] interrupted mid-swap to a per-bucket
-    * consistent state: every bucket set aside under `_old` but missing
-    * live gets its staged `_next` copy promoted (completing that
-    * bucket's swap) or, when no staged copy exists, its `_old` copy
-    * rolled back; staging debris then drops. Each bucket ends fully
-    * pre- or fully post-merge — either way a replay of the interrupted
-    * change set (the caller's contract) converges to the committed
-    * state, because the merge is idempotent per key. */
-  private def repairBuckets(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Unit = {
-    val next = new org.apache.hadoop.fs.Path(path + "_next")
-    val old = new org.apache.hadoop.fs.Path(path + "_old")
-    // `_next` still on disk = the interrupted call never reached its
-    // commit point (the merge deletes `_next` first, mandatorily).
-    // `_old` WITHOUT `_next` = debris of a COMPLETED merge whose
-    // best-effort cleanup failed: restoring from it would resurrect
-    // buckets that merge legitimately emptied — only delete it.
-    val midSwap = fs.exists(next)
-    if (fs.exists(old)) {
-      if (midSwap) {
-        fs.listStatus(old).filter(s => s.isDirectory &&
-            s.getPath.getName.startsWith("bucket=")).foreach { s =>
-          val live = new org.apache.hadoop.fs.Path(path, s.getPath.getName)
-          if (!fs.exists(live)) {
-            val staged = new org.apache.hadoop.fs.Path(next, s.getPath.getName)
-            val src = if (fs.exists(staged)) staged else s.getPath
-            if (!fs.rename(src, live))
-              throw new java.io.IOException(s"upsert repair: cannot restore $live")
-          }
-        }
-      }
-      if (!fs.delete(old, true))
-        throw new java.io.IOException(s"upsert repair: cannot clear $old")
-    }
-    if (midSwap && !fs.delete(next, true))
-      throw new java.io.IOException(s"upsert repair: cannot clear $next")
-  }
-
   private def hasBucketDirs(fs: org.apache.hadoop.fs.FileSystem,
       hPath: org.apache.hadoop.fs.Path): Boolean =
     fs.listStatus(hPath).exists(s =>
       s.isDirectory && s.getPath.getName.startsWith("bucket="))
+
+  /** Where a caller stages the replacement `<key>=<v>` partition dirs
+    * of `path` for [[commitPartitions]]. The suffix is distinct from
+    * the swap's `_next`/`_old`, a migration's `_m*` and the publish
+    * watermark's `_pubmeta`, so the stages of different protocols on
+    * one tree can never be mistaken for each other. */
+  def partitionStage(path: String): String = path + "_pstage"
+
+  private val CommitRecord = "_commit"
+
+  /** The staged partition-replace commit: the per-partition form of
+    * the reference's one-transaction `DELETE` + `INSERT`
+    * (MD-SQL:105,113), shared by every tree that rewrites some of its
+    * `<key>=<v>` partition dirs in place — [[bucketedUpsert]], the ANN
+    * cell trees' delta publish and retire, and index compaction and
+    * retirement.
+    *
+    * The caller has written each replacement partition under
+    * [[partitionStage]]; `touched` names every partition the op
+    * replaces, and a touched partition with no staged copy is
+    * dropped. Steps:
+    *  1. commit: the stage's `_commit` record, naming the drops, is
+    *     written as a tmp file and renamed into place — that rename is
+    *     the commit point, and nothing live changes before it;
+    *  2. promote: each drop is deleted, each staged dir replaces its
+    *     live counterpart (delete live, rename staged in);
+    *  3. the stage is deleted last.
+    * Promote is idempotent (a promoted partition has no staged copy
+    * left, a finished drop is a no-op delete), so [[repairPartitions]]
+    * can replay it after a crash at any step. Single-maintainer: the
+    * caller must not race another writer of the same tree. */
+  def commitPartitions(spark: SparkSession, path: String,
+      touched: Seq[String]): Unit = {
+    val stage = new org.apache.hadoop.fs.Path(partitionStage(path))
+    val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staged = stagedPartitions(fs, stage)
+    val drops = touched.filterNot(staged.contains)
+    val tmp = new org.apache.hadoop.fs.Path(stage, CommitRecord + ".tmp")
+    val out = fs.create(tmp, true)
+    try out.write(drops.mkString("\n")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    if (!fs.rename(tmp, new org.apache.hadoop.fs.Path(stage, CommitRecord)))
+      throw new java.io.IOException(s"partition commit: cannot commit $stage")
+    promotePartitions(fs, path, staged, drops)
+  }
+
+  /** Finish or undo a [[commitPartitions]] interrupted by a crash: a
+    * stage holding its `_commit` record rolls forward, a stage without
+    * one is deleted (nothing live was touched yet). A clean tree costs
+    * one `exists`. Every entry point of a partition-replaced tree runs
+    * this before reading or writing it. */
+  def repairPartitions(spark: SparkSession, path: String): Unit = {
+    val stage = new org.apache.hadoop.fs.Path(partitionStage(path))
+    val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(stage)) return
+    val record = new org.apache.hadoop.fs.Path(stage, CommitRecord)
+    if (fs.exists(record)) {
+      val in = fs.open(record)
+      val drops = try scala.io.Source.fromInputStream(in, "UTF-8")
+        .getLines().filter(_.nonEmpty).toList
+      finally in.close()
+      promotePartitions(fs, path, stagedPartitions(fs, stage), drops)
+    } else if (!fs.delete(stage, true))
+      throw new java.io.IOException(s"partition repair: cannot clear $stage")
+  }
+
+  private def stagedPartitions(fs: org.apache.hadoop.fs.FileSystem,
+      stage: org.apache.hadoop.fs.Path): Seq[String] =
+    fs.listStatus(stage).toSeq.filter(_.isDirectory)
+      .map(_.getPath.getName).filter(_.contains("="))
+
+  private def promotePartitions(fs: org.apache.hadoop.fs.FileSystem,
+      path: String, staged: Seq[String], drops: Seq[String]): Unit = {
+    val stage = new org.apache.hadoop.fs.Path(partitionStage(path))
+    def drop(p: org.apache.hadoop.fs.Path): Unit =
+      if (!fs.delete(p, true) && fs.exists(p))
+        throw new java.io.IOException(s"partition commit: cannot drop $p")
+    drops.foreach(d => drop(new org.apache.hadoop.fs.Path(path, d)))
+    staged.foreach { p =>
+      val live = new org.apache.hadoop.fs.Path(path, p)
+      drop(live)
+      if (!fs.rename(new org.apache.hadoop.fs.Path(stage, p), live))
+        throw new java.io.IOException(s"partition commit: cannot promote $p")
+    }
+    if (!fs.delete(stage, true))
+      throw new java.io.IOException(s"partition commit: cannot clear $stage")
+  }
 
   /** Restore a swap interrupted between set-aside and promote: the
     * live path is missing but a complete `_old` copy exists. Call

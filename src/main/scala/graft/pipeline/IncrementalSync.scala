@@ -17,7 +17,8 @@ import graft.sources.ODataPageReader
   * (re-applying a change set a second time yields the identical
   * snapshot). The reverse order would skip a delta round on crash and
   * silently lose changes. Cursor writes are themselves
-  * write-tmp-then-rename.
+  * write-tmp-then-rename, and a crash inside one leaves the old or
+  * the new cursor readable ([[saveCursor]]).
   */
 object IncrementalSync {
 
@@ -55,30 +56,47 @@ object IncrementalSync {
     link
   }
 
-  /** Cursor from the last committed round, if any. */
+  /** Cursor from the last committed round, if any: the live cursor,
+    * or — after a crash inside [[saveCursor]] between setting it aside
+    * and promoting its successor — the set-aside previous one. The
+    * previous cursor is safe to resume from: the snapshot commits
+    * before the cursor, and the delta replays idempotently. */
   def loadCursor(spark: SparkSession, path: String): Option[String] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim)
-      finally in.close()
-    }
+    Seq(p, new org.apache.hadoop.fs.Path(path + "_prev"))
+      .find(fs.exists).map { c =>
+        val in = fs.open(c)
+        try new String(in.readAllBytes(),
+          java.nio.charset.StandardCharsets.UTF_8).trim
+        finally in.close()
+      }
   }
 
-  /** Persist the cursor atomically (write `_tmp`, rename over). */
+  /** Persist the cursor atomically: write `_tmp`, set the live cursor
+    * aside to `_prev`, rename `_tmp` in, drop `_prev`. A crash at any
+    * step leaves [[loadCursor]] the old or the new cursor, never none:
+    * the live cursor is only ever moved aside, and `_prev` is cleared
+    * only while a live cursor exists. */
   def saveCursor(spark: SparkSession, path: String, link: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
     val tmp = new org.apache.hadoop.fs.Path(path + "_tmp")
+    val prev = new org.apache.hadoop.fs.Path(path + "_prev")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(tmp, true)
     try out.write(link.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    if (fs.exists(p) && !fs.delete(p, false))
-      throw new java.io.IOException(s"cursor save: cannot replace $p")
+    // live cursor present: any `_prev` is debris of a finished save.
+    // Absent: a crashed save left the previous cursor in `_prev`, which
+    // must survive until its successor lands
+    if (fs.exists(p)) {
+      if (fs.exists(prev) && !fs.delete(prev, false))
+        throw new java.io.IOException(s"cursor save: cannot clear $prev")
+      if (!fs.rename(p, prev))
+        throw new java.io.IOException(s"cursor save: cannot set aside $p")
+    }
     if (!fs.rename(tmp, p))
       throw new java.io.IOException(s"cursor save: cannot commit $tmp")
+    fs.delete(prev, false) // best-effort; loadCursor reads it only without p
   }
 }

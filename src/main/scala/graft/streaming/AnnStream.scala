@@ -266,7 +266,8 @@ object AnnStream {
     * (path does not exist) rather than silently answering, and the
     * caller's maintenance cadence republishes (the s22 lifecycle).
     *
-    * CRASH SAFETY (staged commit, the compactIndex/retireIds shape):
+    * CRASH SAFETY (a staged commit, like
+    * [[graft.operators.Sinks.commitPartitions]]):
     * the new tree stages under `<indexPath>_mnext`, the new model
     * under `<indexPath>_mcen`; the `<indexPath>_mcommit` marker —
     * written atomically via tmp+rename, carrying the centroids path
@@ -469,8 +470,9 @@ object AnnStream {
         // window stays on the designed loud path (tree missing), never
         // a silent new-model/old-geometry pairing. The operator's
         // cadence republishes.
-        Seq(t, t + "_pubmeta", t + "_dnext", t + "_dold", t + "_next",
-          t + "_old", t + "_pubmeta_next", t + "_pubmeta_old").foreach { p =>
+        Seq(t, t + "_pubmeta", graft.operators.Sinks.partitionStage(t),
+          t + "_next", t + "_old", t + "_pubmeta_next",
+          t + "_pubmeta_old").foreach { p =>
           val hp = new org.apache.hadoop.fs.Path(p)
           if (fs.exists(hp) && !fs.delete(hp, true))
             throw new java.io.IOException(s"migrate: cannot invalidate $hp")
@@ -486,8 +488,8 @@ object AnnStream {
           // be O(files) with the live path missing the whole time —
           // r18 review), and promote in one rename: the live path is
           // absent only between the two renames
-          (Seq(t + "_dnext", t + "_dold", t + "_next", t + "_old",
-            t + "_pubmeta_next", t + "_pubmeta_old") ++
+          (Seq(graft.operators.Sinks.partitionStage(t), t + "_next",
+            t + "_old", t + "_pubmeta_next", t + "_pubmeta_old") ++
             (if (kind == "pub") Seq(t + "_pubmeta") else Nil)).foreach { p =>
             val hp = new org.apache.hadoop.fs.Path(p)
             if (fs.exists(hp) && !fs.delete(hp, true))
@@ -880,8 +882,8 @@ object AnnStream {
     * SINGLE-MAINTAINER CONTRACT: `retireServing` makes the STREAM a
     * writer of those serving trees, so external maintenance on them
     * (publishIndex / publishIndexDelta / a manual retireIds) must not
-    * run concurrently with the stream — two cell-swap protocols
-    * racing the same tree can repair each other's in-flight staging
+    * run concurrently with the stream — two partition commits racing
+    * the same tree can repair each other's in-flight staging
     * (the same no-concurrent-maintenance rule every tree op carries;
     * publish-while-ingest-continues only ever blessed concurrent RAW
     * ingest, whose sole writer is the stream itself). Run publishes
@@ -999,6 +1001,9 @@ object AnnStream {
     // missing, and a publish reading that state would fold (and
     // watermark past) rows it never saw
     DedupStream.repairIndexTree(spark, indexPath) // incl. migration repair
+    // a committed cell commit left on the serving tree would otherwise
+    // roll its stale cells forward over this republish at a later entry
+    graft.operators.Sinks.repairPartitions(spark, servingPath)
     graft.operators.Sinks.recoverSwap(spark, servingPath)
     val ids = listBatchIds(spark, indexPath)
     val folded = upToBatch.fold(ids)(b => ids.filter(_ <= b))
@@ -1062,16 +1067,12 @@ object AnnStream {
     * merge, and rewrite exactly those cell directories. Cells the
     * delta never touched are not read, not shuffled, not rewritten.
     *
-    * Crash safety mirrors [[graft.operators.Sinks.bucketedUpsert]],
-    * scoped to cells with distinct `_dnext`/`_dold` suffixes (so
-    * debris is never confused with a full publish's `_next`/`_old`):
-    * merged cells materialize under `_dnext`, live cell dirs are set
-    * aside under `_dold`, staged dirs promote, `_dnext` drops first
-    * (the commit marker), the watermark bumps LAST. An interrupted
-    * call is repaired on the next call's entry, and a replay is
-    * idempotent: the merge anti-joins the published rows against the
-    * delta's ids, so delta rows already promoted by the crashed
-    * attempt are replaced, never duplicated.
+    * Crash safety: the merged cells commit through
+    * [[graft.operators.Sinks.commitPartitions]] and the watermark
+    * bumps LAST. An interrupted call is repaired on the next call's
+    * entry, and a replay is idempotent: the merge anti-joins the
+    * published rows against the delta's ids, so delta rows already
+    * promoted by the crashed attempt are replaced, never duplicated.
     *
     * `upToBatch` is the publish-while-ingest-continues guard (the
     * [[publishIndex]] contract): pass the last COMMITTED batch id so
@@ -1088,7 +1089,7 @@ object AnnStream {
     DedupStream.repairIndexTree(spark, indexPath) // the publishIndex rule (incl. migration)
     val hServing = new org.apache.hadoop.fs.Path(servingPath)
     val fs = hServing.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    repairCellPublish(fs, servingPath)
+    graft.operators.Sinks.repairPartitions(spark, servingPath)
     graft.operators.Sinks.recoverSwap(spark, servingPath)
     graft.operators.Sinks.recoverSwap(spark, servingPath + "_pubmeta")
     // no tree, or a tree without its watermark (a full publish that
@@ -1128,47 +1129,17 @@ object AnnStream {
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           delta.schema))
         .filter(col("cell").isin(affected.map(_.toLong): _*)) // pruned scan
-      val merged = existing
+      existing
         .join(delta.select(col(idCol)), Seq(idCol), "left_anti")
         .unionByName(delta)
-      replaceCells(spark, fs, servingPath, merged, affected)
+        .repartition(col("cell")).write.mode(SaveMode.Overwrite)
+        .partitionBy("cell")
+        .parquet(graft.operators.Sinks.partitionStage(servingPath))
+      // a cell with no merged rows stages nothing and is dropped
+      graft.operators.Sinks.commitPartitions(spark, servingPath,
+        affected.map(c => s"cell=$c"))
       writePubWatermark(spark, servingPath, maxB)
     } finally delta.unpersist()
-  }
-
-  /** Replace exactly `affected` cell directories of a published tree
-    * with `merged`'s rows — the crash-safe cell-swap half of
-    * [[publishIndexDelta]], shared by [[retireIds]]: merged cells
-    * materialize under `_dnext`, live cell dirs are set aside under
-    * `_dold`, staged dirs promote (a cell with no merged rows stages
-    * nothing and its live dir simply drops), `_dnext` drops first as
-    * the commit marker. [[repairCellPublish]] repairs interruptions. */
-  private def replaceCells(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, servingPath: String,
-      merged: DataFrame, affected: Seq[String]): Unit = {
-    val next = new org.apache.hadoop.fs.Path(servingPath + "_dnext")
-    val old = new org.apache.hadoop.fs.Path(servingPath + "_dold")
-    merged.repartition(col("cell")).write.mode(SaveMode.Overwrite)
-      .partitionBy("cell").parquet(next.toString)
-    if (fs.exists(old) && !fs.delete(old, true))
-      throw new java.io.IOException(s"cell replace: cannot clear $old")
-    if (!fs.mkdirs(old))
-      throw new java.io.IOException(s"cell replace: cannot stage $old")
-    affected.foreach { c =>
-      val live = new org.apache.hadoop.fs.Path(servingPath, s"cell=$c")
-      val staged = new org.apache.hadoop.fs.Path(next, s"cell=$c")
-      if (fs.exists(live) &&
-          !fs.rename(live, new org.apache.hadoop.fs.Path(old, s"cell=$c")))
-        throw new java.io.IOException(s"cell replace: cannot set aside $live")
-      if (fs.exists(staged) && !fs.rename(staged, live))
-        throw new java.io.IOException(s"cell replace: cannot promote $staged")
-    }
-    // `_dnext` is the commit marker: drops first, mandatorily — see
-    // repairCellPublish for why `_dold` without `_dnext` must only
-    // ever be deleted, never rolled back
-    if (!fs.delete(next, true))
-      throw new java.io.IOException(s"cell replace: cannot clear $next")
-    fs.delete(old, true) // best-effort; repair clears completed debris
   }
 
   /** RETIRE ids from a PUBLISHED cell tree (the serving layout of
@@ -1191,17 +1162,19 @@ object AnnStream {
     * raw batches past the watermark — if the retired ids were also
     * retired from the raw tree, nothing re-introduces them).
     *
-    * Crash safety is [[replaceCells]]'s: an interrupted call is
-    * repaired to a readable tree by the next entry point's
-    * [[repairCellPublish]] — every cell-tree reader and writer runs it
-    * on entry ([[ivfServeTopK]], [[pqServeTopK]],
-    * [[publishIndexDelta]], and this method) — and a re-invoked retire
-    * is idempotent (the anti-join removes nothing twice). */
+    * Crash safety: the filtered cells commit through
+    * [[graft.operators.Sinks.commitPartitions]]; an interrupted call
+    * is repaired by the next entry point's
+    * [[graft.operators.Sinks.repairPartitions]] — every cell-tree
+    * reader and writer runs it on entry ([[ivfServeTopK]],
+    * [[pqServeTopK]], [[publishIndex]], [[publishIndexDelta]], and
+    * this method) — and a re-invoked retire is idempotent (the
+    * anti-join removes nothing twice). */
   def retireIds(spark: SparkSession, servingPath: String, ids: DataFrame,
       idCol: String): Unit = {
     val hServing = new org.apache.hadoop.fs.Path(servingPath)
     val fs = hServing.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    repairCellPublish(fs, servingPath)
+    graft.operators.Sinks.repairPartitions(spark, servingPath)
     graft.operators.Sinks.recoverSwap(spark, servingPath)
     // no tree, or a tree with zero data files (already fully retired):
     // nothing to remove, and nothing for schema inference to read — a
@@ -1231,42 +1204,15 @@ object AnnStream {
         .select(col("cell").cast(LongType)).distinct()
         .collect().map(_.getLong(0).toString).sorted
       if (affected.isEmpty) return
-      val kept = tree.filter(col("cell").isin(affected.map(_.toLong): _*))
+      tree.filter(col("cell").isin(affected.map(_.toLong): _*))
         .join(retire, Seq(idCol), "left_anti")
-      replaceCells(spark, fs, servingPath, kept, affected)
+        .repartition(col("cell")).write.mode(SaveMode.Overwrite)
+        .partitionBy("cell")
+        .parquet(graft.operators.Sinks.partitionStage(servingPath))
+      // a cell whose every row retired stages nothing and is dropped
+      graft.operators.Sinks.commitPartitions(spark, servingPath,
+        affected.map(c => s"cell=$c"))
     } finally retire.unpersist()
-  }
-
-  /** Repair an interrupted [[publishIndexDelta]]: `_dnext` still on
-    * disk means the crashed call never reached its commit point — any
-    * live cell dir it set aside but did not re-promote is restored
-    * (staged copy preferred; the set-aside original otherwise), then
-    * both staging dirs drop. `_dold` WITHOUT `_dnext` is debris of a
-    * COMPLETED publish whose best-effort cleanup failed — only
-    * deleted (the [[graft.operators.Sinks.bucketedUpsert]] rule). */
-  private def repairCellPublish(fs: org.apache.hadoop.fs.FileSystem,
-      servingPath: String): Unit = {
-    val next = new org.apache.hadoop.fs.Path(servingPath + "_dnext")
-    val old = new org.apache.hadoop.fs.Path(servingPath + "_dold")
-    val midSwap = fs.exists(next)
-    if (fs.exists(old)) {
-      if (midSwap) {
-        fs.listStatus(old).filter(s => s.isDirectory &&
-            s.getPath.getName.startsWith("cell=")).foreach { s =>
-          val live = new org.apache.hadoop.fs.Path(servingPath, s.getPath.getName)
-          if (!fs.exists(live)) {
-            val staged = new org.apache.hadoop.fs.Path(next, s.getPath.getName)
-            val src = if (fs.exists(staged)) staged else s.getPath
-            if (!fs.rename(src, live))
-              throw new java.io.IOException(s"publish repair: cannot restore $live")
-          }
-        }
-      }
-      if (!fs.delete(old, true))
-        throw new java.io.IOException(s"publish repair: cannot clear $old")
-    }
-    if (midSwap && !fs.delete(next, true))
-      throw new java.io.IOException(s"publish repair: cannot clear $next")
   }
 
   /** The published tree's watermark — the highest raw `batch_id`
@@ -1303,16 +1249,14 @@ object AnnStream {
   def ivfServeTopK(spark: SparkSession, indexPath: String,
       centroidsPath: String, queries: DataFrame, idCol: String,
       vecCol: String, topK: Int, nprobe: Int = 1): DataFrame = {
-    // every-load repair, BOTH layouts: raw-tree maintenance staging
-    // (compaction/retire) and the published tree's cell-swap staging —
-    // a crash inside retireIds/publishIndexDelta after live cells were
-    // set aside but before promotion would otherwise serve a tree
-    // silently missing whole non-retired cells until the next
-    // maintenance op. Each repair is one existence check when clean.
+    // every-load repair: a crash inside retireIds/publishIndexDelta
+    // after a live cell was dropped but before its staged copy landed
+    // would otherwise serve a tree silently missing a whole
+    // non-retired cell until the next maintenance op. One existence
+    // check per stage when clean.
     DedupStream.repairIndexTree(spark, indexPath) // incl. migration repair
     val hPath = new org.apache.hadoop.fs.Path(indexPath)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    repairCellPublish(fs, indexPath)
     graft.operators.Sinks.recoverSwap(spark, indexPath)
     // a fully-retired tree can exist with zero data files — schema
     // inference would throw; serve it as the empty index it is. A
@@ -1461,6 +1405,7 @@ object AnnStream {
       centroidsPath: String, codedPath: String, idCol: String,
       m: Int, k: Int, cbOpt: Option[Seq[Seq[Seq[Long]]]]): Unit = {
     DedupStream.repairIndexTree(spark, indexPath) // every-load repair (incl. migration)
+    graft.operators.Sinks.repairPartitions(spark, codedPath) // publishIndex rule
     // a fully-retired raw tree keeps its batch_id= dirs but holds zero
     // data files — schema inference would throw, and the correct
     // publish of an EMPTY corpus is an EMPTY coded tree (the
@@ -1546,13 +1491,13 @@ object AnnStream {
       cbOpt: Option[Seq[Seq[Seq[Long]]]]): DataFrame = {
     require(shortlist >= topK, "shortlist must cover topK")
     import spark.implicits._
-    // every-load repair of the coded tree's cell-swap staging (the
-    // ivfServeTopK rule): retireIds on the PQ-coded tree goes through
-    // the same replaceCells protocol, and a crash there must not leave
-    // serves missing non-retired cells
+    // every-load repair of the coded tree (the ivfServeTopK rule):
+    // retireIds on the PQ-coded tree commits through the same
+    // partition commit, and a crash there must not leave serves
+    // missing non-retired cells
     val hCoded = new org.apache.hadoop.fs.Path(codedPath)
     val codedFs = hCoded.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    repairCellPublish(codedFs, codedPath)
+    graft.operators.Sinks.repairPartitions(spark, codedPath)
     graft.operators.Sinks.recoverSwap(spark, codedPath)
     // READ ORDER IS LOAD-BEARING (the ivfServeTopK rule): the coded
     // tree's file listing pins FIRST, geometry second — a migration

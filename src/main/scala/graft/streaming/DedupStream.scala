@@ -70,14 +70,11 @@ object DedupStream {
     * shapes (MinHash signatures, 64-bit signatures, embeddings) —
     * the fold is shape-agnostic.
     *
-    * Crash safety: the folded rows stage under `<path>_cnext`; a
-    * `_STAGED_<upToBatch>` marker commits the staging; source dirs
-    * drop only after the marker exists; the staged dir promotes to
-    * `batch_id=<upToBatch>` last. [[repairCompaction]] (run on entry
-    * here AND by every index load) rolls an interrupted compaction
-    * forward (marker present: the staged fold IS the committed
-    * prefix) or back (no marker: sources are intact, the partial
-    * stage drops). */
+    * Crash safety: the fold stages as `batch_id=<upToBatch>` (stats
+    * sidecar inside) and commits through
+    * [[graft.operators.Sinks.commitPartitions]], which drops the
+    * folded source dirs; [[repairIndexTree]] (run on entry here AND by
+    * every index load) finishes or undoes an interrupted one. */
   def compactIndex(spark: SparkSession, indexPath: String,
       upToBatch: Long, partitionCols: Seq[String] = Nil,
       idCol: Option[String] = None): Unit = {
@@ -89,21 +86,17 @@ object DedupStream {
     // live tree would be discarded by the next entry's roll-forward
     repairIndexTree(spark, indexPath)
     if (!fs.exists(hPath)) return
-    val ids = fs.listStatus(hPath).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-      .map(_.getPath.getName.stripPrefix("batch_id=").toLong)
-      .filter(_ <= upToBatch)
-    if (ids.length <= 1) return // nothing to fold
+    val dirs = fs.listStatus(hPath).toSeq
+      .filter(_.isDirectory).map(_.getPath)
+      .filter(p => p.getName.startsWith("batch_id=") &&
+        p.getName.stripPrefix("batch_id=").toLong <= upToBatch)
+    if (dirs.length <= 1) return // nothing to fold
     // all-empty prefix (every batch dropped everything): no rows to
     // fold and nothing for schema inference to read — leave the
     // (cheap, data-free) dirs alone
-    if (!ids.exists(n => hasParquetFiles(fs,
-      new org.apache.hadoop.fs.Path(hPath, s"batch_id=$n"))))
-      return
-    val tgt = ids.max
-    val next = new org.apache.hadoop.fs.Path(indexPath + "_cnext")
-    if (fs.exists(next) && !fs.delete(next, true))
-      throw new java.io.IOException(s"compact: cannot clear $next")
+    if (!dirs.exists(hasParquetFiles(fs, _))) return
+    val tgt = dirs.map(_.getName.stripPrefix("batch_id=").toLong).max
+    val next = s"${graft.operators.Sinks.partitionStage(indexPath)}/batch_id=$tgt"
     val folded = spark.read.parquet(indexPath)
       .filter(col("batch_id") <= tgt)
       .drop("batch_id")
@@ -111,79 +104,26 @@ object DedupStream {
     // their inner layout: shuffle by the partition keys so each folded
     // sub-dir is one file — the read path's pruning contract survives
     val writer = (if (partitionCols.isEmpty)
-        folded.coalesce(math.max(1, ids.length / 8)) // ~8 batch dirs/file
+        folded.coalesce(math.max(1, dirs.length / 8)) // ~8 batch dirs/file
       else folded.repartition(partitionCols.map(col): _*))
       .write.mode(SaveMode.Overwrite)
     (if (partitionCols.isEmpty) writer
      else writer.partitionBy(partitionCols: _*))
-      .parquet(next.toString)
-    // the folded target's stats sidecar, staged WITH it (`_cnext`
-    // promotes wholesale to `batch_id=<tgt>`, sidecar inside): the
-    // compacted BULK of a maintained tree then answers every future
-    // probe — retire candidates, ingest-guard hull, row counts — from
-    // one small read, min/max AND Bloom, instead of one footer per
-    // file. `idCol` is opt-in because the fold itself is shape-
-    // agnostic; the ingest wrappers pass theirs. Computed from the
+      .parquet(next)
+    // the folded target's stats sidecar, staged WITH it (it promotes
+    // inside `batch_id=<tgt>`): the compacted BULK of a maintained
+    // tree then answers every future probe — retire candidates,
+    // ingest-guard hull, row counts — from one small read, min/max
+    // AND Bloom, instead of one footer per file. `idCol` is opt-in
+    // because the fold itself is shape-agnostic; the ingest wrappers
+    // pass theirs. Computed from the
     // JUST-WRITTEN staged output, not the `folded` plan — re-executing
     // the plan would re-read every source batch dir and re-run the
     // fold's shuffle once per sidecar job (r17 review).
     idCol.foreach(ic => StatsSidecar.writeForDir(spark,
-      spark.read.parquet(next.toString), next.toString, ic))
-    fs.create(new org.apache.hadoop.fs.Path(next, s"_STAGED_$tgt")).close()
-    promoteCompaction(fs, indexPath, next, tgt)
-  }
-
-  /** The commit half of [[compactIndex]] — also the roll-forward of
-    * [[repairCompaction]]: drop every source dir the staged fold
-    * subsumes, then promote the stage to `batch_id=<tgt>`. The
-    * `_STAGED_<tgt>` marker is deleted only AFTER the rename commits
-    * (it travels with the renamed dir): the marker is the one bit
-    * that distinguishes "complete fold, sources may already be gone
-    * — roll FORWARD" from "partial stage, sources intact — roll
-    * back", so deleting it while the stage still sits at `_cnext`
-    * would turn a crash in that window into repair-by-deletion of
-    * the only copy of the folded prefix. Inside `batch_id=<tgt>` the
-    * leftover marker is inert (underscore-prefixed files are ignored
-    * by parquet reads, and [[repairCompaction]] only inspects
-    * `_cnext`), so even a crash before the final delete leaves
-    * nothing worse than a zero-byte debris file. */
-  private def promoteCompaction(fs: org.apache.hadoop.fs.FileSystem,
-      indexPath: String, next: org.apache.hadoop.fs.Path,
-      tgt: Long): Unit = {
-    val hPath = new org.apache.hadoop.fs.Path(indexPath)
-    fs.listStatus(hPath).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-      .filter(_.getPath.getName.stripPrefix("batch_id=").toLong <= tgt)
-      .foreach { s =>
-        if (!fs.delete(s.getPath, true))
-          throw new java.io.IOException(s"compact: cannot drop ${s.getPath}")
-      }
-    val promoted = new org.apache.hadoop.fs.Path(hPath, s"batch_id=$tgt")
-    if (!fs.rename(next, promoted))
-      throw new java.io.IOException(s"compact: cannot promote $next")
-    fs.delete(new org.apache.hadoop.fs.Path(promoted, s"_STAGED_$tgt"), false)
-  }
-
-  /** Repair an interrupted [[compactIndex]]: a `_cnext` stage with
-    * its `_STAGED_<tgt>` marker is a COMPLETE fold of the committed
-    * prefix — roll forward (the crashed call may already have
-    * dropped some source dirs, so the stage is the only full copy);
-    * without the marker the sources are untouched — roll back by
-    * dropping the partial stage. Cheap for every index load to call:
-    * one existence check when no compaction ever ran. */
-  private def repairCompaction(fs: org.apache.hadoop.fs.FileSystem,
-      indexPath: String): Unit = {
-    val next = new org.apache.hadoop.fs.Path(indexPath + "_cnext")
-    if (!fs.exists(next)) return
-    val marker = fs.listStatus(next).toSeq
-      .map(_.getPath.getName).find(_.startsWith("_STAGED_"))
-    marker match {
-      case Some(m) =>
-        promoteCompaction(fs, indexPath, next, m.stripPrefix("_STAGED_").toLong)
-      case None =>
-        if (!fs.delete(next, true))
-          throw new java.io.IOException(s"compact repair: cannot clear $next")
-    }
+      spark.read.parquet(next), next, ic))
+    graft.operators.Sinks.commitPartitions(spark, indexPath,
+      dirs.map(_.getName))
   }
 
   /** Repair ALL maintenance stagings of a per-batch index tree — an
@@ -194,9 +134,11 @@ object DedupStream {
     * rewrite the superseded copy only to have the next entry's
     * roll-forward discard it, resurrecting erased ids — the r17
     * drain-side bug class, closed here for EVERY entry point per the
-    * r18 advice), then an interrupted [[compactIndex]], then an
-    * interrupted [[retireIds]]. One existence check each when no
-    * maintenance ever ran; package-visible so [[AnnStream]]'s
+    * r18 advice), then an interrupted partition commit
+    * ([[graft.operators.Sinks.repairPartitions]] — a compaction, a
+    * retire, or on a cell tree a delta publish or retire). One
+    * existence check each when no maintenance ever ran;
+    * package-visible so [[AnnStream]]'s
     * loaders, publishes, serves and trainer apply the same every-load
     * repair rule to the raw ANN tree (its `batch_id=N/cell=M` layout
     * goes through the identical machinery). Dedup signature trees
@@ -205,10 +147,7 @@ object DedupStream {
   private[streaming] def repairIndexTree(spark: SparkSession,
       indexPath: String): Unit = {
     AnnStream.repairMigration(spark, indexPath)
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    repairCompaction(fs, indexPath)
-    repairRetire(fs, indexPath)
+    graft.operators.Sinks.repairPartitions(spark, indexPath)
   }
 
   /** The partitions of a tree that COULD hold any of `ids`, decided
@@ -519,19 +458,15 @@ object DedupStream {
     * batches are not read, not shuffled, not rewritten, and with
     * disjoint id ranges not even probed.
     *
-    * Crash safety follows [[compactIndex]]'s staged-commit shape:
-    * filtered copies of every affected partition stage under
-    * `<treePath>_rnext` (a fully-retired batch stages as an EMPTY
-    * `batch_id=` dir, so the promote drops its live rows too); the
-    * `_RETIRE_STAGED` marker commits the staging; [[promoteRetire]]
-    * replaces each live partition with its staged copy and drops the
-    * staging last. [[repairRetire]] (run on entry here AND by every
-    * index load via [[repairIndexTree]]) rolls an interrupted retire
-    * forward (marker present: every staged partition is a complete
-    * filtered copy) or back (no marker: live partitions untouched,
-    * the partial stage drops). Like [[compactIndex]], the call must
-    * not race an in-flight batch or another maintenance op (run it
-    * from a quiesced window or between foreachBatch invocations). */
+    * Crash safety: filtered copies of every affected partition commit
+    * through [[graft.operators.Sinks.commitPartitions]] (a fully-
+    * retired batch stages as an EMPTY `batch_id=` dir plus its
+    * sidecar, so it stays in the tree with no rows);
+    * [[repairIndexTree]] (run on entry here AND by every index load)
+    * finishes or undoes an interrupted one. Like [[compactIndex]],
+    * the call must not race an in-flight batch or another maintenance
+    * op (run it from a quiesced window or between foreachBatch
+    * invocations). */
   def retireIds(spark: SparkSession, treePath: String, ids: DataFrame,
       idCol: String, partitionCols: Seq[String] = Nil): Unit = {
     val hPath = new org.apache.hadoop.fs.Path(treePath)
@@ -575,7 +510,8 @@ object DedupStream {
         .select(col("batch_id").cast(org.apache.spark.sql.types.LongType))
         .distinct().collect().map(_.getLong(0)).sorted
       if (affected.isEmpty) return
-      val next = new org.apache.hadoop.fs.Path(treePath + "_rnext")
+      val next = new org.apache.hadoop.fs.Path(
+        graft.operators.Sinks.partitionStage(treePath))
       val kept = tree
         .filter(col("batch_id").isin(affected: _*))
         .join(retire, Seq(idCol), "left_anti")
@@ -584,10 +520,11 @@ object DedupStream {
         .partitionBy(("batch_id" +: partitionCols): _*)
         .parquet(next.toString)
       // a batch whose every row retired writes no partition dir — stage
-      // an EMPTY one so the promote still drops its live rows
+      // an EMPTY one, so the batch keeps its dir (with no rows) instead
+      // of being dropped by the commit
       affected.foreach { b =>
         val staged = new org.apache.hadoop.fs.Path(next, s"batch_id=$b")
-        if (!fs.exists(staged) && !fs.mkdirs(staged))
+        if (!fs.mkdirs(staged))
           throw new java.io.IOException(s"retire: cannot stage empty $staged")
       }
       // SIDECAR-MAINTAINED TREES STAY MAINTAINED: when any affected
@@ -613,32 +550,9 @@ object DedupStream {
         if (!hasParquetFiles(fs, staged))
           StatsSidecar.writeEmpty(spark, staged.toString, idCol)
       }
-      fs.create(new org.apache.hadoop.fs.Path(next, "_RETIRE_STAGED")).close()
-      promoteRetire(fs, treePath, next)
+      graft.operators.Sinks.commitPartitions(spark, treePath,
+        affected.map(b => s"batch_id=$b"))
     } finally retire.unpersist()
-  }
-
-  /** The commit half of [[retireIds]] — also [[repairRetire]]'s
-    * roll-forward: each staged `batch_id=` partition REPLACES its
-    * live counterpart (drop live, rename staged in), then the staging
-    * dir (now holding only the marker) drops. Idempotent mid-crash:
-    * a partition already promoted has no staged copy left, so a
-    * replayed promote skips it; a live dir dropped but not yet
-    * replaced is restored by the staged rename. */
-  private def promoteRetire(fs: org.apache.hadoop.fs.FileSystem,
-      treePath: String, next: org.apache.hadoop.fs.Path): Unit = {
-    val hPath = new org.apache.hadoop.fs.Path(treePath)
-    fs.listStatus(next).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-      .foreach { s =>
-        val live = new org.apache.hadoop.fs.Path(hPath, s.getPath.getName)
-        if (fs.exists(live) && !fs.delete(live, true))
-          throw new java.io.IOException(s"retire: cannot drop $live")
-        if (!fs.rename(s.getPath, live))
-          throw new java.io.IOException(s"retire: cannot promote ${s.getPath}")
-      }
-    if (!fs.delete(next, true))
-      throw new java.io.IOException(s"retire: cannot clear $next")
   }
 
   /** Drain a RETIRE-REQUEST QUEUE: apply every pending request file
@@ -800,22 +714,6 @@ object DedupStream {
       else if (s.isDirectory) hasParquetFiles(fs, s.getPath)
       else n.endsWith(".parquet")
     }
-
-  /** Repair an interrupted [[retireIds]]: a `_rnext` stage with its
-    * `_RETIRE_STAGED` marker holds a COMPLETE filtered copy of every
-    * affected partition — roll forward (the crashed promote may
-    * already have dropped some live partitions; the stage is the only
-    * full copy). Without the marker the live tree is untouched — roll
-    * back by dropping the partial stage. */
-  private def repairRetire(fs: org.apache.hadoop.fs.FileSystem,
-      treePath: String): Unit = {
-    val next = new org.apache.hadoop.fs.Path(treePath + "_rnext")
-    if (!fs.exists(next)) return
-    if (fs.exists(new org.apache.hadoop.fs.Path(next, "_RETIRE_STAGED")))
-      promoteRetire(fs, treePath, next)
-    else if (!fs.delete(next, true))
-      throw new java.io.IOException(s"retire repair: cannot clear $next")
-  }
 
   /** The committed index as seen by batch `batchId`: signature
     * partitions of all PRIOR batches. A partial `batch_id=batchId`

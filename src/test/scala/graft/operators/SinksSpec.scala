@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{FaultFs, SparkSpec}
 import org.apache.spark.sql.functions.col
 import java.sql.Timestamp
 import java.nio.file.Files
@@ -183,32 +183,39 @@ class SinksSpec extends SparkSpec {
     val b = spark.range(1).select(pmod(xxhash64(lit(7L)), lit(8L)))
       .as[Long].head()
 
-    // crash state 1: bucket b set aside, its merged copy staged,
-    // promote missed — a naive replay would read the live store
-    // (bucket b missing) and lose every unchanged row of that bucket
-    Sinks.applyDelta(base, changes, "id")
-      .withColumn("bucket", pmod(xxhash64(col("id")), lit(8L)))
-      .filter(col("bucket") === b).drop("bucket")
-      .write.parquet(path + s"_next/bucket=$b")
-    assert(fs.mkdirs(new Path(path + "_old")))
-    assert(fs.rename(new Path(path, s"bucket=$b"),
-      new Path(path + s"_old/bucket=$b")))
+    // crash state 1: bucket b's live dir dropped, its merged copy staged
+    // and committed, promote missed — a naive replay would read the live
+    // store (bucket b missing) and lose every unchanged row of that bucket
+    FaultFs.installed(spark) {
+      assert(FaultFs.crashing(FaultFs.PartitionCommit)(c => c.op == "rename" &&
+          c.path.endsWith(s"_pstage/bucket=$b"))(
+        Sinks.bucketedUpsert(spark, changes, path, "id", buckets = 8)))
+    }
+    assert(!fs.exists(new Path(path, s"bucket=$b")))
     Sinks.bucketedUpsert(spark, changes, path, "id", buckets = 8)
     assert(state() == expected,
       "repair must promote the staged copy before merging")
     assert(!fs.exists(new Path(path + "_next")) &&
       !fs.exists(new Path(path + "_old")))
+    assert(!fs.exists(new Path(Sinks.partitionStage(path))))
 
-    // crash state 2: set aside with NO staged copy (the bucket's merged
-    // form is empty) — `_next` still present marks the uncommitted
-    // merge; repair must roll the bucket back, then the replayed merge
-    // converges
-    assert(fs.mkdirs(new Path(path + "_next")))
-    assert(fs.mkdirs(new Path(path + "_old")))
-    assert(fs.rename(new Path(path, s"bucket=$b"),
-      new Path(path + s"_old/bucket=$b")))
-    Sinks.bucketedUpsert(spark, changes, path, "id", buckets = 8)
-    assert(state() == expected, "repair must roll back the set-aside copy")
+    // crash state 2: the merge staged but its commit record never
+    // landed — live buckets untouched; repair must roll the stage back,
+    // then the replayed merge converges
+    val path2 = tmp("upsert_crash2")
+    def state2(): Set[(Long, String)] =
+      spark.read.parquet(path2).select("id", "v").as[(Long, String)]
+        .collect().toSet
+    Sinks.bucketedUpsert(spark, base, path2, "id", buckets = 8)
+    FaultFs.installed(spark) {
+      assert(FaultFs.crashing(FaultFs.PartitionCommit)(_.op == "rename")(
+        Sinks.bucketedUpsert(spark, changes, path2, "id", buckets = 8)))
+    }
+    assert(fs.exists(new Path(Sinks.partitionStage(path2))))
+    assert(state2() == base.as[(Long, String)].collect().toSet)
+    Sinks.bucketedUpsert(spark, changes, path2, "id", buckets = 8)
+    assert(state2() == expected, "repair must roll back the uncommitted stage")
+    assert(!fs.exists(new Path(Sinks.partitionStage(path2))))
   }
 
   test("bucketedUpsert: completed-merge _old debris is cleared, never rolled back") {
@@ -226,13 +233,15 @@ class SinksSpec extends SparkSpec {
     // tombstone EVERY row of bucket b — the merge legitimately removes
     // the bucket dir
     val wipe = bucketIds.map(i => (i, "", true)).toDF("id", "v", "removed")
-    Sinks.bucketedUpsert(spark, wipe, path, "id", buckets = 4)
+    // the merge promoted (the cursor HAS advanced), then crashed before
+    // clearing its stage: the committed stage is left behind
+    FaultFs.installed(spark) {
+      assert(FaultFs.crashing(FaultFs.PartitionCommit)(c => c.op == "delete" &&
+          c.path.endsWith("_pstage"))(
+        Sinks.bucketedUpsert(spark, wipe, path, "id", buckets = 4)))
+    }
     assert(!fs.exists(new Path(path, s"bucket=$b")))
-    // simulate the merge's best-effort _old cleanup having failed
-    // (cursor HAS advanced): _old holds the pre-delete copy, _next gone
-    base.withColumn("bucket", pmod(xxhash64(col("id")), lit(4L)))
-      .filter(col("bucket") === b).drop("bucket")
-      .write.parquet(path + s"_old/bucket=$b")
+    assert(fs.exists(new Path(Sinks.partitionStage(path))))
     // an unrelated later delta must clear the debris WITHOUT
     // resurrecting the deleted rows
     Sinks.bucketedUpsert(spark, Seq((1000L, "x", false))
@@ -242,6 +251,7 @@ class SinksSpec extends SparkSpec {
       "rows deleted by a completed merge must stay deleted")
     assert(ids.contains(1000L))
     assert(!fs.exists(new Path(path + "_old")))
+    assert(!fs.exists(new Path(Sinks.partitionStage(path))))
   }
 
   test("bucketedUpsert: tombstoning every row leaves an absent (recreatable) store; torn meta self-heals") {

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.SparkSpec
+import graft.{FaultFs, SparkSpec}
 import graft.core.Tables
 import graft.similarity.Ann
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -393,19 +393,17 @@ class AnnStreamSpec extends SparkSpec {
     AnnStream.processIvfBatch(e.filter($"vec_id" < 2), 1L, indexPath,
       centroidsPath, "vec_id", "embedding", dim = 64, cells = 8, iters = 2)
 
-    // simulate the worst crash window: a live cell was set aside under
-    // _dold, its staged replacement still sits in _dnext, the live dir
-    // is GONE, and the watermark never advanced
-    val someCell = new java.io.File(servingPath).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("cell=")).head
-    val dold = new java.io.File(servingPath + "_dold", someCell.getName)
-    val dnext = new java.io.File(servingPath + "_dnext", someCell.getName)
-    dold.getParentFile.mkdirs(); dnext.getParentFile.mkdirs()
-    java.nio.file.Files.move(someCell.toPath, dold.toPath)
-    java.nio.file.Files.createDirectories(dnext.toPath)
-    java.nio.file.Files.copy(dold.toPath.resolve(
-        dold.list().filter(_.endsWith(".parquet")).head),
-      dnext.toPath.resolve("part-repair.parquet"))
+    // the worst crash window: a live cell's dir is GONE, its committed
+    // staged replacement not yet renamed in, and the watermark never
+    // advanced
+    FaultFs.installed(spark) {
+      assert(FaultFs.crashing(FaultFs.PartitionCommit)(c => c.op == "rename" &&
+          c.path.contains("_pstage/cell="))(
+        AnnStream.publishIndexDelta(spark, indexPath, servingPath)))
+    }
+    val stagedCell = new java.io.File(servingPath + "_pstage").list()
+      .filter(_.startsWith("cell=")).head
+    assert(!new java.io.File(servingPath, stagedCell).exists())
 
     // next call's entry repair restores a complete tree, then the
     // replayed delta (watermark still old) folds in idempotently
@@ -413,6 +411,7 @@ class AnnStreamSpec extends SparkSpec {
     assert(servingRows(servingPath) == servingRows(indexPath))
     assert(!new java.io.File(servingPath + "_dold").exists())
     assert(!new java.io.File(servingPath + "_dnext").exists())
+    assert(!new java.io.File(servingPath + "_pstage").exists())
     val ids = spark.read.parquet(servingPath).select("vec_id").as[Long]
       .collect().toSeq
     assert(ids.length == ids.distinct.length, "replay duplicated rows")
@@ -643,56 +642,66 @@ class AnnStreamSpec extends SparkSpec {
     val servingPath = tmp("assr_pub") + "/serving"
     AnnStream.publishIndex(spark, indexPath, servingPath)
     val queries = e.filter($"vec_id" < 10)
-    val intact = AnnStream.ivfServeTopK(spark, servingPath, centroidsPath,
-        queries, "vec_id", "embedding", topK = 3, nprobe = 2)
-      .collect().map(_.toSeq).toSet
+    val intactRows = AnnStream.ivfServeTopK(spark, servingPath,
+        centroidsPath, queries, "vec_id", "embedding", topK = 3, nprobe = 2)
+      .collect()
+    val intact = intactRows.map(_.toSeq).toSet
+    // the retired row shares a cell with an answer but is no answer
+    // itself (nor a query), so a repaired serve answers as before
+    def bystander(tree: String, rows: Seq[org.apache.spark.sql.Row]): Long = {
+      val answers = rows.map(_.getAs[Long]("neighbor_id"))
+      val t = spark.read.parquet(tree)
+      val cell = t.filter($"vec_id" === answers.head).select("cell").head()
+        .get(0)
+      t.filter($"cell" === cell && $"vec_id" >= 10 &&
+          !$"vec_id".isin(answers: _*))
+        .agg(max("vec_id")).as[Long].head()
+    }
 
     // worst crash window of a retire/delta-publish on the PUBLISHED
-    // tree: a live cell set aside under _dold, its staged copy still
-    // in _dnext, the live dir GONE — an unrepaired serve would answer
-    // from a tree silently missing that whole (non-retired) cell
-    def tearOneCell(): String = {
-      val someCell = new java.io.File(servingPath).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("cell=")).head
-      val dold = new java.io.File(servingPath + "_dold", someCell.getName)
-      val dnext = new java.io.File(servingPath + "_dnext", someCell.getName)
-      dold.getParentFile.mkdirs(); dnext.getParentFile.mkdirs()
-      java.nio.file.Files.move(someCell.toPath, dold.toPath)
-      java.nio.file.Files.createDirectories(dnext.toPath)
-      java.nio.file.Files.copy(dold.toPath.resolve(
-          dold.list().filter(_.endsWith(".parquet")).head),
-        dnext.toPath.resolve("part-repair.parquet"))
-      someCell.getName
+    // tree: a live cell dropped, its committed staged copy not yet
+    // renamed in — an unrepaired serve would answer from a tree
+    // silently missing that whole (non-retired) cell
+    def tearOneCell(tree: String,
+        rows: Seq[org.apache.spark.sql.Row]): Unit = {
+      val victim = bystander(tree, rows)
+      FaultFs.installed(spark) {
+        assert(FaultFs.crashing(FaultFs.PartitionCommit)(c =>
+            c.op == "rename" && c.path.contains("_pstage/cell="))(
+          AnnStream.retireIds(spark, tree, Seq(victim).toDF("vec_id"),
+            "vec_id")))
+      }
+      val cell = new java.io.File(tree + "_pstage").list()
+        .filter(_.startsWith("cell=")).head
+      assert(!new java.io.File(tree, cell).exists())
     }
-    tearOneCell()
+    tearOneCell(servingPath, intactRows.toSeq)
     val served = AnnStream.ivfServeTopK(spark, servingPath, centroidsPath,
         queries, "vec_id", "embedding", topK = 3, nprobe = 2)
       .collect().map(_.toSeq).toSet
     assert(served == intact, "serve answered from an unrepaired tree")
     assert(!new java.io.File(servingPath + "_dold").exists())
     assert(!new java.io.File(servingPath + "_dnext").exists())
+    assert(!new java.io.File(servingPath + "_pstage").exists())
 
-    // the PQ-coded tree goes through the same swap protocol — its
-    // serve must repair too
+    // the PQ-coded tree goes through the same commit — its serve must
+    // repair too
     val codedPath = tmp("assr_pq") + "/coded"
     AnnStream.publishPqIndex(spark, indexPath, centroidsPath, codedPath,
       "vec_id", m = 8, k = 8)
-    val pqIntact = AnnStream.pqServeTopK(spark, codedPath, centroidsPath,
-        vectors = e, queries = queries, "vec_id", "embedding",
+    val pqIntactRows = AnnStream.pqServeTopK(spark, codedPath,
+        centroidsPath, vectors = e, queries = queries, "vec_id", "embedding",
         m = 8, k = 8, nprobe = 2, shortlist = 20, topK = 3)
-      .collect().map(_.toSeq).toSet
-    val someCell = new java.io.File(codedPath).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("cell=")).head
-    val dold = new java.io.File(codedPath + "_dold", someCell.getName)
-    dold.getParentFile.mkdirs()
-    new java.io.File(codedPath + "_dnext").mkdirs()
-    java.nio.file.Files.move(someCell.toPath, dold.toPath)
+      .collect()
+    val pqIntact = pqIntactRows.map(_.toSeq).toSet
+    tearOneCell(codedPath, pqIntactRows.toSeq)
     val pqServed = AnnStream.pqServeTopK(spark, codedPath, centroidsPath,
         vectors = e, queries = queries, "vec_id", "embedding",
         m = 8, k = 8, nprobe = 2, shortlist = 20, topK = 3)
       .collect().map(_.toSeq).toSet
     assert(pqServed == pqIntact, "pq serve answered from an unrepaired tree")
     assert(!new java.io.File(codedPath + "_dold").exists())
+    assert(!new java.io.File(codedPath + "_pstage").exists())
   }
 
   test("ANN queue drain reaches the published and coded serving trees in the same pass") {

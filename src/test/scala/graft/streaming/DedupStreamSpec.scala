@@ -1,8 +1,9 @@
 package graft.streaming
 
-import graft.SparkSpec
+import graft.{FaultFs, SparkSpec}
 import graft.core.Tables
 import graft.dedup.Dedup
+import graft.operators.Sinks
 import org.apache.spark.sql.functions._
 
 class DedupStreamSpec extends SparkSpec {
@@ -240,29 +241,32 @@ class DedupStreamSpec extends SparkSpec {
     // row set intact
     assert(spark.read.parquet(indexPath).count() == docs.count())
 
-    // crash repair, roll BACK: a stage without its marker drops
-    val next = new java.io.File(indexPath + "_cnext")
-    next.mkdirs()
-    java.nio.file.Files.writeString(next.toPath.resolve("part-junk.parquet"), "x")
+    // crash repair, roll BACK: a compaction that crashed before its
+    // commit record landed leaves a stage, which the next entry drops
+    val next = new java.io.File(Sinks.partitionStage(indexPath))
+    FaultFs.installed(spark) {
+      assert(FaultFs.crashing(FaultFs.PartitionCommit)(_.op == "rename")(
+        DedupStream.compactIndex(spark, indexPath, 2L)))
+    }
+    assert(next.exists())
     DedupStream.compactIndex(spark, indexPath, 2L)
     assert(!next.exists())
     assert(new java.io.File(indexPath).listFiles()
       .count(_.getName.startsWith("batch_id=")) == 2) // 0-2 folded, 3 live
 
-    // crash repair, roll FORWARD: marker present + a source dir already
-    // dropped — the stage is the only full copy and must promote (here
-    // exercised via compactIndex's entry repair)
+    // crash repair, roll FORWARD: committed, and every source dir
+    // already dropped — the stage is the only full copy and must
+    // promote (here exercised via compactIndex's entry repair)
     val rows = spark.read.parquet(indexPath).count()
-    val stage = new java.io.File(indexPath + "_cnext")
-    spark.read.parquet(indexPath).filter($"batch_id" <= 3)
-      .drop("batch_id").write.parquet(stage.toString)
-    java.nio.file.Files.createFile(stage.toPath.resolve("_STAGED_3"))
+    val stage = new java.io.File(Sinks.partitionStage(indexPath))
     val victim = new java.io.File(indexPath, "batch_id=2")
     assert(victim.exists())
-    def rm(f: java.io.File): Unit = {
-      val c = f.listFiles(); if (c != null) c.foreach(rm); f.delete()
+    FaultFs.installed(spark) {
+      assert(FaultFs.crashing(FaultFs.PartitionCommit)(c => c.op == "rename" &&
+          c.path.endsWith("_pstage/batch_id=3"))(
+        DedupStream.compactIndex(spark, indexPath, 3L)))
     }
-    rm(victim) // the crashed call got partway through dropping sources
+    assert(!victim.exists()) // the crashed call dropped the sources
     DedupStream.compactIndex(spark, indexPath, 3L) // entry repair promotes
     assert(!stage.exists())
     assert(new java.io.File(indexPath).listFiles()
@@ -324,30 +328,31 @@ class DedupStreamSpec extends SparkSpec {
     val before = spark.read.parquet(indexPath).select("doc_id").as[Long]
       .collect().toSet
 
-    // roll BACK: a partial stage without its marker drops; live intact
-    val next = new java.io.File(indexPath + "_rnext")
-    new java.io.File(next, "batch_id=0").mkdirs()
-    java.nio.file.Files.writeString(
-      next.toPath.resolve("part-junk.parquet"), "x")
+    // roll BACK: a retire that crashed before its commit record landed
+    // leaves a stage, which the next entry drops; live intact
+    val next = new java.io.File(Sinks.partitionStage(indexPath))
+    val retired = before.filter(id => id % 2 == 0 && id < 50).toSeq
+      .toDF("doc_id")
+    FaultFs.installed(spark) {
+      assert(FaultFs.crashing(FaultFs.PartitionCommit)(_.op == "rename")(
+        DedupStream.retireIds(spark, indexPath, retired, "doc_id")))
+    }
+    assert(next.exists())
     DedupStream.retireIds(spark, indexPath, Seq(-1L).toDF("doc_id"),
       "doc_id") // entry repair
     assert(!next.exists())
     assert(spark.read.parquet(indexPath).select("doc_id").as[Long]
       .collect().toSet == before)
 
-    // roll FORWARD: marker present, one live partition already dropped
-    // by the crashed promote — the stage is the only full copy. Stage
-    // a filtered copy (drop doc_id < 50 from batch 0; batch 1 staged
-    // unfiltered), then simulate the crash.
-    spark.read.parquet(indexPath)
-      .filter(!($"batch_id" === 0 && $"doc_id" < 50))
-      .repartition($"batch_id")
-      .write.partitionBy("batch_id").parquet(next.toString)
-    java.nio.file.Files.createFile(next.toPath.resolve("_RETIRE_STAGED"))
-    def rm(f: java.io.File): Unit = {
-      val c = f.listFiles(); if (c != null) c.foreach(rm); f.delete()
+    // roll FORWARD: committed, and batch 0's live partition already
+    // dropped by the crashed promote — the stage is the only full copy
+    // (drop doc_id < 50 from batch 0; batch 1 is untouched)
+    FaultFs.installed(spark) {
+      assert(FaultFs.crashing(FaultFs.PartitionCommit)(c => c.op == "rename" &&
+          c.path.endsWith("_pstage/batch_id=0"))(
+        DedupStream.retireIds(spark, indexPath, retired, "doc_id")))
     }
-    rm(new java.io.File(indexPath, "batch_id=0"))
+    assert(!new java.io.File(indexPath, "batch_id=0").exists())
     // any index load repairs: drive one through a batch processor
     DedupStream.processContainmentBatch(
       docs.filter($"doc_id" === -1), 2L, indexPath, pairsPath,
