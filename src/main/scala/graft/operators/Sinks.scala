@@ -131,12 +131,17 @@ object Sinks {
     * output: entity columns + boolean `removed`) to a snapshot:
     * tombstoned ids are deleted, changed/new entities replace or
     * extend the snapshot. One anti-join on the changed-id set plus a
-    * union — cost scales with the delta, not the table. No broadcast
-    * hint: a routine delta is small and AQE broadcasts it at runtime,
-    * but a delta after long downtime (or an expired delta token) can
-    * approach full-table size, where a forced broadcast would OOM the
-    * driver. Assumes the service coalesces to at most one change per
-    * id per delta round (the documented OData delta contract). */
+    * union. The planner broadcasts the changed ids when their estimated
+    * size is under `spark.sql.autoBroadcastJoinThreshold`: a URL chain
+    * from `ODataPageReader` reports its body bytes as its size, so a
+    * routine delta is broadcast and the snapshot is scanned once,
+    * unshuffled. (Without that estimate the plan is a sort-merge join
+    * that shuffles the whole snapshot; AQE converts it to a broadcast
+    * only after both shuffles have run.) No broadcast hint: a delta
+    * after long downtime (or an expired delta token) can approach
+    * full-table size, where a forced broadcast would OOM the driver.
+    * Assumes the service coalesces to at most one change per id per
+    * delta round (the documented OData delta contract). */
   def applyDelta(snapshot: DataFrame, changes: DataFrame,
       idCol: String): DataFrame = {
     val changedIds = changes.select(col(idCol))

@@ -2,10 +2,16 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
 /** Per-entity transforms (SURVEY.md O10–O13). Pure DataFrame =>
   * DataFrame — every step is a narrow, codegen-friendly projection; no
-  * shuffle is introduced anywhere in the parity path.
+  * shuffle is introduced anywhere in the parity path. Each transform
+  * adds its columns in ONE `withColumns` projection (an ordered map:
+  * new columns append in that order, a replaced one keeps its place),
+  * since every `withColumn` call re-analyzes the whole plan. Every
+  * expression reads the input columns, so the health struct's fields
+  * come from the struct that its `state` replaces.
   */
 object Transforms {
 
@@ -30,16 +36,14 @@ object Transforms {
   def managedDevices(df: DataFrame): DataFrame = {
     val health = col("configurationManagerClientHealthState")
     val top = arrayTop1(col("usersLoggedOn"), "lastLogOnDateTime", "userId")
-    df
-      .withColumn("configurationManagerClientErrorCode",
-        health.getField("errorCode"))
+    df.withColumns(ListMap(
+      "configurationManagerClientErrorCode" -> health.getField("errorCode"),
       // preserved reference typo: lowercase l (MD-SQL:31)
-      .withColumn("configurationManagerClientlastSyncDateTime",
-        health.getField("lastSyncDateTime"))
-      .withColumn("configurationManagerClientHealthState",
-        health.getField("state"))
-      .withColumn("userLoggedOnUserId", top.getField("p"))
-      .withColumn("userLoggedOnLastLogOnDateTime", top.getField("k"))
+      "configurationManagerClientlastSyncDateTime" ->
+        health.getField("lastSyncDateTime"),
+      "configurationManagerClientHealthState" -> health.getField("state"),
+      "userLoggedOnUserId" -> top.getField("p"),
+      "userLoggedOnLastLogOnDateTime" -> top.getField("k")))
       .drop("usersLoggedOn")
   }
 
@@ -52,14 +56,12 @@ object Transforms {
     * semantics for the reference's member-enumeration, SURVEY §1.3);
     * O13 drop actor/resources. */
   def auditEvents(df: DataFrame): DataFrame =
-    df
-      .withColumn("actorApplicationDisplayName",
-        col("actor.applicationDisplayName"))
-      .withColumn("actorUserPrincipalName", col("actor.userPrincipalName"))
+    df.withColumns(ListMap(
+      "actorApplicationDisplayName" -> col("actor.applicationDisplayName"),
+      "actorUserPrincipalName" -> col("actor.userPrincipalName"),
       // empty collection ⇒ NULL (PowerShell member-enumeration over an
       // empty collection yields $null, not an empty string)
-      .withColumn("resourcesDisplayName",
-        when(size(col("resources")) > 0,
-          concat_ws(",", transform(col("resources"), _.getField("displayName")))))
+      "resourcesDisplayName" -> when(size(col("resources")) > 0,
+        concat_ws(",", transform(col("resources"), _.getField("displayName"))))))
       .drop("actor", "resources")
 }

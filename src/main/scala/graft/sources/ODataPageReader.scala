@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, explode}
+import org.apache.spark.sql.graftbridge.StatsBridge
 import org.apache.spark.sql.types._
 
 /** O5/O6 — paginated OData scan over local JSON page fixtures or a
@@ -32,8 +33,8 @@ object ODataPageReader {
   /** One walked page: its path, and — for URL pages only — the body
     * fetched during the walk (a remote page can't be re-read by
     * `spark.read.json(path)`; a local file can, and re-reading keeps
-    * its row data off the driver). */
-  private case class Page(path: String, body: Option[String])
+    * its row data off the driver) with its UTF-8 length. */
+  private case class Page(path: String, body: Option[String], bodyBytes: Long = 0L)
 
   /** Walk the nextLink chain: pages in order, plus the final page's
     * deltaLink (the cursor that lives only on the last page of a delta
@@ -58,7 +59,8 @@ object ODataPageReader {
     def page(path: String, body: String): Page =
       if (!PageCursor.isUrl(path)) Page(path, None)
       else {
-        retained += PageCursor.utf8Length(body)
+        val bytes = PageCursor.utf8Length(body)
+        retained += bytes
         if (retained > urlBodyBudget)
           throw new IllegalStateException(
             s"URL page bodies exceed urlBodyBudgetBytes=$urlBodyBudget " +
@@ -66,7 +68,7 @@ object ODataPageReader {
               "on the driver — read large live chains through the " +
               "graft-odata DSv2 connector instead (executors fetch " +
               "their own pages)")
-        Page(path, Some(body))
+        Page(path, Some(body), bytes)
       }
     val pages = scala.collection.mutable.ArrayBuffer.empty[Page]
     var next: Option[String] = Some(firstPagePath)
@@ -91,9 +93,13 @@ object ODataPageReader {
     * its bodies — one plan however long the chain, parsed by executors
     * (`from_json` over the same Dataset would be folded into the local
     * relation by the optimizer and parsed single-threaded on the
-    * driver). Each file page is its own distributed path read; those
-    * reads are combined with a balanced union, since a left-nested one
-    * builds an O(pages)-deep plan that strains the analyzer. */
+    * driver). That relation reports the run's body bytes as its size,
+    * as the DSv2 connector does, so a join with a small chain (a
+    * routine delta's changed ids) is broadcast at planning time
+    * instead of shuffling the other side. Each file page is its own
+    * distributed path read; those reads are combined with a balanced
+    * union, since a left-nested one builds an O(pages)-deep plan that
+    * strains the analyzer. */
   private def chainDf(spark: SparkSession, pageSchema: StructType,
       pages: Seq[Page]): DataFrame = {
     import spark.implicits._
@@ -104,8 +110,8 @@ object ODataPageReader {
     }
     val raws = runs.flatMap { run =>
       if (run.head.body.isDefined)
-        Seq(spark.read.schema(pageSchema)
-          .json(spark.createDataset(run.flatMap(_.body))))
+        Seq(StatsBridge.withSizeInBytes(spark.read.schema(pageSchema)
+          .json(spark.createDataset(run.flatMap(_.body))), run.map(_.bodyBytes).sum))
       else run.map(p => spark.read.schema(pageSchema)
         .option("multiLine", "true").json(p.path))
     }

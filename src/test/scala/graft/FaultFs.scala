@@ -1,13 +1,15 @@
 package graft
 
+import graft.core.GraftLocalFileSystem
 import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus,
-  LocalFileSystem, Path}
+  Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.SparkSession
 
-/** The local filesystem with scoped call counting and crash injection,
-  * for the crash-consistency and filesystem-cost specs.
+/** The engine's local filesystem ([[GraftLocalFileSystem]], what every
+  * session runs) with scoped call counting and crash injection, for the
+  * crash-consistency and filesystem-cost specs.
   *
   * A call is IN SCOPE when it runs on the thread that armed the
   * filesystem while one of the scope's methods is on that thread's
@@ -18,7 +20,7 @@ import org.apache.spark.sql.SparkSession
   * predicate fails with [[FaultFs.Crash]]. From then on every mutating
   * call on that thread fails too, in scope or not, as if the process
   * had died at that call, until [[FaultFs.disarm]]. */
-class FaultFs extends LocalFileSystem {
+class FaultFs extends GraftLocalFileSystem {
   import FaultFs.call
 
   override def exists(f: Path): Boolean = call("exists", f)(super.exists(f))
@@ -137,16 +139,20 @@ object FaultFs {
   /** Run `body` with every `file:` filesystem the session hands out
     * being a [[FaultFs]] (uncached, so engine code picks it up without
     * a new session); the previous settings are restored after. */
-  def installed[T](spark: SparkSession)(body: => T): T = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val keys = Seq("fs.file.impl" -> classOf[FaultFs].getName,
-      "fs.file.impl.disable.cache" -> "true")
-    val saved = keys.map { case (k, _) => k -> Option(conf.get(k)) }
-    keys.foreach { case (k, v) => conf.set(k, v) }
-    try body
-    finally {
-      disarm()
-      saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+  def installed[T](spark: SparkSession)(body: => T): T =
+    withConf(spark, "fs.file.impl" -> classOf[FaultFs].getName,
+      "fs.file.impl.disable.cache" -> "true") {
+      try body finally disarm()
     }
+
+  /** Run `body` with `settings` in the session's Hadoop configuration,
+    * which the engine's own calls and every Spark job started meanwhile
+    * read; the previous values are restored after. */
+  def withConf[T](spark: SparkSession, settings: (String, String)*)(body: => T): T = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val saved = settings.map { case (k, _) => k -> Option(conf.get(k)) }
+    settings.foreach { case (k, v) => conf.set(k, v) }
+    try body
+    finally saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
   }
 }

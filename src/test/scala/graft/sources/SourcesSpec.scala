@@ -123,6 +123,74 @@ class SourcesSpec extends SparkSpec {
       .select("deviceName").collect().head.getString(0)) // untouched survives
   }
 
+  test("a small URL delta chain is broadcast into applyDelta's anti-join; over the threshold it is not") {
+    import graft.core.EntitySchemas
+    import graft.operators.Sinks
+    import graft.sources.v2.PageFetcher
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      AdaptiveSparkPlanHelper, BroadcastQueryStageExec, ShuffleQueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_bcast")
+    (1 to 500).map(i => (s"id$i", s"CPC-$i")).toDF("id", "displayName")
+      .write.parquet(s"$dir/snap")
+    val snap = spark.read.schema(EntitySchemas.cloudPcSource).parquet(s"$dir/snap")
+    // two delta pages served from memory: ids 1-3 change, 4-5 are tombstoned, 501 is new
+    val pages = Map(
+      "https://svc/d1" -> ("""{"value": [{"id": "id1", "displayName": "new-1"},""" +
+        """{"id": "id2", "displayName": "new-2"}, {"id": "id3", "displayName": "new-3"}],""" +
+        """ "@odata.nextLink": "d2"}"""),
+      "https://svc/d2" -> ("""{"value": [{"id": "id4", "@removed": {"reason": "deleted"}},""" +
+        """{"id": "id5", "@removed": {"reason": "deleted"}},""" +
+        """{"id": "id501", "displayName": "new-501"}],""" +
+        """ "@odata.deltaLink": "https://svc/delta?$deltatoken=t1"}"""))
+    val fetcher = new PageFetcher { override def fetch(path: String): String = pages(path) }
+    val (changes, link) = ODataPageReader.readDeltaPages(spark, "https://svc/d1",
+      EntitySchemas.cloudPcSource, fetcher = fetcher)
+    assert(link.exists(_.endsWith("t1")))
+    def merged = Sinks.applyDelta(snap, changes, "id")
+    def initialPlan(p: SparkPlan) = p match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case other => other
+    }
+    def snapshotShuffled(p: SparkPlan) = p.collect { case s: ShuffleExchangeExec => s }
+      .exists(_.collect { case f: FileSourceScanExec => f }.nonEmpty)
+
+    val m = merged
+    val planned = initialPlan(m.queryExecution.executedPlan)
+    assert(planned.collect { case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j }
+      .size == 1, planned)
+    assert(!snapshotShuffled(planned), planned)
+    val byId = m.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(byId.size == 500 - 2 + 1)
+    assert(byId("id1") == "new-1" && byId("id501") == "new-501" && byId("id6") == "CPC-6")
+    assert(!byId.contains("id4") && !byId.contains("id5"))
+    // the plan AQE ran, through its query stages: one broadcast, no shuffle
+    object Stages extends AdaptiveSparkPlanHelper
+    val ran = m.queryExecution.executedPlan
+    assert(Stages.collect(ran) { case s: ShuffleQueryStageExec => s }.isEmpty, ran)
+    assert(Stages.collect(ran) { case b: BroadcastQueryStageExec => b }.size == 1, ran)
+
+    // the reported size is what the planner weighs: one byte under it, no broadcast
+    val changedIdsSize = m.queryExecution.optimizedPlan
+      .collectFirst { case j: Join => j.right.stats.sizeInBytes }.get
+    val chainBytes = pages.values.map(_.getBytes("UTF-8").length.toLong).sum
+    assert(changedIdsSize > 0 && changedIdsSize <= chainBytes, changedIdsSize)
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, (changedIdsSize - 1).toString)
+    try {
+      val smj = initialPlan(merged.queryExecution.executedPlan)
+      assert(smj.collect { case j: SortMergeJoinExec if j.joinType == LeftAnti => j }
+        .size == 1, smj)
+      assert(smj.collect { case j: BroadcastHashJoinExec => j }.isEmpty, smj)
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("record-level error policy: PERMISSIVE quarantines, DROPMALFORMED skips, FAILFAST throws") {
     // the record-level analog of the reference's entity-level skip
     // policy (O9, MD-PS:151-162): one bad record must not abandon the
