@@ -546,22 +546,24 @@ object AnnStream {
     * any `_mnext`/`_mcen` staging is a pre-commit crash (live tree and
     * model untouched — roll back by dropping it), `_mold` is
     * completed-migration debris, and a leftover `_mcommit.tmp` never
-    * committed. One existence check when no migration ever ran;
-    * every raw-tree entry point runs this (the repairIndexTree
-    * every-load rule) so no reader can pair a promoted tree with the
-    * not-yet-promoted model. */
+    * committed. One listing of the tree's parent directory when no
+    * migration ever ran; every raw-tree entry point runs this (the
+    * repairIndexTree every-load rule) so no reader can pair a promoted
+    * tree with the not-yet-promoted model. */
   private[streaming] def repairMigration(spark: SparkSession,
       indexPath: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(indexPath + "_mcommit"))) {
-      promoteMigration(fs, indexPath); return
-    }
-    Seq("_mcommit.tmp", "_mnext", "_mcen", "_mold", "_mpub").foreach { sfx =>
-      val p = new org.apache.hadoop.fs.Path(indexPath + sfx)
-      if (fs.exists(p) && !fs.delete(p, true))
-        throw new java.io.IOException(s"migrate repair: cannot clear $p")
-    }
+    def at(sfx: String) = new org.apache.hadoop.fs.Path(indexPath + sfx)
+    val marker = at("_mcommit")
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val present =
+      try fs.listStatus(marker.getParent).map(_.getPath.getName).toSet
+      catch { case _: java.io.FileNotFoundException => Set.empty[String] }
+    if (present(marker.getName)) { promoteMigration(fs, indexPath); return }
+    Seq("_mcommit.tmp", "_mnext", "_mcen", "_mold", "_mpub").map(at)
+      .filter(p => present(p.getName)).foreach { p =>
+        if (!fs.delete(p, true))
+          throw new java.io.IOException(s"migrate repair: cannot clear $p")
+      }
   }
 
   /** One micro-batch of the IVF index ingest — exposed for direct

@@ -137,13 +137,12 @@ object DedupStream {
     * r18 advice), then an interrupted partition commit
     * ([[graft.operators.Sinks.repairPartitions]] — a compaction, a
     * retire, or on a cell tree a delta publish or retire). One
-    * existence check each when no maintenance ever ran;
-    * package-visible so [[AnnStream]]'s
+    * parent-directory listing and one existence check when no
+    * maintenance ever ran; package-visible so [[AnnStream]]'s
     * loaders, publishes, serves and trainer apply the same every-load
     * repair rule to the raw ANN tree (its `batch_id=N/cell=M` layout
     * goes through the identical machinery). Dedup signature trees
-    * never migrate — their `_mcommit` probe is a no-op existence
-    * check. */
+    * never migrate — their migration probe finds nothing. */
   private[streaming] def repairIndexTree(spark: SparkSession,
       indexPath: String): Unit = {
     AnnStream.repairMigration(spark, indexPath)

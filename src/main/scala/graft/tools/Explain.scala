@@ -1,8 +1,10 @@
 package graft.tools
 
 import graft.SparkEntry
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.graftbridge.ListenerBusBridge
 import scala.collection.mutable
@@ -14,7 +16,8 @@ import scala.util.control.NonFatal
   * line per Spark job — submit→complete wall, the driver gap since the
   * previous job ended, stage and task counts, call site — and the
   * summed job wall, so "which job is the 2 s" is measured instead of
-  * guessed. Usage:
+  * guessed. It also counts the classes Janino compiled meanwhile and
+  * their compile time. Usage:
   *   runMain graft.tools.Explain <sfDir> <query> [query...]
   */
 object Explain {
@@ -25,10 +28,13 @@ object Explain {
   }
 
   /** One profiled query. `drained` is false when listener delivery
-    * timed out, so `jobs` may miss the tail. */
+    * timed out, so `jobs` may miss the tail. `compiles` and
+    * `compileSec` are the generated classes compiled while it built
+    * and counted (JVM-wide, so the driver's and the local executors')
+    * and their summed compile time. */
   final case class Profile(name: String, plan: String, rows: Long,
       buildSec: Double, totalSec: Double, jobs: Seq[Job],
-      drained: Boolean) {
+      drained: Boolean, compiles: Long, compileSec: Double) {
     def jobWallSec: Double = jobs.map(_.wallSec).sum
   }
 
@@ -92,15 +98,19 @@ object Explain {
     spark.catalog.clearCache()
     sc.addSparkListener(listener)
     try {
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(name)(spark, sfDir)
       val buildSec = (System.nanoTime() - t0) / 1e9
       val rows = df.count()
       val totalSec = (System.nanoTime() - t0) / 1e9
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      val compileSec = (CodeGenerator.compileTime - compileNs0) / 1e9
       val drained = ListenerBusBridge.drain(sc)
       val ran = jobs.synchronized(jobs.values.toSeq.sortBy(_.id))
       Profile(name, df.queryExecution.explainString(FormattedMode), rows,
-        buildSec, totalSec, ran, drained)
+        buildSec, totalSec, ran, drained, compiles, compileSec)
     } finally {
       sc.removeSparkListener(listener)
       spark.catalog.clearCache()
@@ -123,10 +133,15 @@ object Explain {
     }
     Seq(s"===== ${p.name} =====", p.plan,
       f"[${p.name}] rows=${p.rows} build=${p.buildSec}%.2fs " +
-        f"total=${p.totalSec}%.2fs jobs=${p.jobs.size}") ++
+        f"total=${p.totalSec}%.2fs jobs=${p.jobs.size} " +
+        f"compiles=${p.compiles} compile=${p.compileSec}%.2fs") ++
       (if (p.drained) Nil
        else Seq("[explain] CAVEAT: listener bus did not drain; the job " +
          "table may miss the last jobs")) ++
+      (if (p.compiles == 0) Nil
+       else Seq(f"[explain] CAVEAT: ${p.compiles} classes compiled " +
+         f"(${p.compileSec}%.2fs) after the warm-up; the times include " +
+         "that codegen")) ++
       jobLines :+
       f"[${p.name}] sum(job walls)=${p.jobWallSec}%.2fs " +
         f"sum(gaps)=${gaps.sum}%.2fs of ${p.totalSec}%.2fs " +

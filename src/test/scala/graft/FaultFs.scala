@@ -51,9 +51,11 @@ object FaultFs {
 
   private val Mutating = Set("create", "rename", "delete", "mkdirs")
 
-  /** Scopes: the staged partition-replace commit, and its repair. */
+  /** Scopes: the staged partition-replace commit, its repair, and the
+    * capacity migration's repair. */
   val PartitionCommit = Seq(("graft.operators.Sinks$", "commitPartitions"))
   val PartitionRepair = Seq(("graft.operators.Sinks$", "repairPartitions"))
+  val MigrationRepair = Seq(("graft.streaming.AnnStream$", "repairMigration"))
 
   @volatile private var owner: Thread = null
   private var scope: Seq[(String, String)] = Nil

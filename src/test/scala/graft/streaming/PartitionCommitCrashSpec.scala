@@ -191,6 +191,28 @@ class PartitionCommitCrashSpec extends SparkSpec {
     }
   }
 
+  test("exact filesystem cost of a migration repair, clean and with staging debris") {
+    FaultFs.installed(spark) {
+      val idx = Files.createDirectories(tmp("mig_cost").resolve("index"))
+      def repairCost(): Map[String, Int] = {
+        FaultFs.arm(FaultFs.MigrationRepair)(_ => false)
+        try AnnStream.repairMigration(spark, idx.toString)
+        finally FaultFs.disarm()
+        FaultFs.snapshot()
+      }
+      // clean tree: one listing of its parent, nothing else
+      assert(repairCost() == Map("listStatus" -> 1))
+      // no marker: each pre-commit staging path is dropped, the tree kept
+      Files.write(idx.resolveSibling("index_mcommit.tmp"), Array[Byte](1))
+      val dirs = Seq("_mnext", "_mcen", "_mold", "_mpub")
+        .map(sfx => Files.createDirectories(idx.resolveSibling("index" + sfx)))
+      assert(repairCost() == Map("listStatus" -> 1, "delete" -> 5))
+      (idx.resolveSibling("index_mcommit.tmp") +: dirs)
+        .foreach(d => assert(!Files.exists(d), d))
+      assert(Files.isDirectory(idx))
+    }
+  }
+
   test("a committed, unpromoted cell commit never rolls over a republished or dropped serving tree") {
     val base = tmp("pc_mig")
     def paths(d: JPath) = (d.resolve("index").toString,

@@ -21,6 +21,16 @@ class ExplainSpec extends SparkSpec {
     assert(lines.last.contains("sum(job walls)="))
   }
 
+  test("profile: a query profiled again compiles no generated class") {
+    Explain.profile(spark, sf, "q01_filter_project")
+    val again = Explain.profile(spark, sf, "q01_filter_project")
+    assert(again.compiles == 0, again)
+    assert(again.compileSec == 0.0)
+    assert(Explain.report(again).exists(l =>
+      l.startsWith("[q01_filter_project] rows=") && l.contains(" compiles=0 ")))
+    assert(!Explain.report(again).exists(_.contains("classes compiled")))
+  }
+
   test("warm-up runs on a sibling SF directory, never the profiled one") {
     val siblings = Option(new java.io.File(sf).getParentFile.listFiles())
       .getOrElse(Array.empty[java.io.File])
