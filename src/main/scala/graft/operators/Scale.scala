@@ -61,7 +61,7 @@ object Scale {
     * listing cost, per-file task startup, and fragmented row groups
     * all grow with file COUNT, not data volume. The rewrite is a
     * shuffle-free `coalesce` (adjacent files merge within existing
-    * partitions) through the crash-safe rename-aside swap — the read
+    * partitions) through the crash-safe staged swap — the read
     * and write paths overlap, and a complete copy exists on disk at
     * every instant. Sizing uses the directory's real on-disk bytes.
     *

@@ -152,27 +152,20 @@ object Sinks {
 
   /** Overwrite `path` from a DataFrame that may READ `path` (e.g. a
     * merged snapshot), without ever reading and writing it in the same
-    * job: materialize to `_next`, rename the live copy aside to
-    * `_old`, promote, drop `_old` — a complete snapshot exists on
-    * disk at every instant. Recover an interrupted swap with
-    * [[recoverSwap]] before reading. */
+    * job: the new tree is written under [[partitionStage]] and
+    * committed as one move ([[commitStaged]]), so a complete snapshot
+    * exists on disk at every instant (between the set-aside and the
+    * promote rename, in the stage, where the record finishes the move).
+    * Readers run [[recoverSwap]] first; so does this method, since it
+    * reuses the stage. */
   def overwriteViaSwap(spark: SparkSession, df: DataFrame,
       path: String, partitionCols: Seq[String] = Nil): Unit = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val next = new org.apache.hadoop.fs.Path(path + "_next")
-    val old = new org.apache.hadoop.fs.Path(path + "_old")
+    recoverSwap(spark, path)
+    val staged = partitionStage(path) + "/tree"
     val w = df.write.mode(SaveMode.Overwrite)
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(next.toString)
-    if (fs.exists(old) && !fs.delete(old, true))
-      throw new java.io.IOException(s"swap: cannot clear $old")
-    if (fs.exists(hPath) && !fs.rename(hPath, old))
-      throw new java.io.IOException(s"swap: cannot set aside $hPath")
-    if (!fs.rename(next, hPath))
-      throw new java.io.IOException(s"swap: cannot promote $next")
-    fs.delete(old, true) // best-effort; a leftover _old is recoverable state
-    ()
+      .parquet(staged)
+    commitStaged(spark, path, Seq(Move(staged, path)))
   }
 
   /** Keyed MERGE (upsert + tombstone delete) into a hash-bucket-
@@ -214,7 +207,7 @@ object Sinks {
       df.withColumn("bucket", pmod(xxhash64(col(idCol)), lit(buckets.toLong)))
     val upserts = if (hasRemoved) changes.filter(!col("removed")).drop("removed")
       else changes
-    repairPartitions(spark, path)
+    recoverSwap(spark, path)
     if (!fs.exists(hPath) || !hasBucketDirs(fs, hPath)) {
       // absent store, or an empty shell left by a merge that
       // tombstoned every bucket: recreate from scratch. An
@@ -300,104 +293,135 @@ object Sinks {
     fs.listStatus(hPath).exists(s =>
       s.isDirectory && s.getPath.getName.startsWith("bucket="))
 
-  /** Where a caller stages the replacement `<key>=<v>` partition dirs
-    * of `path` for [[commitPartitions]]. The suffix is distinct from
-    * the swap's `_next`/`_old`, a migration's `_m*` and the publish
-    * watermark's `_pubmeta`, so the stages of different protocols on
-    * one tree can never be mistaken for each other. */
+  /** The stage of the tree at `path`: every commit that touches the
+    * tree writes its new copies here — replacement `<key>=<v>` dirs
+    * for [[commitPartitions]], the whole tree for [[overwriteViaSwap]],
+    * a capacity migration's re-shard, model and serving trees — and
+    * the commit record and the set-aside live copies live here too.
+    * One tree has one stage, so [[recoverSwap]] is its one repair. */
   def partitionStage(path: String): String = path + "_pstage"
 
   private val CommitRecord = "_commit"
 
-  /** The staged partition-replace commit: the per-partition form of
-    * the reference's one-transaction `DELETE` + `INSERT`
-    * (MD-SQL:105,113), shared by every tree that rewrites some of its
-    * `<key>=<v>` partition dirs in place — [[bucketedUpsert]], the ANN
-    * cell trees' delta publish and retire, and index compaction and
-    * retirement.
-    *
-    * The caller has written each replacement partition under
-    * [[partitionStage]]; `touched` names every partition the op
-    * replaces, and a touched partition with no staged copy is
-    * dropped. Steps:
-    *  1. commit: the stage's `_commit` record, naming the drops, is
+  /** A step of a commit record ([[commitStaged]]). */
+  private[graft] sealed trait Step
+  /** Replace `live` by the `staged` copy. */
+  private[graft] final case class Move(staged: String, live: String)
+      extends Step
+  /** Delete `live`. */
+  private[graft] final case class Drop(live: String) extends Step
+
+  /** The engine's one commit: the per-tree form of the reference's
+    * one-transaction `DELETE` + `INSERT` (MD-SQL:105,113). The caller
+    * has written every staged copy under [[partitionStage]] of `path`;
+    * `steps` run in order.
+    *  1. commit: the stage's `_commit` record, listing the steps, is
     *     written as a tmp file and renamed into place — that rename is
     *     the commit point, and nothing live changes before it;
-    *  2. promote: each drop is deleted, each staged dir replaces its
-    *     live counterpart (delete live, rename staged in);
-    *  3. the stage is deleted last.
-    * Promote is idempotent (a promoted partition has no staged copy
-    * left, a finished drop is a no-op delete), so [[repairPartitions]]
-    * can replay it after a crash at any step. Single-maintainer: the
-    * caller must not race another writer of the same tree. */
-  def commitPartitions(spark: SparkSession, path: String,
-      touched: Seq[String]): Unit = {
+    *  2. promote: a move renames its live path aside into the stage
+    *     (when there is one) and renames the staged copy in, so the
+    *     live path is missing only between those two renames; a drop
+    *     deletes its live path;
+    *  3. the stage, with every set-aside copy, is deleted last.
+    * Promote is idempotent (a move whose staged copy is gone has
+    * landed, a finished drop is a no-op delete), so [[recoverSwap]]
+    * can replay it after a crash at any step. Record paths are
+    * relative to the stage, so a tree family copied or moved together
+    * keeps a valid record. Single-maintainer: the caller must not race
+    * another writer of the trees the steps name. */
+  private[graft] def commitStaged(spark: SparkSession, path: String,
+      steps: Seq[Step]): Unit = {
     val stage = new org.apache.hadoop.fs.Path(partitionStage(path))
     val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staged = stagedPartitions(fs, stage)
-    val drops = touched.filterNot(staged.contains)
+    def local(p: org.apache.hadoop.fs.Path) =
+      java.nio.file.Paths.get(fs.makeQualified(p).toUri.getPath)
+    def rel(p: String) =
+      local(stage).relativize(local(new org.apache.hadoop.fs.Path(p))).toString
     val tmp = new org.apache.hadoop.fs.Path(stage, CommitRecord + ".tmp")
     val out = fs.create(tmp, true)
-    try out.write(drops.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try out.write(steps.map {
+      case Move(s, l) => s"move\t${rel(s)}\t${rel(l)}"
+      case Drop(l) => s"drop\t${rel(l)}"
+    }.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     if (!fs.rename(tmp, new org.apache.hadoop.fs.Path(stage, CommitRecord)))
-      throw new java.io.IOException(s"partition commit: cannot commit $stage")
-    promotePartitions(fs, path, staged, drops)
+      throw new java.io.IOException(s"commit: cannot commit $stage")
+    promote(fs, stage, steps, fresh = true)
   }
 
-  /** Finish or undo a [[commitPartitions]] interrupted by a crash: a
-    * stage holding its `_commit` record rolls forward, a stage without
-    * one is deleted (nothing live was touched yet). A clean tree costs
-    * one `exists`. Every entry point of a partition-replaced tree runs
-    * this before reading or writing it. */
-  def repairPartitions(spark: SparkSession, path: String): Unit = {
+  /** The staged partition-replace commit: [[commitStaged]] for a tree
+    * that rewrites some of its `<key>=<v>` partition dirs in place —
+    * [[bucketedUpsert]], the ANN cell trees' delta publish and retire,
+    * and index compaction and retirement. The caller has written each
+    * replacement partition under [[partitionStage]]; `touched` names
+    * every partition the op replaces, and a touched partition with no
+    * staged copy is dropped. */
+  def commitPartitions(spark: SparkSession, path: String,
+      touched: Seq[String]): Unit = {
+    val stage = partitionStage(path)
+    val fs = new org.apache.hadoop.fs.Path(stage)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staged = fs.listStatus(new org.apache.hadoop.fs.Path(stage)).toSeq
+      .filter(_.isDirectory).map(_.getPath.getName).filter(_.contains("="))
+    commitStaged(spark, path,
+      touched.filterNot(staged.contains).map(d => Drop(s"$path/$d")) ++
+        staged.map(p => Move(s"$stage/$p", s"$path/$p")))
+  }
+
+  /** The one repair, for every tree and every commit: a stage holding
+    * its `_commit` record rolls forward, a stage without one is deleted
+    * (nothing live was touched yet). A clean tree costs one `exists`.
+    * Every entry point of a committed tree runs this on the tree before
+    * reading or writing it. */
+  def recoverSwap(spark: SparkSession, path: String): Unit = {
     val stage = new org.apache.hadoop.fs.Path(partitionStage(path))
     val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(stage)) return
     val record = new org.apache.hadoop.fs.Path(stage, CommitRecord)
     if (fs.exists(record)) {
       val in = fs.open(record)
-      val drops = try scala.io.Source.fromInputStream(in, "UTF-8")
+      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
         .getLines().filter(_.nonEmpty).toList
       finally in.close()
-      promotePartitions(fs, path, stagedPartitions(fs, stage), drops)
+      def at(rel: String) = new org.apache.hadoop.fs.Path(stage, rel).toString
+      // every commit has a step: an empty record, like an unknown line,
+      // is not this protocol's (an older engine's), so fail loudly
+      // rather than delete a stage it cannot read
+      def unreadable = new java.io.IOException(
+        s"repair: unreadable commit record $record")
+      if (lines.isEmpty) throw unreadable
+      promote(fs, stage, lines.map(_.split('\t') match {
+        case Array("move", s, l) => Move(at(s), at(l))
+        case Array("drop", l) => Drop(at(l))
+        case _ => throw unreadable
+      }), fresh = false)
     } else if (!fs.delete(stage, true))
-      throw new java.io.IOException(s"partition repair: cannot clear $stage")
+      throw new java.io.IOException(s"repair: cannot clear $stage")
   }
 
-  private def stagedPartitions(fs: org.apache.hadoop.fs.FileSystem,
-      stage: org.apache.hadoop.fs.Path): Seq[String] =
-    fs.listStatus(stage).toSeq.filter(_.isDirectory)
-      .map(_.getPath.getName).filter(_.contains("="))
-
-  private def promotePartitions(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, staged: Seq[String], drops: Seq[String]): Unit = {
-    val stage = new org.apache.hadoop.fs.Path(partitionStage(path))
-    def drop(p: org.apache.hadoop.fs.Path): Unit =
-      if (!fs.delete(p, true) && fs.exists(p))
-        throw new java.io.IOException(s"partition commit: cannot drop $p")
-    drops.foreach(d => drop(new org.apache.hadoop.fs.Path(path, d)))
-    staged.foreach { p =>
-      val live = new org.apache.hadoop.fs.Path(path, p)
-      drop(live)
-      if (!fs.rename(new org.apache.hadoop.fs.Path(stage, p), live))
-        throw new java.io.IOException(s"partition commit: cannot promote $p")
+  /** Run a committed record's steps, then delete the stage. `fresh`:
+    * nothing has been promoted yet, so every staged copy is there. */
+  private def promote(fs: org.apache.hadoop.fs.FileSystem,
+      stage: org.apache.hadoop.fs.Path, steps: Seq[Step],
+      fresh: Boolean): Unit = {
+    steps.zipWithIndex.foreach {
+      case (Move(s, l), i) =>
+        val (staged, live) =
+          (new org.apache.hadoop.fs.Path(s), new org.apache.hadoop.fs.Path(l))
+        if (fresh || fs.exists(staged)) {
+          if (fs.exists(live) &&
+              !fs.rename(live, new org.apache.hadoop.fs.Path(stage, s"_aside$i")))
+            throw new java.io.IOException(s"commit: cannot set aside $live")
+          if (!fs.rename(staged, live))
+            throw new java.io.IOException(s"commit: cannot promote $staged")
+        }
+      case (Drop(l), _) =>
+        val live = new org.apache.hadoop.fs.Path(l)
+        if (!fs.delete(live, true) && fs.exists(live))
+          throw new java.io.IOException(s"commit: cannot drop $live")
     }
     if (!fs.delete(stage, true))
-      throw new java.io.IOException(s"partition commit: cannot clear $stage")
-  }
-
-  /** Restore a swap interrupted between set-aside and promote: the
-    * live path is missing but a complete `_old` copy exists. Call
-    * before reading a swap-maintained table. No-op when healthy. */
-  def recoverSwap(spark: SparkSession, path: String): Unit = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(path + "_old")
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath) && fs.exists(old) && !fs.rename(old, hPath))
-      throw new java.io.IOException(
-        s"swap recovery: cannot restore $old to $hPath")
+      throw new java.io.IOException(s"commit: cannot clear $stage")
   }
 
   /** O15 variant — JDBC snapshot: truncate-overwrite into a relational

@@ -1791,7 +1791,7 @@ object TrainingQueries {
     * batches newer than the published watermark into their AFFECTED
     * cells (read delta partitions + affected published cells, both
     * partition-pruned; rewrite exactly those cell dirs through the
-    * per-cell rename-aside protocol; bump the watermark sidecar
+    * staged partition commit; bump the watermark sidecar
     * last). Here: batches 0–1 publish in full, then the delta fold
     * brings in batches 2–3 — and the served answer must be
     * bit-identical to serving the raw tree (s13's oracle), because

@@ -42,16 +42,14 @@ import graft.similarity.Ann
 object AnnStream {
 
   /** Persist trained centroids as `(cell, c)` rows — the model object
-    * (k·dim longs), one file — through the rename-aside swap, so a
+    * (k·dim longs), one file — through the staged swap, so a
     * serve or batch-N replay reading concurrently with a batch-0
     * replay's rewrite always sees a complete model on disk (the same
     * discipline [[publishIndex]] applies to the index tree). */
   def writeCentroids(spark: SparkSession, cents: Seq[Array[Long]],
-      path: String): Unit = {
-    graft.operators.Sinks.recoverSwap(spark, path)
+      path: String): Unit =
     graft.operators.Sinks.overwriteViaSwap(spark,
       centroidsFrame(spark, cents), path)
-  }
 
   /** The ONE serialization of each frozen model — shared by the
     * swap-writing stores AND the migration's direct staging writes, so
@@ -93,8 +91,8 @@ object AnnStream {
     * path and the VALIDATOR is the directory's full file listing
     * (name, mtime, length per file, recursive). Every writer of these
     * stores — [[writeCentroids]]/[[writePqCodebook]]/
-    * [[writePubWatermark]] via the rename-aside swap, and the
-    * migration's staged `_mcen` promote — materializes a NEW directory
+    * [[writePubWatermark]] via the staged swap, and the migration's
+    * staged model move — materializes a NEW directory
     * and renames it in, so any committed change replaces the part-file
     * names (fresh task UUIDs) and the signature cannot collide with
     * the cached one. A hit costs one `listStatus` walk (the same
@@ -199,12 +197,10 @@ object AnnStream {
     else readCentroids(spark, centroidsPath)
   }
 
-  /** Does the raw index tree hold committed data (after rolling any
-    * interrupted maintenance forward)? The batch-0 retrain guard's
-    * second clause. */
+  /** Does the (repaired) raw index tree hold committed data? The
+    * batch-0 retrain guard's second clause. */
   private def committedIndexExists(spark: SparkSession,
       indexPath: String): Boolean = {
-    DedupStream.repairIndexTree(spark, indexPath) // incl. migration repair
     val h = new org.apache.hadoop.fs.Path(indexPath)
     val fs = h.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(h) && DedupStream.hasParquetFiles(fs, h)
@@ -266,19 +262,18 @@ object AnnStream {
     * (path does not exist) rather than silently answering, and the
     * caller's maintenance cadence republishes (the s22 lifecycle).
     *
-    * CRASH SAFETY (a staged commit, like
-    * [[graft.operators.Sinks.commitPartitions]]):
-    * the new tree stages under `<indexPath>_mnext`, the new model
-    * under `<indexPath>_mcen`; the `<indexPath>_mcommit` marker —
-    * written atomically via tmp+rename, carrying the centroids path
-    * and the serving-tree list — is the commit point; then
-    * [[promoteMigration]] swaps tree, model, drops serving trees, and
-    * clears the marker last. [[repairMigration]] (run on entry here
-    * AND by every raw-tree entry point) rolls an interrupted migration
-    * forward (marker present: the staging is complete) or back (no
-    * marker: the live tree and model are untouched). The one
-    * non-atomic window — tree promoted, model not yet — is closed by
-    * the marker: every reader that could pair them repairs first.
+    * CRASH SAFETY: the re-sharded tree, the new model and every
+    * republished serving tree (with its watermark) stage under the raw
+    * tree's stage ([[graft.operators.Sinks.partitionStage]]) and
+    * commit as ONE record ([[graft.operators.Sinks.commitStaged]]) in
+    * this order: the raw tree, the dropped serving trees, each
+    * republished tree followed by its `_pubmeta`, the model last. The
+    * raw tree's repair ([[graft.operators.Sinks.recoverSwap]], run on
+    * entry here AND by every raw-tree entry point) rolls a committed
+    * migration forward and deletes an uncommitted one, so no reader
+    * of the raw tree can pair the promoted tree with the old model; a
+    * serve of a republished tree alone reads its embedded model, and
+    * the external model moves only after every tree did.
     *
     * CONCURRENCY: single-maintainer, like every tree op — run from the
     * stream's own cadence (between micro-batches, where
@@ -294,9 +289,9 @@ object AnnStream {
       servingTrees: Seq[String] = Nil,
       republishPublished: Seq[String] = Nil,
       republishCoded: Seq[CodedRepublish] = Nil): Option[Ann.IvfCapacity] = {
+    import graft.operators.Sinks.{Drop, Move}
     val hPath = new org.apache.hadoop.fs.Path(indexPath)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    DedupStream.repairIndexTree(spark, indexPath) // incl. migration repair
     graft.operators.Sinks.recoverSwap(spark, indexPath)
     if (!centroidsExist(spark, centroidsPath)) return None // no model yet
     if (!fs.exists(hPath) || !DedupStream.hasParquetFiles(fs, hPath))
@@ -309,62 +304,54 @@ object AnnStream {
     try {
       val cents = Ann.portableKmeansCentroidsQuantized(raw, idCol, "q",
         dim, cap.cells, iters, salt)
-      // stage the new model beside the tree (keyed off indexPath so
-      // repair needs no second path) and the re-sharded tree itself
-      import spark.implicits._
-      val mcen = new org.apache.hadoop.fs.Path(indexPath + "_mcen")
-      if (fs.exists(mcen) && !fs.delete(mcen, true))
-        throw new java.io.IOException(s"migrate: cannot clear $mcen")
-      cents.zipWithIndex.map { case (c, j) => (j.toLong, c.toSeq) }
-        .toDF("cell", "c").coalesce(1)
-        .write.parquet(mcen.toString)
+      // everything stages under the raw tree's stage, so the raw
+      // tree's repair finds it with no second path
+      val stage = graft.operators.Sinks.partitionStage(indexPath)
+      val (tree, model) = (s"$stage/tree", s"$stage/model")
+      centroidsFrame(spark, cents).write.parquet(model)
       Ann.portableAssignQuantized(raw.drop("cell"), "q", cents)
         .select(col(idCol), col("q"), col("cell"), col("batch_id"))
         .repartition(col("batch_id"), col("cell"))
         .write.mode(SaveMode.Overwrite).partitionBy("batch_id", "cell")
-        .parquet(indexPath + "_mnext")
+        .parquet(tree)
       // the re-shard is a full rewrite — the one free moment to give
       // EVERY batch partition a stats sidecar (staged with the tree,
       // promoted in the same rename): post-migration, the retire probe,
       // the ingest guard and this trigger's own row count all run from
       // sidecar reads alone
-      StatsSidecar.writeForTree(spark, indexPath + "_mnext",
-        "batch_id=", idCol)
+      StatsSidecar.writeForTree(spark, tree, "batch_id=", idCol)
       // ZERO-OUTAGE REPUBLISH (r18 #1): serving layouts listed for
-      // republish are rebuilt from the STAGED re-sharded tree and
-      // stage under `<indexPath>_mpub/<i>`, each with its geometry
-      // EMBEDDED (`_model`, plus `_codebook` for coded trees — the
-      // codebook retrained from the retained training slice under the
-      // new centroids), so ONE marker commits raw tree + model + every
-      // serving layout together and a serve never sees path-missing —
-      // the reference's atomic snapshot-swap discipline (MD-SQL:105,
-      // 113 — DELETE+INSERT in ONE transaction) extended to the whole
-      // index family. Trees NOT republished keep the r17 invalidate
-      // semantics (deleted loudly; the operator cadence republishes).
-      val mpub = new org.apache.hadoop.fs.Path(indexPath + "_mpub")
-      if (fs.exists(mpub) && !fs.delete(mpub, true))
-        throw new java.io.IOException(s"migrate: cannot clear $mpub")
-      // the staged-tree frame and the watermark are only for the
+      // republish are rebuilt from the STAGED re-sharded tree, each
+      // with its geometry EMBEDDED (`_model`, plus `_codebook` for
+      // coded trees — the codebook retrained from the retained training
+      // slice under the new centroids), so ONE record commits raw tree
+      // + model + every serving layout together and a serve never sees
+      // path-missing — the reference's atomic snapshot-swap discipline
+      // (MD-SQL:105,113 — DELETE+INSERT in ONE transaction) extended to
+      // the whole index family. Trees NOT republished keep the r17
+      // invalidate semantics (deleted loudly; the operator cadence
+      // republishes).
+      //
+      // The staged-tree frame and the watermark are only for the
       // republish stages — the autoCapacity-only deployment skips both
-      // (no schema inference over _mnext, no extra listing). CACHED:
-      // each republish target folds/encodes the full re-shard, and
-      // without pinning, N targets would each rescan the staged tree
-      // (r18 review)
+      // (no schema inference over the staged tree, no extra listing).
+      // CACHED: each republish target folds/encodes the full re-shard,
+      // and without pinning, N targets would each rescan the staged
+      // tree (r18 review)
       val republishing =
         republishPublished.nonEmpty || republishCoded.nonEmpty
-      lazy val stagedTree =
-        spark.read.parquet(indexPath + "_mnext").cache()
+      lazy val stagedTree = spark.read.parquet(tree).cache()
       lazy val maxBatch = listBatchIds(spark, indexPath).max
-      republishPublished.zipWithIndex.foreach { case (_, i) =>
-        val st = s"$mpub/$i"
+      val published = republishPublished.zipWithIndex.map { case (t, i) =>
+        val st = s"$stage/pub$i"
         stagedTree.drop("batch_id").repartition(col("cell"))
           .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(st)
         writeEmbeddedCentroids(spark, cents, st)
-        watermarkFrame(spark, maxBatch).write.parquet(s"$mpub/${i}_pubmeta")
+        watermarkFrame(spark, maxBatch).write.parquet(s"${st}_pubmeta")
+        Seq(Move(st, t), Move(s"${st}_pubmeta", t + "_pubmeta"))
       }
-      republishCoded.zipWithIndex.foreach { case (cr, j) =>
-        val i = republishPublished.length + j
-        val st = s"$mpub/$i"
+      val coded = republishCoded.zipWithIndex.map { case (cr, i) =>
+        val st = s"$stage/pq$i"
         require(cr.m > 0 && dim % cr.m == 0,
           s"migrate: m=${cr.m} must divide dim=$dim")
         val cb = trainPqCodebookFromSliceWith(spark, indexPath, cents,
@@ -382,188 +369,33 @@ object AnnStream {
           .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(st)
         writeEmbeddedCentroids(spark, cents, st)
         codebookFrame(spark, cb).write.parquet(s"$st/$CodebookDir")
+        Move(st, cr.codedPath)
       }
       if (republishing) stagedTree.unpersist()
-      // the commit marker, atomically (tmp + rename): its existence is
-      // the one bit separating roll-back from roll-forward, and its
-      // CONTENT is what lets a repair driven from indexPath alone
-      // finish the model swap, the staged republishes and the
-      // serving-tree invalidation. Format: line 1 the centroids path;
-      // then `drop<TAB>path` (invalidate), `pub<TAB>i<TAB>path`
-      // (promote `_mpub/i` + its watermark), `pqpub<TAB>i<TAB>path`
-      // (promote `_mpub/i`); a tab-free line reads as drop — the r17
-      // marker shape, so an in-flight old-format marker still repairs.
       val dropTrees = servingTrees
         .filterNot(republishPublished.contains)
         .filterNot(t => republishCoded.exists(_.codedPath == t))
-      val lines = centroidsPath +:
-        (dropTrees.map(t => s"drop\t$t") ++
-          republishPublished.zipWithIndex.map { case (t, i) =>
-            s"pub\t$i\t$t" } ++
-          republishCoded.zipWithIndex.map { case (cr, j) =>
-            s"pqpub\t${republishPublished.length + j}\t${cr.codedPath}" })
-      val tmp = new org.apache.hadoop.fs.Path(indexPath + "_mcommit.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(lines.mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      val marker = new org.apache.hadoop.fs.Path(indexPath + "_mcommit")
-      if (!fs.rename(tmp, marker))
-        throw new java.io.IOException(s"migrate: cannot commit $marker")
-      promoteMigration(fs, indexPath)
+      // every serving tree this record replaces or drops is repaired
+      // first: an interrupted cell commit left on it would otherwise
+      // roll its old-geometry cells over the republished tree at a
+      // later entry. A republished tree's parent exists before the
+      // record, so the promote is renames alone
+      val replaced = republishPublished ++ republishCoded.map(_.codedPath)
+      (dropTrees ++ replaced).foreach { t =>
+        graft.operators.Sinks.recoverSwap(spark, t)
+        graft.operators.Sinks.recoverSwap(spark, t + "_pubmeta")
+      }
+      replaced.foreach { t =>
+        val parent = new org.apache.hadoop.fs.Path(t).getParent
+        if (!fs.mkdirs(parent))
+          throw new java.io.IOException(s"migrate: cannot create $parent")
+      }
+      graft.operators.Sinks.commitStaged(spark, indexPath,
+        Seq(Move(tree, indexPath)) ++
+          dropTrees.flatMap(t => Seq(Drop(t), Drop(t + "_pubmeta"))) ++
+          published.flatten ++ coded :+ Move(model, centroidsPath))
       Some(cap)
     } finally raw.unpersist()
-  }
-
-  /** The commit half of [[migrateCapacityIfNeeded]] — also
-    * [[repairMigration]]'s roll-forward. Idempotent mid-crash: each
-    * step checks what still exists (a staged dir already promoted is
-    * gone, so a replay skips it), serving-tree deletion re-runs
-    * harmlessly, and the marker drops last. */
-  private def promoteMigration(fs: org.apache.hadoop.fs.FileSystem,
-      indexPath: String): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(indexPath + "_mcommit")
-    val lines = {
-      val in = fs.open(marker)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    }
-    val cenPath = lines.head
-    // marker grammar (r18): `drop\tpath` | `pub\ti\tpath` |
-    // `pqpub\ti\tpath`; a tab-free line is a drop (the r17 shape)
-    val entries = lines.tail.filter(_.nonEmpty).map { l =>
-      l.split('\t') match {
-        case Array("pub", i, p) => ("pub", i.toInt, p)
-        case Array("pqpub", i, p) => ("pqpub", i.toInt, p)
-        case Array("drop", p) => ("drop", -1, p)
-        case _ => ("drop", -1, l)
-      }
-    }
-    val live = new org.apache.hadoop.fs.Path(indexPath)
-    val mnext = new org.apache.hadoop.fs.Path(indexPath + "_mnext")
-    val mold = new org.apache.hadoop.fs.Path(indexPath + "_mold")
-    val mcen = new org.apache.hadoop.fs.Path(indexPath + "_mcen")
-    val mpub = new org.apache.hadoop.fs.Path(indexPath + "_mpub")
-    if (fs.exists(mnext)) {
-      // _mold here can only be the superseded old tree of THIS
-      // migration (a crash between set-aside and promote) — the staged
-      // tree is the complete new state either way
-      if (fs.exists(mold) && !fs.delete(mold, true))
-        throw new java.io.IOException(s"migrate: cannot clear $mold")
-      if (fs.exists(live) && !fs.rename(live, mold))
-        throw new java.io.IOException(s"migrate: cannot set aside $live")
-      if (!fs.rename(mnext, live))
-        throw new java.io.IOException(s"migrate: cannot promote $mnext")
-    }
-    // REPUBLISHED serving layouts swap in from the `_mpub` staging,
-    // geometry EMBEDDED (`_model`/`_codebook` travel inside the one
-    // rename) — a serve taking only the tree path reads new rows WITH
-    // the new model in the same instant, which is what removes the
-    // loud window the r17 invalidate-only design had. Idempotent
-    // mid-crash: a staged dir already promoted is gone and its steps
-    // skip; the old tree's maintenance debris drops only while the
-    // staged copy still exists (pre-promote).
-    entries.foreach {
-      case ("drop", _, t) =>
-        // invalidate-only trees: geometry under the OLD model — delete
-        // with their sidecars BEFORE the model swap, so every crash
-        // window stays on the designed loud path (tree missing), never
-        // a silent new-model/old-geometry pairing. The operator's
-        // cadence republishes.
-        Seq(t, t + "_pubmeta", graft.operators.Sinks.partitionStage(t),
-          t + "_next", t + "_old", t + "_pubmeta_next",
-          t + "_pubmeta_old").foreach { p =>
-          val hp = new org.apache.hadoop.fs.Path(p)
-          if (fs.exists(hp) && !fs.delete(hp, true))
-            throw new java.io.IOException(s"migrate: cannot invalidate $hp")
-        }
-      case (kind, i, t) =>
-        val staged = new org.apache.hadoop.fs.Path(mpub, i.toString)
-        val hLive = new org.apache.hadoop.fs.Path(t)
-        val gone = new org.apache.hadoop.fs.Path(t + "_mgone")
-        if (fs.exists(staged)) {
-          // the old tree's in-flight maintenance staging is all
-          // old-geometry — clear it (small metadata dirs), set the old
-          // tree itself ASIDE by rename (a recursive delete here would
-          // be O(files) with the live path missing the whole time —
-          // r18 review), and promote in one rename: the live path is
-          // absent only between the two renames
-          (Seq(graft.operators.Sinks.partitionStage(t), t + "_next",
-            t + "_old", t + "_pubmeta_next", t + "_pubmeta_old") ++
-            (if (kind == "pub") Seq(t + "_pubmeta") else Nil)).foreach { p =>
-            val hp = new org.apache.hadoop.fs.Path(p)
-            if (fs.exists(hp) && !fs.delete(hp, true))
-              throw new java.io.IOException(s"migrate: cannot clear $hp")
-          }
-          if (fs.exists(gone) && !fs.delete(gone, true))
-            throw new java.io.IOException(s"migrate: cannot clear $gone")
-          if (fs.exists(hLive) && !fs.rename(hLive, gone))
-            throw new java.io.IOException(s"migrate: cannot set aside $hLive")
-          val parent = hLive.getParent
-          if (parent != null && !fs.exists(parent) && !fs.mkdirs(parent))
-            throw new java.io.IOException(s"migrate: cannot create $parent")
-          if (!fs.rename(staged, hLive))
-            throw new java.io.IOException(s"migrate: cannot promote $staged")
-        }
-        // the set-aside old tree drops only after its staged successor
-        // promoted (staged gone ⇒ the rename landed); a throw keeps
-        // the marker, so a crash anywhere re-enters and finds exactly
-        // the steps left
-        if (fs.exists(gone) && !fs.delete(gone, true))
-          throw new java.io.IOException(s"migrate: cannot drop $gone")
-        if (kind == "pub") {
-          // the watermark sidecar promotes right after its tree; a
-          // crash between the two re-enters here (marker still
-          // present) and finds only this step left
-          val stagedMeta = new org.apache.hadoop.fs.Path(mpub,
-            s"${i}_pubmeta")
-          if (fs.exists(stagedMeta)) {
-            val meta = new org.apache.hadoop.fs.Path(t + "_pubmeta")
-            if (fs.exists(meta) && !fs.delete(meta, true))
-              throw new java.io.IOException(s"migrate: cannot clear $meta")
-            if (!fs.rename(stagedMeta, meta))
-              throw new java.io.IOException(
-                s"migrate: cannot promote $stagedMeta")
-          }
-        }
-    }
-    if (fs.exists(mcen)) {
-      val cen = new org.apache.hadoop.fs.Path(cenPath)
-      if (fs.exists(cen) && !fs.delete(cen, true))
-        throw new java.io.IOException(s"migrate: cannot clear $cen")
-      if (!fs.rename(mcen, cen))
-        throw new java.io.IOException(s"migrate: cannot promote $mcen")
-    }
-    if (!fs.delete(marker, false))
-      throw new java.io.IOException(s"migrate: cannot clear $marker")
-    fs.delete(mold, true) // best-effort; repair clears completed debris
-    fs.delete(mpub, true) // best-effort; now-empty staging shell
-  }
-
-  /** Repair an interrupted [[migrateCapacityIfNeeded]]: the
-    * `_mcommit` marker present means the staging was COMPLETE — roll
-    * forward ([[promoteMigration]] is replay-idempotent). No marker:
-    * any `_mnext`/`_mcen` staging is a pre-commit crash (live tree and
-    * model untouched — roll back by dropping it), `_mold` is
-    * completed-migration debris, and a leftover `_mcommit.tmp` never
-    * committed. One listing of the tree's parent directory when no
-    * migration ever ran; every raw-tree entry point runs this (the
-    * repairIndexTree every-load rule) so no reader can pair a promoted
-    * tree with the not-yet-promoted model. */
-  private[streaming] def repairMigration(spark: SparkSession,
-      indexPath: String): Unit = {
-    def at(sfx: String) = new org.apache.hadoop.fs.Path(indexPath + sfx)
-    val marker = at("_mcommit")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val present =
-      try fs.listStatus(marker.getParent).map(_.getPath.getName).toSet
-      catch { case _: java.io.FileNotFoundException => Set.empty[String] }
-    if (present(marker.getName)) { promoteMigration(fs, indexPath); return }
-    Seq("_mcommit.tmp", "_mnext", "_mcen", "_mold", "_mpub").map(at)
-      .filter(p => present(p.getName)).foreach { p =>
-        if (!fs.delete(p, true))
-          throw new java.io.IOException(s"migrate repair: cannot clear $p")
-      }
   }
 
   /** One micro-batch of the IVF index ingest — exposed for direct
@@ -595,6 +427,14 @@ object AnnStream {
       vecCol: String, dim: Int, cells: Int, iters: Int,
       salt: String, autoCells: Boolean, trainSliceRows: Int): Unit = {
     val spark = batch.sparkSession
+    // the raw tree's repair comes before any read of the tree or the
+    // model: a capacity migration that committed but crashed before
+    // its promote finished supersedes both, and a batch assigned under
+    // the model read before the repair would land old-geometry cells
+    // in the re-sharded tree. A compaction or retire that crashed
+    // mid-promote leaves batch partitions missing until rolled
+    // forward, and the re-sent-id guard would miss their ids
+    graft.operators.Sinks.recoverSwap(spark, indexPath)
     // batch 0 trains unless BOTH a committed model AND a committed
     // index tree exist: a replay of batch 0 with that evidence reads
     // the model instead of retraining. Behavior-identical to the
@@ -675,7 +515,7 @@ object AnnStream {
       batchId: Long, idCol: String, cap: Int): Unit = {
     import graft.corpus.Selection
     val slicePath = indexPath + "_tslice"
-    DedupStream.repairIndexTree(spark, slicePath)
+    graft.operators.Sinks.recoverSwap(spark, slicePath)
     val committed = DedupStream.footerRowCount(spark, slicePath,
       "batch_id=", _ < batchId)
     val remaining = cap - committed
@@ -718,9 +558,13 @@ object AnnStream {
     * [[trainPqCodebook]] contract, with the remedy in the message. */
   def trainPqCodebookFromSlice(spark: SparkSession, indexPath: String,
       centroidsPath: String, m: Int, k: Int, iters: Int = 5,
-      salt: String = "pqres", idCol: String = "vec_id"): Seq[Seq[Seq[Long]]] =
+      salt: String = "pqres", idCol: String = "vec_id"): Seq[Seq[Seq[Long]]] = {
+    // the raw tree's repair finishes an interrupted migration first, so
+    // the codebook trains under the model the tree is sharded by
+    graft.operators.Sinks.recoverSwap(spark, indexPath)
     trainPqCodebookFromSliceWith(spark, indexPath,
       readCentroids(spark, centroidsPath), m, k, iters, salt, idCol)
+  }
 
   /** [[trainPqCodebookFromSlice]] against caller-supplied centroids —
     * the migration's staged-republish path trains against the NEW
@@ -730,7 +574,7 @@ object AnnStream {
       indexPath: String, cents: Seq[Array[Long]], m: Int, k: Int,
       iters: Int, salt: String, idCol: String): Seq[Seq[Seq[Long]]] = {
     val slicePath = indexPath + "_tslice"
-    DedupStream.repairIndexTree(spark, slicePath)
+    graft.operators.Sinks.recoverSwap(spark, slicePath)
     val hSlice = new org.apache.hadoop.fs.Path(slicePath)
     val fs = hSlice.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(hSlice) && DedupStream.hasParquetFiles(fs, hSlice),
@@ -776,12 +620,6 @@ object AnnStream {
   private def committedIds(spark: SparkSession, indexPath: String,
       idCol: String, batch: DataFrame, batchId: Long): DataFrame = {
     val idType = batch.schema(idCol).dataType
-    // every raw-tree read repairs interrupted maintenance first (the
-    // DedupStream every-load rule): a compaction or retire that
-    // crashed mid-promote leaves the tree missing batch partitions
-    // until rolled forward — read without repairing and the re-sent-id
-    // guard misses ids, double-indexing them
-    DedupStream.repairIndexTree(spark, indexPath) // incl. migration repair
     val hPath = new org.apache.hadoop.fs.Path(indexPath)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val emptyIds = spark.createDataFrame(
@@ -842,10 +680,10 @@ object AnnStream {
       idCol: String): Int =
     DedupStream.drainQueue(spark, queueDir, idCol) { ids =>
       rawTrees.foreach { case (tree, pcols) =>
-        // retireIds' own entry repair now rolls an interrupted
-        // capacity migration forward before retiring (the r17
-        // drain-side fix, hoisted into repairIndexTree for EVERY
-        // maintenance entry point — r18 advice): the drain runs ahead
+        // retireIds' own entry repair rolls an interrupted capacity
+        // migration forward before retiring (the r17 drain-side fix,
+        // made the raw tree's one repair for EVERY maintenance entry
+        // point — r18 advice): the drain runs ahead
         // of the batch in ingestBody, and a retire against the
         // superseded live tree would be discarded by the next entry's
         // roll-forward, resurrecting consumed erasure requests
@@ -982,7 +820,7 @@ object AnnStream {
     * the raw tree, so [[ivfServeTopK]] answers match bit-for-bit
     * from either layout (AnnStreamSpec pins both the equality and
     * the per-cell file count). Republish goes through the crash-safe
-    * rename-aside swap ([[graft.operators.Sinks.overwriteViaSwap]])
+    * staged swap ([[graft.operators.Sinks.overwriteViaSwap]])
     * so a complete serving tree exists on disk at every instant.
     *
     * `upToBatch` bounds the fold to `batch_id <= upToBatch` (the
@@ -1002,10 +840,9 @@ object AnnStream {
     // mid-promote compaction/retire crash leaves batch partitions
     // missing, and a publish reading that state would fold (and
     // watermark past) rows it never saw
-    DedupStream.repairIndexTree(spark, indexPath) // incl. migration repair
+    graft.operators.Sinks.recoverSwap(spark, indexPath)
     // a committed cell commit left on the serving tree would otherwise
     // roll its stale cells forward over this republish at a later entry
-    graft.operators.Sinks.repairPartitions(spark, servingPath)
     graft.operators.Sinks.recoverSwap(spark, servingPath)
     val ids = listBatchIds(spark, indexPath)
     val folded = upToBatch.fold(ids)(b => ids.filter(_ <= b))
@@ -1088,10 +925,9 @@ object AnnStream {
   def publishIndexDelta(spark: SparkSession, indexPath: String,
       servingPath: String, idCol: String = "vec_id",
       upToBatch: Option[Long] = None): Unit = {
-    DedupStream.repairIndexTree(spark, indexPath) // the publishIndex rule (incl. migration)
+    graft.operators.Sinks.recoverSwap(spark, indexPath) // the publishIndex rule
     val hServing = new org.apache.hadoop.fs.Path(servingPath)
     val fs = hServing.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.operators.Sinks.repairPartitions(spark, servingPath)
     graft.operators.Sinks.recoverSwap(spark, servingPath)
     graft.operators.Sinks.recoverSwap(spark, servingPath + "_pubmeta")
     // no tree, or a tree without its watermark (a full publish that
@@ -1167,7 +1003,7 @@ object AnnStream {
     * Crash safety: the filtered cells commit through
     * [[graft.operators.Sinks.commitPartitions]]; an interrupted call
     * is repaired by the next entry point's
-    * [[graft.operators.Sinks.repairPartitions]] — every cell-tree
+    * [[graft.operators.Sinks.recoverSwap]] — every cell-tree
     * reader and writer runs it on entry ([[ivfServeTopK]],
     * [[pqServeTopK]], [[publishIndex]], [[publishIndexDelta]], and
     * this method) — and a re-invoked retire is idempotent (the
@@ -1176,7 +1012,6 @@ object AnnStream {
       idCol: String): Unit = {
     val hServing = new org.apache.hadoop.fs.Path(servingPath)
     val fs = hServing.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.operators.Sinks.repairPartitions(spark, servingPath)
     graft.operators.Sinks.recoverSwap(spark, servingPath)
     // no tree, or a tree with zero data files (already fully retired):
     // nothing to remove, and nothing for schema inference to read — a
@@ -1256,10 +1091,9 @@ object AnnStream {
     // would otherwise serve a tree silently missing a whole
     // non-retired cell until the next maintenance op. One existence
     // check per stage when clean.
-    DedupStream.repairIndexTree(spark, indexPath) // incl. migration repair
+    graft.operators.Sinks.recoverSwap(spark, indexPath)
     val hPath = new org.apache.hadoop.fs.Path(indexPath)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.operators.Sinks.recoverSwap(spark, indexPath)
     // a fully-retired tree can exist with zero data files — schema
     // inference would throw; serve it as the empty index it is. A
     // NONEXISTENT path is a misconfiguration and must fail loudly,
@@ -1316,7 +1150,7 @@ object AnnStream {
   def trainPqCodebook(spark: SparkSession, indexPath: String,
       centroidsPath: String, m: Int, k: Int, iters: Int = 5,
       salt: String = "pqres"): Seq[Seq[Seq[Long]]] = {
-    DedupStream.repairIndexTree(spark, indexPath) // every-load repair (incl. migration)
+    graft.operators.Sinks.recoverSwap(spark, indexPath) // every-load repair
     // the training slice is the batch-0 PARTITION, read through
     // partition pruning (`batch_id = 0` on the discovered partition
     // column), not a literal sub-path: once compactIndex folds the
@@ -1348,14 +1182,12 @@ object AnnStream {
   }
 
   /** Persist a trained codebook as `(j, code, c)` rows beside the
-    * centroids (same rename-aside swap — a concurrent reader always
-    * sees a complete model). */
+    * centroids (same staged swap — a concurrent reader always sees a
+    * complete model). */
   def writePqCodebook(spark: SparkSession, cb: Seq[Seq[Seq[Long]]],
-      path: String): Unit = {
-    graft.operators.Sinks.recoverSwap(spark, path)
-    graft.operators.Sinks.overwriteViaSwap(spark,
-      codebookFrame(spark, cb), path)
-  }
+      path: String): Unit =
+    graft.operators.Sinks.overwriteViaSwap(spark, codebookFrame(spark, cb),
+      path)
 
   /** Load the frozen codebook back as the nested literal model. */
   def readPqCodebook(spark: SparkSession, path: String): Seq[Seq[Seq[Long]]] = {
@@ -1383,7 +1215,7 @@ object AnnStream {
     * frozen model by construction, like the batch-0 centroids it sits
     * beside — so the coded tree is a pure function of the raw tree
     * and DuckDB re-derives every code (s17's oracle). One shuffle by cell, one file per inverted list,
-    * republish through the rename-aside swap: exactly
+    * republish through the staged swap: exactly
     * [[publishIndex]]'s lifecycle with an encode in the fold. */
   def publishPqIndex(spark: SparkSession, indexPath: String,
       centroidsPath: String, codedPath: String, idCol: String,
@@ -1406,8 +1238,8 @@ object AnnStream {
   private def publishPqIndexWith(spark: SparkSession, indexPath: String,
       centroidsPath: String, codedPath: String, idCol: String,
       m: Int, k: Int, cbOpt: Option[Seq[Seq[Seq[Long]]]]): Unit = {
-    DedupStream.repairIndexTree(spark, indexPath) // every-load repair (incl. migration)
-    graft.operators.Sinks.repairPartitions(spark, codedPath) // publishIndex rule
+    graft.operators.Sinks.recoverSwap(spark, indexPath) // every-load repair
+    graft.operators.Sinks.recoverSwap(spark, codedPath) // publishIndex rule
     // a fully-retired raw tree keeps its batch_id= dirs but holds zero
     // data files — schema inference would throw, and the correct
     // publish of an EMPTY corpus is an EMPTY coded tree (the
@@ -1419,7 +1251,6 @@ object AnnStream {
     if (idxFs.exists(hIdx) && !DedupStream.hasParquetFiles(idxFs, hIdx)) {
       val hCoded = new org.apache.hadoop.fs.Path(codedPath)
       val cFs = hCoded.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      graft.operators.Sinks.recoverSwap(spark, codedPath)
       if (cFs.exists(hCoded) && DedupStream.hasParquetFiles(cFs, hCoded)) {
         val empty = spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -1437,7 +1268,6 @@ object AnnStream {
       cb.forall(_.forall(_.length == dim / m)),
       s"codebook must be m=$m × k=$k × sub=${dim / m}")
     val centLit = typedLit(cents.map(_.toSeq))
-    graft.operators.Sinks.recoverSwap(spark, codedPath)
     graft.operators.Sinks.overwriteViaSwap(spark,
       spark.read.parquet(indexPath)
         .drop("batch_id")
@@ -1499,7 +1329,6 @@ object AnnStream {
     // missing non-retired cells
     val hCoded = new org.apache.hadoop.fs.Path(codedPath)
     val codedFs = hCoded.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.operators.Sinks.repairPartitions(spark, codedPath)
     graft.operators.Sinks.recoverSwap(spark, codedPath)
     // READ ORDER IS LOAD-BEARING (the ivfServeTopK rule): the coded
     // tree's file listing pins FIRST, geometry second — a migration

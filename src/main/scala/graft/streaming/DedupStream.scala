@@ -73,18 +73,20 @@ object DedupStream {
     * Crash safety: the fold stages as `batch_id=<upToBatch>` (stats
     * sidecar inside) and commits through
     * [[graft.operators.Sinks.commitPartitions]], which drops the
-    * folded source dirs; [[repairIndexTree]] (run on entry here AND by
+    * folded source dirs; the tree's repair
+    * ([[graft.operators.Sinks.recoverSwap]], run on entry here AND by
     * every index load) finishes or undoes an interrupted one. */
   def compactIndex(spark: SparkSession, indexPath: String,
       upToBatch: Long, partitionCols: Seq[String] = Nil,
       idCol: Option[String] = None): Unit = {
     val hPath = new org.apache.hadoop.fs.Path(indexPath)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the full three-repair entry (migration FIRST): compactIndex is a
-    // public quiesced-window API — called directly against a tree whose
-    // migration committed but never promoted, folding the SUPERSEDED
-    // live tree would be discarded by the next entry's roll-forward
-    repairIndexTree(spark, indexPath)
+    // the tree's one repair, which also finishes a capacity migration:
+    // compactIndex is a public quiesced-window API — called directly
+    // against a tree whose migration committed but never promoted,
+    // folding the SUPERSEDED live tree would be discarded by the next
+    // entry's roll-forward
+    graft.operators.Sinks.recoverSwap(spark, indexPath)
     if (!fs.exists(hPath)) return
     val dirs = fs.listStatus(hPath).toSeq
       .filter(_.isDirectory).map(_.getPath)
@@ -124,29 +126,6 @@ object DedupStream {
       spark.read.parquet(next), next, ic))
     graft.operators.Sinks.commitPartitions(spark, indexPath,
       dirs.map(_.getName))
-  }
-
-  /** Repair ALL maintenance stagings of a per-batch index tree — an
-    * interrupted capacity migration ([[AnnStream.repairMigration]] —
-    * FIRST, because a committed-but-unpromoted migration supersedes
-    * the live tree wholesale: compaction/retire repair must run
-    * against the PROMOTED tree, and any op that skipped this would
-    * rewrite the superseded copy only to have the next entry's
-    * roll-forward discard it, resurrecting erased ids — the r17
-    * drain-side bug class, closed here for EVERY entry point per the
-    * r18 advice), then an interrupted partition commit
-    * ([[graft.operators.Sinks.repairPartitions]] — a compaction, a
-    * retire, or on a cell tree a delta publish or retire). One
-    * parent-directory listing and one existence check when no
-    * maintenance ever ran; package-visible so [[AnnStream]]'s
-    * loaders, publishes, serves and trainer apply the same every-load
-    * repair rule to the raw ANN tree (its `batch_id=N/cell=M` layout
-    * goes through the identical machinery). Dedup signature trees
-    * never migrate — their migration probe finds nothing. */
-  private[streaming] def repairIndexTree(spark: SparkSession,
-      indexPath: String): Unit = {
-    AnnStream.repairMigration(spark, indexPath)
-    graft.operators.Sinks.repairPartitions(spark, indexPath)
   }
 
   /** The partitions of a tree that COULD hold any of `ids`, decided
@@ -461,8 +440,9 @@ object DedupStream {
     * through [[graft.operators.Sinks.commitPartitions]] (a fully-
     * retired batch stages as an EMPTY `batch_id=` dir plus its
     * sidecar, so it stays in the tree with no rows);
-    * [[repairIndexTree]] (run on entry here AND by every index load)
-    * finishes or undoes an interrupted one. Like [[compactIndex]],
+    * the tree's repair ([[graft.operators.Sinks.recoverSwap]], run on
+    * entry here AND by every index load) finishes or undoes an
+    * interrupted one. Like [[compactIndex]],
     * the call must not race an in-flight batch or another maintenance
     * op (run it from a quiesced window or between foreachBatch
     * invocations). */
@@ -470,13 +450,14 @@ object DedupStream {
       idCol: String, partitionCols: Seq[String] = Nil): Unit = {
     val hPath = new org.apache.hadoop.fs.Path(treePath)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the full three-repair entry (migration FIRST): retireIds is the
-    // public quiesced-window erasure API — applied to a tree whose
-    // migration committed but never promoted, the retire would rewrite
-    // the SUPERSEDED live copy and the next entry's roll-forward would
-    // promote the staged PRE-retire tree, resurrecting erased ids (the
-    // r17 drain-side bug class at a different entry point — r18 advice)
-    repairIndexTree(spark, treePath)
+    // the tree's one repair, which also finishes a capacity migration:
+    // retireIds is the public quiesced-window erasure API — applied to
+    // a tree whose migration committed but never promoted, the retire
+    // would rewrite the SUPERSEDED live copy and the next entry's
+    // roll-forward would promote the staged PRE-retire tree,
+    // resurrecting erased ids (the r17 drain-side bug class at a
+    // different entry point — r18 advice)
+    graft.operators.Sinks.recoverSwap(spark, treePath)
     // no tree, or a tree with zero data files (every batch dropped or
     // already retired everything): nothing to retire, and nothing for
     // schema inference to read
@@ -620,33 +601,32 @@ object DedupStream {
       .map(s => s.getPath -> scala.util.Try(
         spark.read.parquet(s.getPath.toString)
           .schema.fieldNames.contains(idCol)))
-    probed.collect { case (p, scala.util.Success(false)) => p }
-      .foreach { p =>
-        val bad = new org.apache.hadoop.fs.Path(qPath, "_bad")
-        if (!fs.exists(bad) && !fs.mkdirs(bad))
-          throw new java.io.IOException(s"retire queue: cannot create $bad")
-        val tgt = new org.apache.hadoop.fs.Path(bad, p.getName)
-        if (fs.exists(tgt) && !fs.delete(tgt, false))
-          throw new java.io.IOException(s"retire queue: cannot replace $tgt")
-        if (!fs.rename(p, tgt))
-          throw new java.io.IOException(s"retire queue: cannot quarantine $p")
-      }
+    archive(fs, new org.apache.hadoop.fs.Path(qPath, "_bad"),
+      probed.collect { case (p, scala.util.Success(false)) => p })
     val pending = probed
       .collect { case (p, scala.util.Success(true)) => p }
     if (pending.isEmpty) return 0
     apply(spark.read.parquet(pending.map(_.toString): _*)
       .select(col(idCol)))
-    val done = new org.apache.hadoop.fs.Path(qPath, "_done")
-    if (!fs.exists(done) && !fs.mkdirs(done))
-      throw new java.io.IOException(s"retire queue: cannot create $done")
-    pending.foreach { p =>
-      val tgt = new org.apache.hadoop.fs.Path(done, p.getName)
+    archive(fs, new org.apache.hadoop.fs.Path(qPath, "_done"), pending)
+    pending.size
+  }
+
+  /** Move queue `files` into `dir`, created when missing; a same-named
+    * file already there is replaced (a reused name is a replayed
+    * request, already applied). */
+  private[streaming] def archive(fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path,
+      files: Seq[org.apache.hadoop.fs.Path]): Unit = if (files.nonEmpty) {
+    if (!fs.exists(dir) && !fs.mkdirs(dir))
+      throw new java.io.IOException(s"retire queue: cannot create $dir")
+    files.foreach { p =>
+      val tgt = new org.apache.hadoop.fs.Path(dir, p.getName)
       if (fs.exists(tgt) && !fs.delete(tgt, false))
         throw new java.io.IOException(s"retire queue: cannot replace $tgt")
       if (!fs.rename(p, tgt))
-        throw new java.io.IOException(s"retire queue: cannot archive $p")
+        throw new java.io.IOException(s"retire queue: cannot move $p to $dir")
     }
-    pending.size
   }
 
   /** LIVE view of a pairs report: drop every pair that references a
@@ -727,7 +707,7 @@ object DedupStream {
     import org.apache.spark.sql.types._
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    repairIndexTree(spark, path) // the shared three-repair entry
+    graft.operators.Sinks.recoverSwap(spark, path) // every-load repair
     val schema = StructType(Seq(
       StructField(idCol, idType),
       StructField("shh", ArrayType(LongType)),
@@ -1154,7 +1134,7 @@ object DedupStream {
     import org.apache.spark.sql.types._
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    repairIndexTree(spark, path) // the shared three-repair entry
+    graft.operators.Sinks.recoverSwap(spark, path) // every-load repair
     val schema = StructType(Seq(
       StructField(idCol, idType),
       StructField(vecCol, vecType),
@@ -1203,7 +1183,7 @@ object DedupStream {
     import org.apache.spark.sql.types._
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    repairIndexTree(spark, path) // the shared three-repair entry
+    graft.operators.Sinks.recoverSwap(spark, path) // every-load repair
     val schema = StructType(Seq(
       StructField(idCol, idType),
       StructField("sig", LongType),

@@ -25,9 +25,10 @@ import graft.sources.ODataPageReader
   * names, the natural output of a polling dropper; within a round file
   * order is immaterial (one change per id).
   *
-  * The snapshot rewrite swaps via rename-aside (`_next` written first,
-  * current renamed to `_old`, `_next` promoted, `_old` dropped) so a
-  * crash at any point leaves a complete copy on disk. A table format
+  * The snapshot rewrite is a staged swap ([[Sinks.overwriteViaSwap]]:
+  * the new copy staged first, one commit record, then the live copy
+  * renamed aside and the staged one in) so a crash at any point leaves
+  * a complete copy on disk or a record that finishes the swap. A table format
   * with transactions (Delta/Iceberg) would replace the swap with a
   * MERGE commit; the parquet swap is the same semantics without the
   * format dependency.
@@ -88,7 +89,7 @@ object DeltaStream {
       .start()
 
   /** Current snapshot, RECOVERING from an interrupted swap first
-    * (Sinks.recoverSwap). A missing live path with no `_old` is
+    * (Sinks.recoverSwap). A missing live path after the repair is
     * genuinely the first batch (empty snapshot). */
   private def currentSnapshot(spark: SparkSession, path: String,
       schema: StructType): DataFrame = {

@@ -12,12 +12,13 @@ import org.apache.spark.sql.types.LongType
   *
   * WHY inside the dir, not one manifest per tree: every maintenance op
   * in this engine replaces whole partition directories through staged
-  * renames (compaction's `_cnext` promote, retire's `_rnext` per-dir
-  * swap, migration's `_mnext` tree swap). A sidecar written into the
-  * STAGED dir travels with the rename, so sidecar and data commit in
-  * the same atomic step — there is no window where a tree-level
-  * manifest describes partitions that were already replaced, and no
-  * repair logic beyond what the staged commits already have.
+  * renames (the staged commit's moves: compaction's folded dir,
+  * retire's per-dir copies, a migration's re-sharded tree). A sidecar
+  * written into the STAGED dir travels with the rename, so sidecar and
+  * data commit in the same atomic step — there is no window where a
+  * tree-level manifest describes partitions that were already
+  * replaced, and no repair logic beyond what the staged commits
+  * already have.
   * Underscore-prefixed files are invisible to parquet reads, so the
   * data path is unchanged.
   *

@@ -51,11 +51,11 @@ object FaultFs {
 
   private val Mutating = Set("create", "rename", "delete", "mkdirs")
 
-  /** Scopes: the staged partition-replace commit, its repair, and the
-    * capacity migration's repair. */
+  /** Scopes: the staged commit (every caller's record and promote), the
+    * partition commit (its stage listing too), and the one repair. */
+  val Commit = Seq(("graft.operators.Sinks$", "commitStaged"))
   val PartitionCommit = Seq(("graft.operators.Sinks$", "commitPartitions"))
-  val PartitionRepair = Seq(("graft.operators.Sinks$", "repairPartitions"))
-  val MigrationRepair = Seq(("graft.streaming.AnnStream$", "repairMigration"))
+  val Repair = Seq(("graft.operators.Sinks$", "recoverSwap"))
 
   @volatile private var owner: Thread = null
   private var scope: Seq[(String, String)] = Nil

@@ -786,6 +786,17 @@ class AnnStreamSpec extends SparkSpec {
   /** Deterministic synthetic embedding corpus large enough to cross
     * the capacity rule's 8→16 boundary mid-ingest (the fixture table
     * at this SF holds 500 rows — below the rule's floor forever). */
+  /** Crash the real capacity migration of the raw tree at `idx` at its
+    * first move: the record has committed, nothing is promoted yet. */
+  private def commitUnpromoted(idx: String, cen: String): Unit =
+    graft.FaultFs.installed(spark) {
+      assert(graft.FaultFs.crashing(graft.FaultFs.Commit)(_.n == 3)(
+        AnnStream.migrateCapacityIfNeeded(spark, idx, cen, "vec_id",
+          dim = 64, iters = 2)))
+      assert(new java.io.File(
+        graft.operators.Sinks.partitionStage(idx), "_commit").exists())
+    }
+
   private def synthVecs(n: Int) =
     spark.range(n.toLong).select($"id".as("vec_id"),
       transform(sequence(lit(0), lit(63)), j =>
@@ -842,7 +853,7 @@ class AnnStreamSpec extends SparkSpec {
     // the r18 lead ask: a migration used to DELETE the published/coded
     // trees (serves failed loudly until the operator republished — an
     // availability hole sized by the cadence). Republished layouts now
-    // stage under the migration's own _mcommit with their geometry
+    // commit in the migration's own record with their geometry
     // EMBEDDED, so a serve right after the migration — with NO manual
     // republish — answers under the new model immediately.
     val e = synthVecs(2000).cache()
@@ -971,11 +982,11 @@ class AnnStreamSpec extends SparkSpec {
     // the republish promote sets the old serving tree ASIDE by rename
     // (not an O(files) recursive delete — r18 review), so the one
     // window where the live path is missing is between two renames.
-    // This spec fabricates a crash INSIDE that window — marker
-    // committed, staged copy under _mpub/0, old tree at <pub>_mgone,
-    // live path absent — and asserts any raw-tree entry point's repair
-    // finishes the swap.
-    val e = synthVecs(1000).cache()
+    // This spec crashes the real migration INSIDE that window — record
+    // committed, staged copy still in the stage, old tree set aside
+    // into it, live path absent — and asserts any raw-tree entry
+    // point's repair finishes the swap.
+    val e = synthVecs(1100).cache()
     val idx = tmp("asrw_idx") + "/index"
     val cen = tmp("asrw_cen") + "/centroids"
     (0 until 2).foreach { i =>
@@ -984,24 +995,24 @@ class AnnStreamSpec extends SparkSpec {
         iters = 2)
     }
     val pub = tmp("asrw_pub") + "/serving"
-    val staged2 = tmp("asrw_pub2") + "/serving2"
     AnnStream.publishIndex(spark, idx, pub)
-    AnnStream.publishIndex(spark, idx, staged2) // the staged twin
-    import java.nio.file.{Files, Paths}
-    Files.createDirectories(Paths.get(idx + "_mpub"))
-    Files.move(Paths.get(staged2), Paths.get(idx + "_mpub/0"))
-    Files.move(Paths.get(staged2 + "_pubmeta"),
-      Paths.get(idx + "_mpub/0_pubmeta"))
-    Files.move(Paths.get(pub), Paths.get(pub + "_mgone"))
-    Files.write(Paths.get(idx + "_mcommit"),
-      (cen + "\n" + s"pub\t0\t$pub").getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-    DedupStream.repairIndexTree(spark, idx)
+    val stage = graft.operators.Sinks.partitionStage(idx)
+    graft.FaultFs.installed(spark) {
+      assert(graft.FaultFs.crashing(graft.FaultFs.Commit)(c =>
+          c.op == "rename" && c.path.endsWith("_pstage/pub0"))(
+        AnnStream.migrateCapacityIfNeeded(spark, idx, cen, "vec_id",
+          dim = 64, iters = 2, republishPublished = Seq(pub))))
+    }
+    assert(!new java.io.File(pub).exists(), "not in the rename-aside window")
+    // steps: raw tree, published tree (step 1), its watermark, model
+    assert(new java.io.File(stage, "pub0").exists() &&
+      new java.io.File(stage, "_aside1").exists())
+    graft.operators.Sinks.recoverSwap(spark, idx)
     assert(new java.io.File(pub).exists(), "staged copy did not promote")
-    assert(!new java.io.File(pub + "_mgone").exists(),
+    assert(!new java.io.File(stage, "_aside1").exists(),
       "set-aside old tree not dropped")
-    assert(!new java.io.File(idx + "_mcommit").exists())
-    assert(!new java.io.File(idx + "_mpub").exists())
+    assert(!new java.io.File(stage, "_commit").exists())
+    assert(!new java.io.File(stage).exists())
     // the promoted tree serves, equal to its batch twin
     val queries = e.filter($"vec_id" < 5)
     val served = AnnStream.ivfServeTopK(spark, pub, cen, queries,
@@ -1203,35 +1214,41 @@ class AnnStreamSpec extends SparkSpec {
     val before = spark.read.parquet(idx)
       .select($"vec_id", $"cell".cast("long")).as[(Long, Long)]
       .collect().toMap
-    // pre-commit crash: staging exists, NO marker — roll back (live
+    // pre-commit crash: the real migration staged its tree and model,
+    // then crashed at the commit record's rename — roll back (live
     // tree and model untouched)
-    val mnext = new java.io.File(idx + "_mnext")
-    val mcen = new java.io.File(idx + "_mcen")
-    assert(mnext.mkdirs() && mcen.mkdirs())
+    val stage = new java.io.File(graft.operators.Sinks.partitionStage(idx))
+    graft.FaultFs.installed(spark) {
+      assert(graft.FaultFs.crashing(graft.FaultFs.Commit)(_.n == 2)(
+        AnnStream.migrateCapacityIfNeeded(spark, idx, cen, "vec_id",
+          dim = 64, iters = 2)))
+    }
+    assert(new java.io.File(stage, "tree").exists() &&
+      new java.io.File(stage, "model").exists())
+    assert(AnnStream.readCentroids(spark, cen).length == 8)
     AnnStream.migrateCapacityIfNeeded(spark, idx, cen, "vec_id",
       dim = 64, iters = 2) // entry repair rolls the debris back...
-    assert(!mnext.exists() && !mcen.exists())
+    assert(!stage.exists())
     // ...and then COMMITS the real migration this corpus needs (1500
     // rows under an 8-cell model): verify the post state, then rebuild
     // the PRE state to exercise the roll-FORWARD path below
     assert(AnnStream.readCentroids(spark, cen).length == 16)
-    // roll-forward: fabricate the exact staged state the real
-    // migration commits — staged model + staged re-shard + marker —
-    // and let a SERVE's entry repair finish it
+    // roll-forward: crash the real migration at its first move, just
+    // after the record committed staged model + staged re-shard, and
+    // let a SERVE's entry repair finish it
     val idx2 = tmp("asmc_idx2") + "/index"
     val cen2 = tmp("asmc_cen2") + "/centroids"
     AnnStream.processIvfBatch(e, 0L, idx2, cen2, "vec_id", "embedding",
       dim = 64, cells = 8, iters = 2)
     val cents16 = Ann.portableKmeansCentroids(e, "vec_id", "embedding",
       dim = 64, k = 16, iters = 2)
-    cents16.zipWithIndex.map { case (c, j) => (j.toLong, c.toSeq) }
-      .toDF("cell", "c").coalesce(1).write.parquet(idx2 + "_mcen")
-    Ann.portableAssignWithCentroids(e, "vec_id", "embedding", cents16)
-      .withColumn("batch_id", lit(0L))
-      .repartition($"batch_id", $"cell")
-      .write.partitionBy("batch_id", "cell").parquet(idx2 + "_mnext")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(idx2 + "_mcommit"), cen2)
+    val stage2 = new java.io.File(graft.operators.Sinks.partitionStage(idx2))
+    graft.FaultFs.installed(spark) {
+      assert(graft.FaultFs.crashing(graft.FaultFs.Commit)(_.n == 3)(
+        AnnStream.migrateCapacityIfNeeded(spark, idx2, cen2, "vec_id",
+          dim = 64, iters = 2)))
+    }
+    assert(new java.io.File(stage2, "_commit").exists())
     // any raw-tree entry point repairs: the serve must pair the
     // promoted tree with the promoted model (never mix old/new)
     val served = AnnStream.ivfServeTopK(spark, idx2, cen2,
@@ -1239,8 +1256,8 @@ class AnnStreamSpec extends SparkSpec {
     assert(served.count() == 15)
     assert(AnnStream.readCentroids(spark, cen2).map(_.toSeq)
       == cents16.map(_.toSeq))
-    assert(!new java.io.File(idx2 + "_mcommit").exists())
-    assert(!new java.io.File(idx2 + "_mnext").exists())
+    assert(!new java.io.File(stage2, "_commit").exists())
+    assert(!stage2.exists())
     val stored = spark.read.parquet(idx2)
       .select($"vec_id", $"cell".cast("long")).as[(Long, Long)]
       .collect().toMap
@@ -1336,17 +1353,9 @@ class AnnStreamSpec extends SparkSpec {
     val cen = tmp("asmd_cen") + "/centroids"
     AnnStream.processIvfBatch(e, 0L, idx, cen, "vec_id", "embedding",
       dim = 64, cells = 8, iters = 2)
-    // fabricate the committed-but-unpromoted migration state
     val cents16 = Ann.portableKmeansCentroids(e, "vec_id", "embedding",
       dim = 64, k = 16, iters = 2)
-    cents16.zipWithIndex.map { case (c, j) => (j.toLong, c.toSeq) }
-      .toDF("cell", "c").coalesce(1).write.parquet(idx + "_mcen")
-    Ann.portableAssignWithCentroids(e, "vec_id", "embedding", cents16)
-      .withColumn("batch_id", lit(0L))
-      .repartition($"batch_id", $"cell")
-      .write.partitionBy("batch_id", "cell").parquet(idx + "_mnext")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(idx + "_mcommit"), cen)
+    commitUnpromoted(idx, cen)
     // a pending retire request lands and the drain runs (the
     // ingestBody pre-batch path)
     val queue = tmp("asmd_queue") + "/queue"
@@ -1385,17 +1394,9 @@ class AnnStreamSpec extends SparkSpec {
     val cen = tmp("asmr_cen") + "/centroids"
     AnnStream.processIvfBatch(e, 0L, idx, cen, "vec_id", "embedding",
       dim = 64, cells = 8, iters = 2)
-    // fabricate the committed-but-unpromoted migration state
     val cents16 = Ann.portableKmeansCentroids(e, "vec_id", "embedding",
       dim = 64, k = 16, iters = 2)
-    cents16.zipWithIndex.map { case (c, j) => (j.toLong, c.toSeq) }
-      .toDF("cell", "c").coalesce(1).write.parquet(idx + "_mcen")
-    Ann.portableAssignWithCentroids(e, "vec_id", "embedding", cents16)
-      .withColumn("batch_id", lit(0L))
-      .repartition($"batch_id", $"cell")
-      .write.partitionBy("batch_id", "cell").parquet(idx + "_mnext")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(idx + "_mcommit"), cen)
+    commitUnpromoted(idx, cen)
     // the public erasure API runs DIRECTLY (a quiesced-window operator
     // action) — its entry repair must roll the migration forward first
     val victim = 7L
@@ -1406,20 +1407,13 @@ class AnnStreamSpec extends SparkSpec {
     assert(!ids.contains(victim), "retire applied to the superseded tree")
     assert(AnnStream.readCentroids(spark, cen).map(_.toSeq)
       == cents16.map(_.toSeq), "retireIds entry did not promote the model")
-    // and compactIndex on a SECOND fabricated mid-commit crash: the
-    // fold must run on the promoted tree, not the superseded one
-    val cents32 = Ann.portableKmeansCentroids(e, "vec_id", "embedding",
-      dim = 64, k = 32, iters = 2)
-    cents32.zipWithIndex.map { case (c, j) => (j.toLong, c.toSeq) }
-      .toDF("cell", "c").coalesce(1).write.parquet(idx + "_mcen")
-    Ann.portableAssignWithCentroids(
-        e.filter($"vec_id" =!= victim), "vec_id", "embedding", cents32)
-      .withColumn("batch_id", lit(0L))
-      .repartition($"batch_id", $"cell")
-      .write.partitionBy("batch_id", "cell").parquet(idx + "_mnext")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(idx + "_mcommit"), cen)
-    DedupStream.compactIndex(spark, idx, upToBatch = 0L,
+    // and compactIndex on a SECOND mid-commit crash, of the 16 → 32
+    // migration a corpus past 16²·16 rows needs: the fold must run on
+    // the promoted tree, not the superseded one
+    AnnStream.processIvfBatch(synthVecs(4200).filter($"vec_id" >= 1500),
+      1L, idx, cen, "vec_id", "embedding", dim = 64, cells = 8, iters = 2)
+    commitUnpromoted(idx, cen)
+    DedupStream.compactIndex(spark, idx, upToBatch = 1L,
       partitionCols = Seq("cell"))
     assert(AnnStream.readCentroids(spark, cen).length == 32,
       "compactIndex entry did not promote the model")
@@ -1427,6 +1421,43 @@ class AnnStreamSpec extends SparkSpec {
       .distinct().as[Long].collect()
     assert(cells.forall(_ < 32) && cells.exists(_ >= 16),
       "fold ran against the superseded 16-cell tree")
+  }
+
+  test("capacity migration: an ingest batch after a mid-commit crash is assigned under the promoted model") {
+    // a stream that crashed inside a migration's promote replays its
+    // batch: the batch must be assigned under the model the repaired
+    // tree is sharded by, not the superseded one it could read first
+    val e = synthVecs(1600).cache()
+    val idx = tmp("asmi_idx") + "/index"
+    val cen = tmp("asmi_cen") + "/centroids"
+    AnnStream.processIvfBatch(e.filter($"vec_id" < 1500), 0L, idx, cen,
+      "vec_id", "embedding", dim = 64, cells = 8, iters = 2)
+    commitUnpromoted(idx, cen)
+    AnnStream.processIvfBatch(e.filter($"vec_id" >= 1500), 1L, idx, cen,
+      "vec_id", "embedding", dim = 64, cells = 8, iters = 2)
+    val cents = AnnStream.readCentroids(spark, cen)
+    assert(cents.length == 16)
+    val stored = spark.read.parquet(idx).filter($"batch_id" === 1L)
+      .select($"vec_id", $"cell".cast("long")).as[(Long, Long)]
+      .collect().toMap
+    val expected = Ann.portableAssignWithCentroids(
+        e.filter($"vec_id" >= 1500), "vec_id", "embedding", cents)
+      .select($"vec_id", $"cell").as[(Long, Long)].collect().toMap
+    assert(stored == expected, "batch assigned under the superseded model")
+  }
+
+  test("capacity migration: a slice-trained codebook after a mid-commit crash trains under the promoted model") {
+    val e = synthVecs(1500).cache()
+    val idx = tmp("asmk_idx") + "/index"
+    val cen = tmp("asmk_cen") + "/centroids"
+    AnnStream.processIvfBatch(e, 0L, idx, cen, "vec_id", "embedding",
+      dim = 64, cells = 8, iters = 2, trainSliceRows = 600)
+    commitUnpromoted(idx, cen)
+    def train() = AnnStream.trainPqCodebookFromSlice(spark, idx, cen,
+      m = 8, k = 8, iters = 2)
+    val cb = train()
+    assert(AnnStream.readCentroids(spark, cen).length == 16)
+    assert(cb == train(), "codebook trained under the superseded model")
   }
 
   test("batch-0 retrain guard: a fresh ingest never reuses a stale model from a recycled centroids path") {

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.core.EntitySchemas
+import graft.operators.Sinks
 import graft.queries.ParityQueries.fixtureRoot
 import graft.sources.ODataPageReader
 import java.nio.file.{Files, Paths}
@@ -93,11 +94,18 @@ class DeltaStreamSpec extends SparkSpec {
     val pagesDir = work.resolve("incoming").toString
     Files.createDirectories(Paths.get(pagesDir))
 
-    // simulate the crash window: live copy renamed aside, promote never
-    // happened — only `_old` exists, holding the real snapshot
-    ODataPageReader.readPages(spark,
-        s"$fixtureRoot/managedDevices/page1.json", schema)
-      .write.parquet(snapshotPath + "_old")
+    // the crash window: a swap rewriting the snapshot committed and set
+    // the live copy aside, then crashed before promoting — only the
+    // stage holds the real snapshot
+    val snap = ODataPageReader.readPages(spark,
+      s"$fixtureRoot/managedDevices/page1.json", schema)
+    Sinks.overwriteViaSwap(spark, snap, snapshotPath)
+    graft.FaultFs.installed(spark) {
+      assert(graft.FaultFs.crashing(graft.FaultFs.Commit)(c =>
+          c.op == "rename" && c.path.endsWith("_pstage/tree"))(
+        Sinks.overwriteViaSwap(spark, snap, snapshotPath)))
+    }
+    assert(!Files.exists(Paths.get(snapshotPath)))
 
     Files.copy(Paths.get(s"$fixtureRoot/managedDevicesDelta/page1.json"),
       Paths.get(pagesDir, "page1.json"))
@@ -117,5 +125,6 @@ class DeltaStreamSpec extends SparkSpec {
     assert(byId("11111111") == "DESKTOP-ALPHA-R2")
     assert(!byId.contains("33333333"))
     assert(!Files.exists(Paths.get(snapshotPath + "_old")))
+    assert(!Files.exists(Paths.get(Sinks.partitionStage(snapshotPath))))
   }
 }

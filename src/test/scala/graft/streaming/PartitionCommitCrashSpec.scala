@@ -7,8 +7,10 @@ import org.apache.spark.sql.functions._
 
 /** The staged partition-replace commit ([[Sinks.commitPartitions]]),
   * checked at every crash point through each of its four callers, plus
-  * its exact filesystem cost and a committed stage's fate when a full
-  * publish or a capacity migration replaces or drops its tree.
+  * the exact filesystem cost of each kind of commit (partitions, a
+  * whole tree, a capacity migration) and of a clean-tree repair, and a
+  * committed stage's fate when a full publish or a capacity migration
+  * replaces or drops its tree.
   *
   * For each caller the op runs once uncrashed (the reference), then
   * once per mutating call of the commit on a fresh copy of the same
@@ -75,7 +77,7 @@ class PartitionCommitCrashSpec extends SparkSpec {
       var repairCrashed = n == 2 || n == 3
       while (repairCrashed) {
         val r = FaultFs.copyTree(d)
-        repairCrashed = FaultFs.crashing(FaultFs.PartitionRepair)(_.n == k)(
+        repairCrashed = FaultFs.crashing(FaultFs.Repair)(_.n == k)(
           entry(at(r)))
         if (repairCrashed) {
           entry(at(r))
@@ -108,7 +110,7 @@ class PartitionCommitCrashSpec extends SparkSpec {
     val points = everyCrash(base, "store",
       d => Sinks.bucketedUpsert(spark, changes, d.resolve("store").toString,
         "id", buckets = 4),
-      Sinks.repairPartitions(spark, _))
+      Sinks.recoverSwap(spark, _))
     assert(points == 6) // record create + rename, 1 drop, 1 replace, stage
   }
 
@@ -122,7 +124,7 @@ class PartitionCommitCrashSpec extends SparkSpec {
     val points = everyCrash(base, "serving",
       d => AnnStream.retireIds(spark, d.resolve("serving").toString, ids,
         "vec_id"),
-      Sinks.repairPartitions(spark, _))
+      Sinks.recoverSwap(spark, _))
     assert(points == 6)
   }
 
@@ -133,7 +135,7 @@ class PartitionCommitCrashSpec extends SparkSpec {
       .repartition($"batch_id").write.partitionBy("batch_id").parquet(index)
     val points = everyCrash(base, "index",
       d => DedupStream.compactIndex(spark, d.resolve("index").toString, 2L),
-      DedupStream.repairIndexTree(spark, _))
+      Sinks.recoverSwap(spark, _))
     assert(points == 7) // record create + rename, 2 drops, 1 replace, stage
   }
 
@@ -147,7 +149,7 @@ class PartitionCommitCrashSpec extends SparkSpec {
     val points = everyCrash(base, "index",
       d => DedupStream.retireIds(spark, d.resolve("index").toString, ids,
         "doc_id"),
-      DedupStream.repairIndexTree(spark, _))
+      Sinks.recoverSwap(spark, _))
     assert(points == 7) // record create + rename, 2 replaces, stage
     DedupStream.retireIds(spark, index, ids, "doc_id")
     assert(new java.io.File(index, "batch_id=0").list().toSeq
@@ -172,44 +174,79 @@ class PartitionCommitCrashSpec extends SparkSpec {
         finally FaultFs.disarm()
         FaultFs.snapshot()
       }
-      // k staged partitions replacing live ones, j live ones dropped
+      // k staged partitions replacing live ones, j live ones dropped:
+      // each replaced partition is set aside into the stage and dropped
+      // with it
       for ((k, j) <- Seq((1, 0), (2, 1), (3, 2))) {
         val path = tree(0 until k + j, 0 until k)
         assert(commitCost(path, 0 until k + j) == Map("listStatus" -> 1,
-          "create" -> 1, "rename" -> (k + 1), "delete" -> (j + k + 1)),
-          s"k=$k j=$j")
+          "create" -> 1, "rename" -> (2 * k + 1), "delete" -> (j + 1),
+          "exists" -> k), s"k=$k j=$j")
         assert(state(path)._2 == (0 until k).map(p => s"p=$p").toSet)
       }
-      // a staged partition new to the tree costs one exists more
+      // a staged partition new to the tree has nothing to set aside
       val path = tree(Seq(0), Seq(0, 1))
       assert(commitCost(path, Seq(0, 1)) == Map("listStatus" -> 1,
-        "create" -> 1, "rename" -> 3, "delete" -> 3, "exists" -> 1))
+        "create" -> 1, "rename" -> 4, "delete" -> 1, "exists" -> 2))
       // clean-tree repair: one exists, nothing else
-      FaultFs.arm(FaultFs.PartitionRepair)(_ => false)
-      try Sinks.repairPartitions(spark, path) finally FaultFs.disarm()
+      FaultFs.arm(FaultFs.Repair)(_ => false)
+      try Sinks.recoverSwap(spark, path) finally FaultFs.disarm()
       assert(FaultFs.snapshot() == Map("exists" -> 1))
     }
   }
 
-  test("exact filesystem cost of a migration repair, clean and with staging debris") {
+  test("exact filesystem cost of each whole-tree and migration commit") {
     FaultFs.installed(spark) {
-      val idx = Files.createDirectories(tmp("mig_cost").resolve("index"))
-      def repairCost(): Map[String, Int] = {
-        FaultFs.arm(FaultFs.MigrationRepair)(_ => false)
-        try AnnStream.repairMigration(spark, idx.toString)
-        finally FaultFs.disarm()
+      def cost(scope: Seq[(String, String)])(op: => Unit): Map[String, Int] = {
+        FaultFs.arm(scope)(_ => false)
+        try op finally FaultFs.disarm()
         FaultFs.snapshot()
       }
-      // clean tree: one listing of its parent, nothing else
-      assert(repairCost() == Map("listStatus" -> 1))
-      // no marker: each pre-commit staging path is dropped, the tree kept
-      Files.write(idx.resolveSibling("index_mcommit.tmp"), Array[Byte](1))
-      val dirs = Seq("_mnext", "_mcen", "_mold", "_mpub")
-        .map(sfx => Files.createDirectories(idx.resolveSibling("index" + sfx)))
-      assert(repairCost() == Map("listStatus" -> 1, "delete" -> 5))
-      (idx.resolveSibling("index_mcommit.tmp") +: dirs)
-        .foreach(d => assert(!Files.exists(d), d))
-      assert(Files.isDirectory(idx))
+      // a whole tree through overwriteViaSwap: its entry repair (one
+      // exists) and one move, as a first write and as a replacement
+      val snap = tmp("pc_swap").resolve("snap").toString
+      val swap = cost(FaultFs.Commit ++ FaultFs.Repair)(_)
+      def write(v: Long) = Sinks.overwriteViaSwap(spark,
+        Seq((1L, v)).toDF("id", "v"), snap)
+      assert(swap(write(1L)) == Map("exists" -> 2, "create" -> 1,
+        "rename" -> 2, "delete" -> 1))
+      assert(swap(write(2L)) == Map("exists" -> 2, "create" -> 1,
+        "rename" -> 3, "delete" -> 1))
+      assert(spark.read.parquet(snap).as[(Long, Long)].collect().toSeq ==
+        Seq((1L, 2L)))
+      // one migration commit per shape (AnnCrashSpec's fixture): each
+      // move costs an exists and two renames (set-aside, promote), each
+      // drop a delete (and an exists when there was nothing to delete),
+      // plus the record and the stage delete
+      val base = AnnCrashSpec.fixture(spark, tmp("pc_mig_cost"))
+      for ((shape, want) <- Seq(
+          AnnCrashSpec.DropOnly -> Map("create" -> 1, "rename" -> 5,
+            "exists" -> 3, "delete" -> 5),
+          AnnCrashSpec.Published -> Map("create" -> 1, "rename" -> 9,
+            "exists" -> 4, "delete" -> 1),
+          AnnCrashSpec.Coded -> Map("create" -> 1, "rename" -> 7,
+            "exists" -> 3, "delete" -> 1))) {
+        val d = FaultFs.copyTree(base)
+        assert(cost(FaultFs.Commit)(
+          assert(AnnCrashSpec.migrate(spark, d, shape).isDefined)) == want,
+          shape)
+      }
+    }
+  }
+
+  test("a commit record in another format fails the repair and keeps the stage") {
+    // an older engine's record: bare partition names, or none at all
+    for (record <- Seq("p=1", "")) {
+      val root = tmp("pc_foreign").resolve("t")
+      Files.write(Files.createDirectories(root.resolve("p=0")).resolve("f"),
+        Array[Byte](1))
+      val stage = Files.createDirectories(root.resolveSibling("t_pstage"))
+      Files.write(Files.createDirectories(stage.resolve("p=0")).resolve("f"),
+        Array[Byte](2))
+      Files.write(stage.resolve("_commit"), record.getBytes("UTF-8"))
+      intercept[java.io.IOException](Sinks.recoverSwap(spark, root.toString))
+      assert(Files.exists(stage.resolve("p=0/f")) &&
+        Files.exists(root.resolve("p=0/f")), record)
     }
   }
 
@@ -244,7 +281,7 @@ class PartitionCommitCrashSpec extends SparkSpec {
     val p = FaultFs.copyTree(base)
     val (pIdx, _, pPub) = paths(p)
     AnnStream.publishIndex(spark, pIdx, pPub)
-    Sinks.repairPartitions(spark, pPub)
+    Sinks.recoverSwap(spark, pPub)
     assert(cells(pPub) == cells(pIdx))
 
     // republished by a migration: the tree is exactly the re-sharded
@@ -254,7 +291,7 @@ class PartitionCommitCrashSpec extends SparkSpec {
     assert(AnnStream.migrateCapacityIfNeeded(spark, rIdx, rCen, "vec_id",
       dim = 64, iters = 2, republishPublished = Seq(rPub))
       .exists(_.cells == 16))
-    Sinks.repairPartitions(spark, rPub)
+    Sinks.recoverSwap(spark, rPub)
     assert(cells(rPub) == cells(rIdx))
     assert(!new java.io.File(rPub + "_pstage").exists())
 
@@ -263,7 +300,7 @@ class PartitionCommitCrashSpec extends SparkSpec {
     val (dIdx, dCen, dPub) = paths(d)
     assert(AnnStream.migrateCapacityIfNeeded(spark, dIdx, dCen, "vec_id",
       dim = 64, iters = 2, servingTrees = Seq(dPub)).exists(_.cells == 16))
-    Sinks.repairPartitions(spark, dPub)
+    Sinks.recoverSwap(spark, dPub)
     assert(!new java.io.File(dPub).exists())
     assert(!new java.io.File(dPub + "_pstage").exists())
   }
