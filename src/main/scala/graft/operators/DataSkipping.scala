@@ -57,7 +57,8 @@ object DataSkipping {
   /** The stats rows — one per partition, collected for driver-side
     * skip decisions (bounded by partition count, never row data). */
   private def stats(s: SparkSession, statsDir: String): Array[Row] =
-    s.read.parquet(statsDir).collect()
+    Sinks.readTree(s, statsDir).getOrElse(throw new java.io
+      .FileNotFoundException(s"no skip stats at $statsDir")).collect()
 
   private def prunedRead(s: SparkSession, layoutDir: String,
       keep: Seq[java.sql.Date]): DataFrame =
@@ -143,7 +144,7 @@ object DataSkipping {
       ThetaFunctions.thetaSketch(col(spec.keyCol)).as("key_theta")).head()
     val existing: Option[Row] =
       if (!mergeExisting) None
-      else scala.util.Try(s.read.parquet(spec.statsDir)).toOption
+      else Sinks.readTree(s, spec.statsDir)
         .flatMap(_.filter(col("load_date") === lit(loadDate))
           .collect().headOption)
     // Spark's ordering puts NaN above every double: combine extremes
@@ -194,7 +195,7 @@ object DataSkipping {
       m != null && !m.asInstanceOf[Double].isNaN &&
         m.asInstanceOf[Double] < threshold
     }.map(_.getAs[java.sql.Date]("load_date")).toSeq
-    val base = s.read.parquet(dataPath)
+    val base = retentionStore(s, dataPath)
     val pruned = if (skip.isEmpty) base
       else base.filter(!col("load_date").isInCollection(skip))
     pruned.filter(col(spec.valueCol) >= threshold)
@@ -219,13 +220,16 @@ object DataSkipping {
       val t = r.getAs[Array[Byte]]("key_theta")
       t != null && !mayContain(t)
     }.map(_.getAs[java.sql.Date]("load_date")).toSeq
-    val base = s.read.parquet(dataPath)
+    val base = retentionStore(s, dataPath)
     val pruned = if (skip.isEmpty) base
       else base.filter(!col("load_date").isInCollection(skip))
     pruned.filter(col(spec.keyCol) === lit(key))
   }
 
   private def statRows(s: SparkSession, statsDir: String): Array[Row] =
-    scala.util.Try(s.read.parquet(statsDir)).toOption
-      .map(_.collect()).getOrElse(Array.empty)
+    Sinks.readTree(s, statsDir).map(_.collect()).getOrElse(Array.empty)
+
+  private def retentionStore(s: SparkSession, dataPath: String): DataFrame =
+    Sinks.readTree(s, dataPath).getOrElse(throw new java.io
+      .FileNotFoundException(s"no retention data at $dataPath"))
 }

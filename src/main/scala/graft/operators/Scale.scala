@@ -76,13 +76,14 @@ object Scale {
   def compactFiles(spark: SparkSession, path: String,
       targetBytes: Long = 128L << 20): Int = {
     require(targetBytes > 0, "targetBytes must be positive")
-    Sinks.recoverSwap(spark, path) // the table may be mid-swap from a crash
+    // the table may be mid-swap from a crash; a table without data
+    // files has nothing to merge
+    val table = Sinks.openTree(spark, path).getOrElse(return 0)
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = fs.getContentSummary(hPath).getLength
     val parts = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    Sinks.overwriteViaSwap(spark,
-      spark.read.parquet(path).coalesce(parts), path)
+    Sinks.overwriteViaSwap(spark, table.coalesce(parts), path)
     fs.listStatus(hPath)
       .count(_.getPath.getName.endsWith(".parquet"))
   }

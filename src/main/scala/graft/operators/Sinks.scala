@@ -1,8 +1,14 @@
 package graft.operators
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import java.sql.Timestamp
 
 /** Sinks (SURVEY.md O15–O18).
@@ -79,7 +85,7 @@ object Sinks {
     * retention window. Surviving data is never read or rewritten. */
   private def dropExpired(spark: SparkSession, path: String,
       loadTime: Timestamp, maxAgeDays: Int): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
+    val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // partition names come from lit(loadTime).cast("date"), which
     // evaluates in the SESSION timezone — derive the cutoff in the
@@ -200,26 +206,27 @@ object Sinks {
   def bucketedUpsert(spark: SparkSession, changes: DataFrame, path: String,
       idCol: String, buckets: Int): Unit = {
     require(buckets > 0, "buckets must be positive")
-    val hPath = new org.apache.hadoop.fs.Path(path)
+    val hPath = new Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val hasRemoved = changes.columns.contains("removed")
     def withBucket(df: DataFrame) =
       df.withColumn("bucket", pmod(xxhash64(col(idCol)), lit(buckets.toLong)))
     val upserts = if (hasRemoved) changes.filter(!col("removed")).drop("removed")
       else changes
-    recoverSwap(spark, path)
-    if (!fs.exists(hPath) || !hasBucketDirs(fs, hPath)) {
-      // absent store, or an empty shell left by a merge that
-      // tombstoned every bucket: recreate from scratch. An
-      // all-tombstone change set must not write a footerless empty
-      // directory (which would brick reads) — leave the path absent
-      if (fs.exists(hPath) && !fs.delete(hPath, true))
-        throw new java.io.IOException(s"upsert: cannot clear empty shell $hPath")
-      if (upserts.isEmpty) return
-      withBucket(upserts).write.mode(SaveMode.Overwrite)
-        .partitionBy("bucket").parquet(path)
-      writeBucketMeta(fs, path, buckets)
-      return
+    val live = openTree(spark, path) match {
+      case Some(df) => df
+      case None =>
+        // absent store, or an empty shell left by a merge that
+        // tombstoned every bucket: recreate from scratch. An
+        // all-tombstone change set must not write a footerless empty
+        // directory (which would brick reads) — leave the path absent
+        if (fs.exists(hPath) && !fs.delete(hPath, true))
+          throw new java.io.IOException(s"upsert: cannot clear empty shell $hPath")
+        if (upserts.isEmpty) return
+        withBucket(upserts).write.mode(SaveMode.Overwrite)
+          .partitionBy("bucket").parquet(path)
+        writeBucketMeta(fs, path, buckets)
+        return
     }
     readBucketMeta(fs, path) match {
       case Some(n) => require(n == buckets,
@@ -241,7 +248,7 @@ object Sinks {
       val touched = ch.select("bucket").distinct()
         .collect().map(_.getLong(0)).sorted // bounded: <= `buckets` values
       if (touched.isEmpty) return
-      val existing = spark.read.parquet(path)
+      val existing = live
         .filter(col("bucket").isin(touched: _*)) // partition-pruned scan
       val changedIds = ch.select(col(idCol))
       existing.join(changedIds, Seq(idCol), "left_anti")
@@ -258,17 +265,14 @@ object Sinks {
     } finally ch.unpersist()
   }
 
-  private def bucketMetaPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_graft_buckets")
+  private def bucketMetaPath(path: String) = new Path(path, "_graft_buckets")
 
-  private def writeBucketMeta(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, buckets: Int): Unit = {
+  private def writeBucketMeta(fs: FileSystem, path: String, buckets: Int): Unit = {
     val out = fs.create(bucketMetaPath(path), true)
     try out.write(buckets.toString.getBytes("UTF-8")) finally out.close()
   }
 
-  private def readBucketMeta(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Option[Int] = {
+  private def readBucketMeta(fs: FileSystem, path: String): Option[Int] = {
     val p = bucketMetaPath(path)
     if (!fs.exists(p)) None
     else {
@@ -288,8 +292,7 @@ object Sinks {
     }
   }
 
-  private def hasBucketDirs(fs: org.apache.hadoop.fs.FileSystem,
-      hPath: org.apache.hadoop.fs.Path): Boolean =
+  private def hasBucketDirs(fs: FileSystem, hPath: Path): Boolean =
     fs.listStatus(hPath).exists(s =>
       s.isDirectory && s.getPath.getName.startsWith("bucket="))
 
@@ -331,20 +334,20 @@ object Sinks {
     * another writer of the trees the steps name. */
   private[graft] def commitStaged(spark: SparkSession, path: String,
       steps: Seq[Step]): Unit = {
-    val stage = new org.apache.hadoop.fs.Path(partitionStage(path))
+    val stage = new Path(partitionStage(path))
     val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def local(p: org.apache.hadoop.fs.Path) =
+    def local(p: Path) =
       java.nio.file.Paths.get(fs.makeQualified(p).toUri.getPath)
     def rel(p: String) =
-      local(stage).relativize(local(new org.apache.hadoop.fs.Path(p))).toString
-    val tmp = new org.apache.hadoop.fs.Path(stage, CommitRecord + ".tmp")
+      local(stage).relativize(local(new Path(p))).toString
+    val tmp = new Path(stage, CommitRecord + ".tmp")
     val out = fs.create(tmp, true)
     try out.write(steps.map {
       case Move(s, l) => s"move\t${rel(s)}\t${rel(l)}"
       case Drop(l) => s"drop\t${rel(l)}"
     }.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    if (!fs.rename(tmp, new org.apache.hadoop.fs.Path(stage, CommitRecord)))
+    if (!fs.rename(tmp, new Path(stage, CommitRecord)))
       throw new java.io.IOException(s"commit: cannot commit $stage")
     promote(fs, stage, steps, fresh = true)
   }
@@ -359,9 +362,8 @@ object Sinks {
   def commitPartitions(spark: SparkSession, path: String,
       touched: Seq[String]): Unit = {
     val stage = partitionStage(path)
-    val fs = new org.apache.hadoop.fs.Path(stage)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staged = fs.listStatus(new org.apache.hadoop.fs.Path(stage)).toSeq
+    val fs = new Path(stage).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staged = fs.listStatus(new Path(stage)).toSeq
       .filter(_.isDirectory).map(_.getPath.getName).filter(_.contains("="))
     commitStaged(spark, path,
       touched.filterNot(staged.contains).map(d => Drop(s"$path/$d")) ++
@@ -374,16 +376,16 @@ object Sinks {
     * Every entry point of a committed tree runs this on the tree before
     * reading or writing it. */
   def recoverSwap(spark: SparkSession, path: String): Unit = {
-    val stage = new org.apache.hadoop.fs.Path(partitionStage(path))
+    val stage = new Path(partitionStage(path))
     val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(stage)) return
-    val record = new org.apache.hadoop.fs.Path(stage, CommitRecord)
+    val record = new Path(stage, CommitRecord)
     if (fs.exists(record)) {
       val in = fs.open(record)
       val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
         .getLines().filter(_.nonEmpty).toList
       finally in.close()
-      def at(rel: String) = new org.apache.hadoop.fs.Path(stage, rel).toString
+      def at(rel: String) = new Path(stage, rel).toString
       // every commit has a step: an empty record, like an unknown line,
       // is not this protocol's (an older engine's), so fail loudly
       // rather than delete a stage it cannot read
@@ -401,28 +403,83 @@ object Sinks {
 
   /** Run a committed record's steps, then delete the stage. `fresh`:
     * nothing has been promoted yet, so every staged copy is there. */
-  private def promote(fs: org.apache.hadoop.fs.FileSystem,
-      stage: org.apache.hadoop.fs.Path, steps: Seq[Step],
+  private def promote(fs: FileSystem, stage: Path, steps: Seq[Step],
       fresh: Boolean): Unit = {
     steps.zipWithIndex.foreach {
       case (Move(s, l), i) =>
-        val (staged, live) =
-          (new org.apache.hadoop.fs.Path(s), new org.apache.hadoop.fs.Path(l))
+        val (staged, live) = (new Path(s), new Path(l))
         if (fresh || fs.exists(staged)) {
           if (fs.exists(live) &&
-              !fs.rename(live, new org.apache.hadoop.fs.Path(stage, s"_aside$i")))
+              !fs.rename(live, new Path(stage, s"_aside$i")))
             throw new java.io.IOException(s"commit: cannot set aside $live")
           if (!fs.rename(staged, live))
             throw new java.io.IOException(s"commit: cannot promote $staged")
         }
       case (Drop(l), _) =>
-        val live = new org.apache.hadoop.fs.Path(l)
+        val live = new Path(l)
         if (!fs.delete(live, true) && fs.exists(live))
           throw new java.io.IOException(s"commit: cannot drop $live")
     }
     if (!fs.delete(stage, true))
       throw new java.io.IOException(s"commit: cannot clear $stage")
   }
+
+  /** Open the engine tree at `path`: its one repair ([[recoverSwap]]),
+    * then [[readTree]]. None for a tree with no data file. */
+  def openTree(spark: SparkSession, path: String): Option[DataFrame] = {
+    recoverSwap(spark, path)
+    readTree(spark, path)
+  }
+
+  /** [[openTree]] without the repair, for a repaired or staged tree. */
+  def readTree(spark: SparkSession, path: String): Option[DataFrame] =
+    treeSchema(spark, path).map(spark.read.schema(_).parquet(path))
+
+  /** The schema Spark infers for the tree at `path`, read on the driver
+    * from its first visible data file's footer with Spark's own
+    * conversion (its row metadata wins, as in inference): no inference
+    * job. The partition columns on that file's path are left out, so
+    * Spark still infers them and their types from the directory names;
+    * a read of some partitions (`basePath`) takes its schema from here
+    * too. None for a tree with no data file. */
+  def treeSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val root = new Path(path)
+    firstDataFile(root.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      root).map { case (file, parts) =>
+      StructType(fileSchema(spark, file).filterNot(f => parts.contains(f.name)))
+    }
+  }
+
+  /** The Spark schema of one parquet file, from its footer. */
+  def fileSchema(spark: SparkSession, file: FileStatus): StructType = {
+    val in = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration))
+    val footer = try in.getFooter finally in.close()
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
+  /** Does the tree at `p` hold a visible data file? Partition dirs can
+    * be empty (a batch that dropped everything, a fully retired one). */
+  def hasDataFile(fs: FileSystem, p: Path): Boolean =
+    firstDataFile(fs, p).isDefined
+
+  /** The first visible data file under `dir` (none when `dir` is
+    * absent), with the partition columns its path names. Hidden entries
+    * (`_` or `.`) are skipped as the parquet reader skips them: an
+    * embedded `_model` or `_codebook` dir is not the tree's data. */
+  private def firstDataFile(fs: FileSystem, dir: Path,
+      parts: List[String] = Nil): Option[(FileStatus, List[String])] =
+    (try fs.listStatus(dir)
+      catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] })
+      .iterator.flatMap { s =>
+        val n = s.getPath.getName
+        if (n.startsWith("_") || n.startsWith(".")) None
+        else if (s.isDirectory) firstDataFile(fs, s.getPath,
+          if (n.contains("=")) n.takeWhile(_ != '=') :: parts else parts)
+        else if (n.endsWith(".parquet")) Some((s, parts))
+        else None
+      }.nextOption()
 
   /** O15 variant — JDBC snapshot: truncate-overwrite into a relational
     * store, the closest analog of the reference's TVP+sproc load

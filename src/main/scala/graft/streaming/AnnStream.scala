@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
+import graft.core.SmallParquet
+import graft.operators.Sinks
 import graft.similarity.Ann
 
 /** Streaming ingest for the ANN serving index: embedding files landing
@@ -42,114 +44,68 @@ import graft.similarity.Ann
 object AnnStream {
 
   /** Persist trained centroids as `(cell, c)` rows — the model object
-    * (k·dim longs), one file — through the staged swap, so a
-    * serve or batch-N replay reading concurrently with a batch-0
-    * replay's rewrite always sees a complete model on disk (the same
-    * discipline [[publishIndex]] applies to the index tree). */
+    * (k·dim longs), one file — through the staged commit, so a
+    * concurrent serve or replay always sees a complete model on disk. */
   def writeCentroids(spark: SparkSession, cents: Seq[Array[Long]],
-      path: String): Unit =
-    graft.operators.Sinks.overwriteViaSwap(spark,
-      centroidsFrame(spark, cents), path)
-
-  /** The ONE serialization of each frozen model — shared by the
-    * swap-writing stores AND the migration's direct staging writes, so
-    * a format change cannot drift the two apart and leave embedded
-    * geometry unreadable only on migrated trees (r18 review). */
-  private def centroidsFrame(spark: SparkSession,
-      cents: Seq[Array[Long]]): DataFrame = {
-    import spark.implicits._
-    cents.zipWithIndex.map { case (c, j) => (j.toLong, c.toSeq) }
-      .toDF("cell", "c").coalesce(1)
+      path: String): Unit = {
+    Sinks.recoverSwap(spark, path)
+    commitSmall(spark, path, CentroidsSchema, centroidRows(cents))
   }
 
-  private def codebookFrame(spark: SparkSession,
-      cb: Seq[Seq[Seq[Long]]]): DataFrame = {
-    import spark.implicits._
+  /** The columns a one-partition Spark write of each model leaves, as
+    * external readers and models written before the driver codec have
+    * them: centroids, a PQ codebook, a publish watermark. */
+  private val CentroidsSchema = StructType(Seq(
+    StructField("cell", LongType, nullable = false),
+    StructField("c", ArrayType(LongType, containsNull = false))))
+  private val CodebookSchema = StructType(Seq(
+    StructField("j", IntegerType, nullable = false),
+    StructField("code", IntegerType, nullable = false),
+    StructField("c", ArrayType(LongType, containsNull = false))))
+  private val WatermarkSchema =
+    StructType(Seq(StructField("last_batch", LongType, nullable = false)))
+
+  private def centroidRows(cents: Seq[Array[Long]]): Seq[Seq[Any]] =
+    cents.zipWithIndex.map { case (c, j) => Seq(j.toLong, c.toSeq) }
+
+  private def centroidsOf(rows: Seq[Map[String, Any]]): Seq[Array[Long]] =
+    rows.sortBy(_("cell").asInstanceOf[Long])
+      .map(_("c").asInstanceOf[Seq[Long]].toArray)
+
+  private def codebookRows(cb: Seq[Seq[Seq[Long]]]): Seq[Seq[Any]] =
     cb.zipWithIndex.flatMap { case (codes, j) =>
-      codes.zipWithIndex.map { case (c, code) => (j, code, c) }
-    }.toDF("j", "code", "c").coalesce(1)
-  }
-
-  private def watermarkFrame(spark: SparkSession,
-      batchId: Long): DataFrame = {
-    import spark.implicits._
-    Seq(batchId).toDF("last_batch").coalesce(1)
-  }
-
-  /** Metadata-validated read-through cache for the frozen MODEL loads
-    * (centroids, PQ codebooks, publish watermarks) — r18 optimization.
-    *
-    * Why: every model load is a full Spark query (plan + job +
-    * collect, ~0.1 s of almost pure driver/scheduler overhead for a
-    * KB-sized artifact), and the serving lifecycle re-loads the same
-    * frozen model once per micro-batch and once per serve — at any
-    * scale the load cost is fixed overhead, never data. A real serving
-    * tier pins its model in memory and validates staleness against the
-    * store; this is that, scoped to one JVM.
-    *
-    * Why it can never serve stale geometry: the cache key is the store
-    * path and the VALIDATOR is the directory's full file listing
-    * (name, mtime, length per file, recursive). Every writer of these
-    * stores — [[writeCentroids]]/[[writePqCodebook]]/
-    * [[writePubWatermark]] via the staged swap, and the migration's
-    * staged model move — materializes a NEW directory
-    * and renames it in, so any committed change replaces the part-file
-    * names (fresh task UUIDs) and the signature cannot collide with
-    * the cached one. A hit costs one `listStatus` walk (the same
-    * metadata touch the parquet read itself would start with); a miss
-    * or an unreadable path falls through to the normal load (which
-    * throws exactly as before). Values are model-sized (KBs); the map
-    * is LRU-bounded so a months-long stream cannot accumulate entries.
-    * This never caches QUERY results — only the frozen model artifacts
-    * the engine itself wrote. */
-  private val modelCacheMax = 64
-  private val modelCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, (Seq[(String, Long, Long)], Any)](
-      16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (Seq[(String, Long, Long)], Any)])
-          : Boolean = size() > modelCacheMax
-    })
-
-  private def dirSignature(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Option[Seq[(String, Long, Long)]] =
-    scala.util.Try {
-      def walk(d: org.apache.hadoop.fs.Path): Seq[(String, Long, Long)] =
-        fs.listStatus(d).toSeq.flatMap { s =>
-          if (s.isDirectory) walk(s.getPath)
-          else Seq((s.getPath.toString, s.getModificationTime, s.getLen))
-        }
-      walk(p).sortBy(_._1)
-    }.toOption
-
-  private def cachedModelRead[T](spark: SparkSession, path: String)
-      (load: => T): T = {
-    val h = new org.apache.hadoop.fs.Path(path)
-    val fs = h.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    dirSignature(fs, h) match {
-      case None => load // missing/unreadable: the normal path decides
-      case Some(sig) =>
-        val hit = modelCache.get(path)
-        if (hit != null && hit._1 == sig) hit._2.asInstanceOf[T]
-        else { val v = load; modelCache.put(path, (sig, v)); v }
+      codes.zipWithIndex.map { case (c, code) => Seq(j, code, c) }
     }
+
+  private def codebookOf(rows: Seq[Map[String, Any]]): Seq[Seq[Seq[Long]]] = {
+    val byKey = rows.map(r => (r("j").asInstanceOf[Int],
+      r("code").asInstanceOf[Int]) -> r("c").asInstanceOf[Seq[Long]]).toMap
+    val m = byKey.keys.map(_._1).max + 1
+    val k = byKey.keys.map(_._2).max + 1
+    (0 until m).map(j => (0 until k).map(c => byKey((j, c)).toSeq))
   }
 
-  /** Load frozen centroids back as the literal model object (repairing
-    * a crashed swap first — recoverable state, the bucketedUpsert
-    * read-path pattern). Cached via [[cachedModelRead]]; the cached
-    * arrays are defensively cloned per call so no caller can alias
-    * another's model. */
-  def readCentroids(spark: SparkSession, path: String): Seq[Array[Long]] = {
-    graft.operators.Sinks.recoverSwap(spark, path)
-    cachedModelRead[Seq[Array[Long]]](spark, path) {
-      spark.read.parquet(path)
-        .orderBy("cell")
-        .select("c")
-        .collect()
-        .map(_.getSeq[Long](0).toArray)
-        .toSeq
-    }.map(_.clone())
+  /** Commit a small artifact as the tree at `path`, which the caller
+    * has repaired: the file ([[SmallParquet]], written on the driver)
+    * stages under the tree's stage and one move commits it. */
+  private def commitSmall(spark: SparkSession, path: String,
+      schema: StructType, rows: Seq[Seq[Any]]): Unit = {
+    val staged = Sinks.partitionStage(path) + "/tree"
+    SmallParquet.write(spark, staged, schema, rows)
+    Sinks.commitStaged(spark, path, Seq(Sinks.Move(staged, path)))
+  }
+
+  /** Load frozen centroids back as the literal model object: one repair
+    * (a crashed commit rolls forward or back first), one file read. */
+  def readCentroids(spark: SparkSession, path: String): Seq[Array[Long]] =
+    loadCentroids(spark, path).getOrElse(
+      throw new java.io.FileNotFoundException(s"no centroid model at $path"))
+
+  /** [[readCentroids]]; None when `path` holds no committed model. */
+  private def loadCentroids(spark: SparkSession,
+      path: String): Option[Seq[Array[Long]]] = {
+    Sinks.recoverSwap(spark, path)
+    SmallParquet.read(spark, path).map(centroidsOf)
   }
 
   /** EMBEDDED GEOMETRY (round-18 verdict #1 — zero-outage migration):
@@ -179,42 +135,13 @@ object AnnStream {
   final case class CodedRepublish(codedPath: String, m: Int, k: Int,
       iters: Int = 5, salt: String = "pqres")
 
-  /** Write `cents` as an embedded model into a (staged) tree dir. */
-  private def writeEmbeddedCentroids(spark: SparkSession,
-      cents: Seq[Array[Long]], treePath: String): Unit =
-    centroidsFrame(spark, cents)
-      .write.mode(SaveMode.Overwrite).parquet(s"$treePath/$ModelDir")
-
   /** The model a serve of `treePath` must rank under: the embedded
-    * copy when the tree carries one (committed atomically with the
-    * rows it describes), the external store otherwise. */
+    * copy (part of the tree, so read directly with no repair of its
+    * own) when the tree carries one, the external store otherwise. */
   private def readServingCentroids(spark: SparkSession, treePath: String,
-      centroidsPath: String): Seq[Array[Long]] = {
-    val h = new org.apache.hadoop.fs.Path(treePath, ModelDir)
-    val fs = h.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(h) && DedupStream.hasParquetFiles(fs, h))
-      readCentroids(spark, h.toString)
-    else readCentroids(spark, centroidsPath)
-  }
-
-  /** Does the (repaired) raw index tree hold committed data? The
-    * batch-0 retrain guard's second clause. */
-  private def committedIndexExists(spark: SparkSession,
-      indexPath: String): Boolean = {
-    val h = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = h.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(h) && DedupStream.hasParquetFiles(fs, h)
-  }
-
-  /** Is a complete centroid model committed at `path`? (Repairs a
-    * crashed swap first; a dir with zero data files — debris of a
-    * crashed first write — does not count.) */
-  private def centroidsExist(spark: SparkSession, path: String): Boolean = {
-    graft.operators.Sinks.recoverSwap(spark, path)
-    val h = new org.apache.hadoop.fs.Path(path)
-    val fs = h.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(h) && DedupStream.hasParquetFiles(fs, h)
-  }
+      centroidsPath: String): Seq[Array[Long]] =
+    SmallParquet.read(spark, s"$treePath/$ModelDir").map(centroidsOf)
+      .getOrElse(readCentroids(spark, centroidsPath))
 
   /** CAPACITY MIGRATION — the growth half of the capacity rule
     * ([[Ann.ivfCapacityForCorpus]]; s21 is the bootstrap half): when
@@ -289,26 +216,27 @@ object AnnStream {
       servingTrees: Seq[String] = Nil,
       republishPublished: Seq[String] = Nil,
       republishCoded: Seq[CodedRepublish] = Nil): Option[Ann.IvfCapacity] = {
-    import graft.operators.Sinks.{Drop, Move}
-    val hPath = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.operators.Sinks.recoverSwap(spark, indexPath)
-    if (!centroidsExist(spark, centroidsPath)) return None // no model yet
-    if (!fs.exists(hPath) || !DedupStream.hasParquetFiles(fs, hPath))
-      return None // nothing committed (or fully retired)
-    val cur = readCentroids(spark, centroidsPath).length
+    import Sinks.{Drop, Move}
+    val fs = new org.apache.hadoop.fs.Path(indexPath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Sinks.recoverSwap(spark, indexPath)
+    val cur = loadCentroids(spark, centroidsPath)
+      .getOrElse(return None).length // no model yet
     val n = DedupStream.footerRowCount(spark, indexPath, "batch_id=")
     val cap = Ann.ivfCapacityForCorpus(n)
     if (cap.cells <= cur) return None // rule satisfied; never shrink
-    val raw = spark.read.parquet(indexPath).cache()
+    val rawSchema = Sinks.treeSchema(spark, indexPath)
+      .getOrElse(return None) // nothing committed (or fully retired)
+    val raw = spark.read.schema(rawSchema).parquet(indexPath).cache()
     try {
       val cents = Ann.portableKmeansCentroidsQuantized(raw, idCol, "q",
         dim, cap.cells, iters, salt)
       // everything stages under the raw tree's stage, so the raw
       // tree's repair finds it with no second path
-      val stage = graft.operators.Sinks.partitionStage(indexPath)
+      val stage = Sinks.partitionStage(indexPath)
       val (tree, model) = (s"$stage/tree", s"$stage/model")
-      centroidsFrame(spark, cents).write.parquet(model)
+      val centRows = centroidRows(cents)
+      SmallParquet.write(spark, model, CentroidsSchema, centRows)
       Ann.portableAssignQuantized(raw.drop("cell"), "q", cents)
         .select(col(idCol), col("q"), col("cell"), col("batch_id"))
         .repartition(col("batch_id"), col("cell"))
@@ -334,20 +262,21 @@ object AnnStream {
       //
       // The staged-tree frame and the watermark are only for the
       // republish stages — the autoCapacity-only deployment skips both
-      // (no schema inference over the staged tree, no extra listing).
-      // CACHED: each republish target folds/encodes the full re-shard,
-      // and without pinning, N targets would each rescan the staged
-      // tree (r18 review)
+      // (no extra listing). The staged tree's data columns are the raw
+      // tree's. CACHED: each republish target folds/encodes the full
+      // re-shard, and without pinning, N targets would each rescan the
+      // staged tree (r18 review)
       val republishing =
         republishPublished.nonEmpty || republishCoded.nonEmpty
-      lazy val stagedTree = spark.read.parquet(tree).cache()
+      lazy val stagedTree = spark.read.schema(rawSchema).parquet(tree).cache()
       lazy val maxBatch = listBatchIds(spark, indexPath).max
       val published = republishPublished.zipWithIndex.map { case (t, i) =>
         val st = s"$stage/pub$i"
         stagedTree.drop("batch_id").repartition(col("cell"))
           .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(st)
-        writeEmbeddedCentroids(spark, cents, st)
-        watermarkFrame(spark, maxBatch).write.parquet(s"${st}_pubmeta")
+        SmallParquet.write(spark, s"$st/$ModelDir", CentroidsSchema, centRows)
+        SmallParquet.write(spark, s"${st}_pubmeta", WatermarkSchema,
+          Seq(Seq(maxBatch)))
         Seq(Move(st, t), Move(s"${st}_pubmeta", t + "_pubmeta"))
       }
       val coded = republishCoded.zipWithIndex.map { case (cr, i) =>
@@ -367,8 +296,9 @@ object AnnStream {
             col("cell"))
           .repartition(col("cell"))
           .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(st)
-        writeEmbeddedCentroids(spark, cents, st)
-        codebookFrame(spark, cb).write.parquet(s"$st/$CodebookDir")
+        SmallParquet.write(spark, s"$st/$ModelDir", CentroidsSchema, centRows)
+        SmallParquet.write(spark, s"$st/$CodebookDir", CodebookSchema,
+          codebookRows(cb))
         Move(st, cr.codedPath)
       }
       if (republishing) stagedTree.unpersist()
@@ -382,15 +312,15 @@ object AnnStream {
       // record, so the promote is renames alone
       val replaced = republishPublished ++ republishCoded.map(_.codedPath)
       (dropTrees ++ replaced).foreach { t =>
-        graft.operators.Sinks.recoverSwap(spark, t)
-        graft.operators.Sinks.recoverSwap(spark, t + "_pubmeta")
+        Sinks.recoverSwap(spark, t)
+        Sinks.recoverSwap(spark, t + "_pubmeta")
       }
       replaced.foreach { t =>
         val parent = new org.apache.hadoop.fs.Path(t).getParent
         if (!fs.mkdirs(parent))
           throw new java.io.IOException(s"migrate: cannot create $parent")
       }
-      graft.operators.Sinks.commitStaged(spark, indexPath,
+      Sinks.commitStaged(spark, indexPath,
         Seq(Move(tree, indexPath)) ++
           dropTrees.flatMap(t => Seq(Drop(t), Drop(t + "_pubmeta"))) ++
           published.flatten ++ coded :+ Move(model, centroidsPath))
@@ -434,7 +364,7 @@ object AnnStream {
     // in the re-sharded tree. A compaction or retire that crashed
     // mid-promote leaves batch partitions missing until rolled
     // forward, and the re-sent-id guard would miss their ids
-    graft.operators.Sinks.recoverSwap(spark, indexPath)
+    Sinks.recoverSwap(spark, indexPath)
     // batch 0 trains unless BOTH a committed model AND a committed
     // index tree exist: a replay of batch 0 with that evidence reads
     // the model instead of retraining. Behavior-identical to the
@@ -449,9 +379,14 @@ object AnnStream {
     // centroids path: there the tree is absent and batch 0 retrains,
     // never silently assigning a new corpus under stale centroids
     // (r17 review).
-    val cents =
-      if (batchId == 0L && !(centroidsExist(spark, centroidsPath) &&
-          committedIndexExists(spark, indexPath))) {
+    val hIdx = new org.apache.hadoop.fs.Path(indexPath)
+    def committedIndex = batchId > 0L || Sinks.hasDataFile(
+      hIdx.getFileSystem(spark.sparkContext.hadoopConfiguration), hIdx)
+    val cents = loadCentroids(spark, centroidsPath) match {
+      case Some(c) if committedIndex => c
+      case None if batchId > 0L => throw new java.io.FileNotFoundException(
+        s"no centroid model at $centroidsPath for batch $batchId")
+      case _ =>
         val k =
           if (autoCells)
             Ann.ivfCapacityForCorpus(batch.dropDuplicates(idCol).count())
@@ -459,9 +394,9 @@ object AnnStream {
           else cells
         val c = Ann.portableKmeansCentroids(batch, idCol, vecCol, dim,
           k, iters, salt)
-        writeCentroids(spark, c, centroidsPath)
+        commitSmall(spark, centroidsPath, CentroidsSchema, centroidRows(c))
         c
-      } else readCentroids(spark, centroidsPath)
+    }
     // ingest contract: ids identify vectors — a row re-sent under an
     // already-indexed id (across OR within a batch) is the same
     // vector, not a new one, and a duplicate index row would shift
@@ -515,30 +450,29 @@ object AnnStream {
       batchId: Long, idCol: String, cap: Int): Unit = {
     import graft.corpus.Selection
     val slicePath = indexPath + "_tslice"
-    graft.operators.Sinks.recoverSwap(spark, slicePath)
+    Sinks.recoverSwap(spark, slicePath)
     val committed = DedupStream.footerRowCount(spark, slicePath,
       "batch_id=", _ < batchId)
     val remaining = cap - committed
     val staged = new org.apache.hadoop.fs.Path(s"$slicePath/batch_id=$batchId")
     val fs = staged.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hBatch = new org.apache.hadoop.fs.Path(s"$indexPath/batch_id=$batchId")
-    if (remaining <= 0L ||
-        !fs.exists(hBatch) || !DedupStream.hasParquetFiles(fs, hBatch)) {
+    val contribution = if (remaining <= 0L) None
+      else Sinks.readTree(spark, s"$indexPath/batch_id=$batchId")
+    if (contribution.isEmpty) {
       // Two empty-contribution cases, same disposition. (a) cap already
       // met by the committed prefix: a batch_id=batchId dir can only be
       // a crashed attempt from a run whose prefix was smaller (retires
       // shrank it since). (b) the batch committed NO data files — every
       // row was an already-indexed re-send (the committedIds guard) or
-      // the batch was empty; partitionBy writes only _SUCCESS then, and
-      // reading it back would throw schema inference (a stream-killer —
-      // r18 review). Either way the batch's slice contribution is
+      // the batch was empty; partitionBy writes only _SUCCESS then.
+      // Either way the batch's slice contribution is
       // empty: clear any crashed staged contribution so the slice stays
       // a deterministic function of the committed state.
       if (fs.exists(staged) && !fs.delete(staged, true))
         throw new java.io.IOException(s"train slice: cannot clear $staged")
       return
     }
-    spark.read.parquet(s"$indexPath/batch_id=$batchId")
+    contribution.get
       .select(col(idCol), col("q"))
       .orderBy(Selection.hashValue(Selection.saltedKey(col(idCol),
         "tslice")), col(idCol))
@@ -561,7 +495,7 @@ object AnnStream {
       salt: String = "pqres", idCol: String = "vec_id"): Seq[Seq[Seq[Long]]] = {
     // the raw tree's repair finishes an interrupted migration first, so
     // the codebook trains under the model the tree is sharded by
-    graft.operators.Sinks.recoverSwap(spark, indexPath)
+    Sinks.recoverSwap(spark, indexPath)
     trainPqCodebookFromSliceWith(spark, indexPath,
       readCentroids(spark, centroidsPath), m, k, iters, salt, idCol)
   }
@@ -574,10 +508,8 @@ object AnnStream {
       indexPath: String, cents: Seq[Array[Long]], m: Int, k: Int,
       iters: Int, salt: String, idCol: String): Seq[Seq[Seq[Long]]] = {
     val slicePath = indexPath + "_tslice"
-    graft.operators.Sinks.recoverSwap(spark, slicePath)
-    val hSlice = new org.apache.hadoop.fs.Path(slicePath)
-    val fs = hSlice.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(hSlice) && DedupStream.hasParquetFiles(fs, hSlice),
+    val slice = Sinks.openTree(spark, slicePath)
+    require(slice.isDefined,
       s"trainPqCodebookFromSlice: no retained training slice at " +
         s"$slicePath — run the ingest with trainSliceRows > 0 (the " +
         "autoCapacity × compactEvery codebook story), or train from " +
@@ -585,7 +517,7 @@ object AnnStream {
     val dim = cents.head.length
     val centLit = typedLit(cents.map(_.toSeq))
     val resid = Ann.portableAssignQuantized(
-        spark.read.parquet(slicePath).select(col(idCol), col("q")),
+        slice.get.select(col(idCol), col("q")),
         "q", cents)
       .withColumn("r", zip_with(col("q"),
         element_at(centLit, (col("cell") + 1).cast(IntegerType)),
@@ -640,26 +572,22 @@ object AnnStream {
         Some(if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1))))
       case _ => None // non-integral ids: stats do not apply
     }
-    hull match {
-      case None => // full guard scan (pre-round-16 behavior)
-        spark.read.schema(schema).parquet(indexPath)
-          .filter(col("batch_id") < batchId)
-          .select(col(idCol))
-      case Some(None) => emptyIds // empty batch: nothing can collide
+    // the candidate prior batches; None for the full guard scan (non-
+    // integral ids, or an unparseable partition dir)
+    val cands = hull match {
+      case None => None
+      case Some(None) => Some(Nil) // empty batch: nothing can collide
       case Some(Some((mn, mx))) =>
         DedupStream.footerCandidateParts(spark, indexPath,
           "batch_id=", idCol, _ < batchId)((bmn, bmx) =>
-          bmn <= mx && mn <= bmx) match {
-          case None => // unparseable partition dir: unpruned guard
-            spark.read.schema(schema).parquet(indexPath)
-              .filter(col("batch_id") < batchId)
-              .select(col(idCol))
-          case Some(cands) if cands.isEmpty => emptyIds
-          case Some(cands) =>
-            spark.read.schema(schema).option("basePath", indexPath)
-              .parquet(cands.map(n => s"$indexPath/batch_id=$n"): _*)
-              .select(col(idCol))
-        }
+          bmn <= mx && mn <= bmx)
+    }
+    cands match {
+      case None => spark.read.schema(schema).parquet(indexPath)
+        .filter(col("batch_id") < batchId).select(col(idCol))
+      case Some(c) if c.isEmpty => emptyIds
+      case Some(c) => spark.read.schema(schema).option("basePath", indexPath)
+        .parquet(c.map(n => s"$indexPath/batch_id=$n"): _*).select(col(idCol))
     }
   }
 
@@ -840,45 +768,56 @@ object AnnStream {
     // mid-promote compaction/retire crash leaves batch partitions
     // missing, and a publish reading that state would fold (and
     // watermark past) rows it never saw
-    graft.operators.Sinks.recoverSwap(spark, indexPath)
-    // a committed cell commit left on the serving tree would otherwise
-    // roll its stale cells forward over this republish at a later entry
-    graft.operators.Sinks.recoverSwap(spark, servingPath)
+    Sinks.recoverSwap(spark, indexPath)
+    // the watermark commit below reuses its tree's stage
+    Sinks.recoverSwap(spark, servingPath + "_pubmeta")
+    publishFolded(spark, indexPath, servingPath, upToBatch)
+  }
+
+  /** [[publishIndex]] once the raw tree and the watermark are
+    * repaired. The serving tree's one repair is its swap's own, which
+    * runs before anything is staged: a committed cell commit left on
+    * the serving tree would otherwise roll its stale cells forward over
+    * this republish at a later entry. */
+  private def publishFolded(spark: SparkSession, indexPath: String,
+      servingPath: String, upToBatch: Option[Long]): Unit = {
     val ids = listBatchIds(spark, indexPath)
     val folded = upToBatch.fold(ids)(b => ids.filter(_ <= b))
     if (folded.isEmpty) return
-    // a fully-retired raw tree keeps its batch_id= dirs but holds zero
-    // data files — schema inference would throw. The correct fold of
-    // an EMPTY corpus is an EMPTY serving tree, not a skip: rows
-    // previously published must leave at this publish (the
-    // right-to-erasure contract — "retired rows leave the serving
-    // tree at the next publish"). With no prior serving tree there is
-    // nothing to erase and nothing to write.
-    val hIdx = new org.apache.hadoop.fs.Path(indexPath)
-    val idxFs = hIdx.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!DedupStream.hasParquetFiles(idxFs, hIdx)) {
-      val hServing = new org.apache.hadoop.fs.Path(servingPath)
-      val srvFs = hServing.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (srvFs.exists(hServing) &&
-          DedupStream.hasParquetFiles(srvFs, hServing)) {
-        val empty = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          spark.read.parquet(servingPath).schema)
-        graft.operators.Sinks.overwriteViaSwap(spark, empty, servingPath,
-          Seq("cell"))
-        writePubWatermark(spark, servingPath, folded.max)
-      }
-      return
+    Sinks.readTree(spark, indexPath) match {
+      case Some(raw) =>
+        val bounded =
+          upToBatch.fold(raw)(b => raw.filter(col("batch_id") <= b))
+        Sinks.overwriteViaSwap(spark,
+          bounded
+            .drop("batch_id")
+            .repartition(col("cell")), // whole cells co-locate → 1 file/cell
+          servingPath, Seq("cell"))
+      case None =>
+        // a fully-retired raw tree keeps its batch_id= dirs but holds
+        // zero data files. The correct fold of an EMPTY corpus is an
+        // EMPTY serving tree, not a skip: rows previously published must
+        // leave at this publish (the right-to-erasure contract — "retired
+        // rows leave the serving tree at the next publish"). With no
+        // prior serving rows there is nothing to erase and nothing to
+        // write.
+        if (!emptyTree(spark, servingPath)) return
     }
-    val raw = spark.read.parquet(indexPath)
-    val bounded = upToBatch.fold(raw)(b => raw.filter(col("batch_id") <= b))
-    graft.operators.Sinks.overwriteViaSwap(spark,
-      bounded
-        .drop("batch_id")
-        .repartition(col("cell")), // whole cells co-locate → 1 file/cell
-      servingPath, Seq("cell"))
     writePubWatermark(spark, servingPath, folded.max)
   }
+
+  /** Replace the tree at `path` by an empty one in one commit, after
+    * its repair; false (nothing written) when it holds no data file. */
+  private def emptyTree(spark: SparkSession, path: String): Boolean =
+    Sinks.openTree(spark, path).isDefined && {
+      val staged = new org.apache.hadoop.fs.Path(
+        Sinks.partitionStage(path), "tree")
+      if (!staged.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .mkdirs(staged))
+        throw new java.io.IOException(s"publish: cannot stage $staged")
+      Sinks.commitStaged(spark, path, Seq(Sinks.Move(staged.toString, path)))
+      true
+    }
 
   /** Committed raw-tree batch ids from the `batch_id=` partition
     * directory names — the metadata-scale source for every fold-point
@@ -925,32 +864,28 @@ object AnnStream {
   def publishIndexDelta(spark: SparkSession, indexPath: String,
       servingPath: String, idCol: String = "vec_id",
       upToBatch: Option[Long] = None): Unit = {
-    graft.operators.Sinks.recoverSwap(spark, indexPath) // the publishIndex rule
+    Sinks.recoverSwap(spark, indexPath) // the publishIndex rule
     val hServing = new org.apache.hadoop.fs.Path(servingPath)
     val fs = hServing.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.operators.Sinks.recoverSwap(spark, servingPath)
-    graft.operators.Sinks.recoverSwap(spark, servingPath + "_pubmeta")
-    // no tree, or a tree without its watermark (a full publish that
-    // crashed between swap and sidecar): the fold point is unknown —
-    // fall back to the full fold, which (re)writes both
-    if (!fs.exists(hServing) ||
-        !fs.exists(new org.apache.hadoop.fs.Path(servingPath + "_pubmeta"))) {
-      publishIndex(spark, indexPath, servingPath, upToBatch); return
+    // no watermark, or no tree (a full publish that crashed between
+    // swap and sidecar, or mid-swap): the fold point is unknown — fall
+    // back to the full fold, which (re)writes both and repairs the tree
+    // in its swap
+    val wm = readPubWatermark(spark, servingPath) match {
+      case Some(w) if fs.exists(hServing) => w
+      case _ => publishFolded(spark, indexPath, servingPath, upToBatch); return
     }
-    val wm = readPubWatermark(spark, servingPath)
+    Sinks.recoverSwap(spark, servingPath)
     // fold set and watermark from ONE metadata-scale directory-listing
     // snapshot — no full-tree aggregate, no fold/watermark divergence
     val ids = listBatchIds(spark, indexPath)
     val folded = upToBatch.fold(ids)(b => ids.filter(_ <= b)).filter(_ > wm)
     if (folded.isEmpty) return
     // a fully-retired raw tree keeps its batch_id= dirs but holds zero
-    // data files — nothing to fold, and schema inference would throw
-    val hIdx = new org.apache.hadoop.fs.Path(indexPath)
-    if (!DedupStream.hasParquetFiles(
-        hIdx.getFileSystem(spark.sparkContext.hadoopConfiguration), hIdx))
-      return
+    // data files — nothing to fold
+    val raw = Sinks.readTree(spark, indexPath).getOrElse(return)
     val maxB = folded.max
-    val delta = spark.read.parquet(indexPath)
+    val delta = raw
       .filter(col("batch_id") > wm && col("batch_id") <= maxB)
       .drop("batch_id").cache()
     try {
@@ -960,9 +895,7 @@ object AnnStream {
       if (affected.isEmpty) return
       // a fully-retired serving tree reads as the empty frame it is
       // (delta's schema — the merge below only needs its columns)
-      val existing = (if (DedupStream.hasParquetFiles(fs, hServing))
-        spark.read.parquet(servingPath)
-      else
+      val existing = Sinks.readTree(spark, servingPath).getOrElse(
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           delta.schema))
@@ -972,9 +905,9 @@ object AnnStream {
         .unionByName(delta)
         .repartition(col("cell")).write.mode(SaveMode.Overwrite)
         .partitionBy("cell")
-        .parquet(graft.operators.Sinks.partitionStage(servingPath))
+        .parquet(Sinks.partitionStage(servingPath))
       // a cell with no merged rows stages nothing and is dropped
-      graft.operators.Sinks.commitPartitions(spark, servingPath,
+      Sinks.commitPartitions(spark, servingPath,
         affected.map(c => s"cell=$c"))
       writePubWatermark(spark, servingPath, maxB)
     } finally delta.unpersist()
@@ -1010,15 +943,12 @@ object AnnStream {
     * anti-join removes nothing twice). */
   def retireIds(spark: SparkSession, servingPath: String, ids: DataFrame,
       idCol: String): Unit = {
-    val hServing = new org.apache.hadoop.fs.Path(servingPath)
-    val fs = hServing.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.operators.Sinks.recoverSwap(spark, servingPath)
+    Sinks.recoverSwap(spark, servingPath)
     // no tree, or a tree with zero data files (already fully retired):
-    // nothing to remove, and nothing for schema inference to read — a
-    // queue drain hitting this state every batch must be a no-op, not
-    // a stream-killer (the DedupStream.retireIds guard)
-    if (!fs.exists(hServing) ||
-        !DedupStream.hasParquetFiles(fs, hServing)) return
+    // nothing to remove and no schema to read — a queue drain hitting
+    // this state every batch must be a no-op, not a stream-killer (the
+    // DedupStream.retireIds guard)
+    val schema = Sinks.treeSchema(spark, servingPath).getOrElse(return)
     val retire = ids.select(col(idCol)).distinct().cache()
     try {
       // stats-pruned probe front (the DedupStream.retireIds rule):
@@ -1032,8 +962,9 @@ object AnnStream {
       // DedupStream.retireIds rule): the scan's listing is O(candidate
       // cells), not O(tree cells)
       val tree = cand match {
-        case None => spark.read.parquet(servingPath)
-        case Some(c) => spark.read.option("basePath", servingPath)
+        case None => spark.read.schema(schema).parquet(servingPath)
+        case Some(c) => spark.read.schema(schema)
+          .option("basePath", servingPath)
           .parquet(c.map(n => s"$servingPath/cell=$n"): _*)
       }
       // driver state: affected cell ids only (≤ cells, never rows)
@@ -1045,30 +976,30 @@ object AnnStream {
         .join(retire, Seq(idCol), "left_anti")
         .repartition(col("cell")).write.mode(SaveMode.Overwrite)
         .partitionBy("cell")
-        .parquet(graft.operators.Sinks.partitionStage(servingPath))
+        .parquet(Sinks.partitionStage(servingPath))
       // a cell whose every row retired stages nothing and is dropped
-      graft.operators.Sinks.commitPartitions(spark, servingPath,
+      Sinks.commitPartitions(spark, servingPath,
         affected.map(c => s"cell=$c"))
     } finally retire.unpersist()
   }
 
   /** The published tree's watermark — the highest raw `batch_id`
     * folded in — as a one-row sidecar parquet beside the tree
-    * (`<servingPath>_pubmeta`, swap-maintained). O(1) to read at any
+    * (`<servingPath>_pubmeta`, commit-maintained). O(1) to read at any
     * index size; [[publishIndexDelta]]'s whole cost model hangs off
-    * knowing the fold point without scanning the index. */
+    * knowing the fold point without scanning the index. The caller has
+    * repaired the sidecar on entry. */
   private def writePubWatermark(spark: SparkSession, servingPath: String,
       batchId: Long): Unit =
-    graft.operators.Sinks.overwriteViaSwap(spark,
-      watermarkFrame(spark, batchId), servingPath + "_pubmeta")
+    commitSmall(spark, servingPath + "_pubmeta", WatermarkSchema,
+      Seq(Seq(batchId)))
 
+  /** The watermark, after the sidecar's repair; None when there is none. */
   private def readPubWatermark(spark: SparkSession,
-      servingPath: String): Long = {
-    graft.operators.Sinks.recoverSwap(spark, servingPath + "_pubmeta")
-    cachedModelRead[Long](spark, servingPath + "_pubmeta") {
-      spark.read.parquet(servingPath + "_pubmeta")
-        .agg(max(col("last_batch"))).collect()(0).getLong(0)
-    }
+      servingPath: String): Option[Long] = {
+    Sinks.recoverSwap(spark, servingPath + "_pubmeta")
+    SmallParquet.read(spark, servingPath + "_pubmeta")
+      .map(_.map(_("last_batch").asInstanceOf[Long]).max)
   }
 
   /** Serve exact-integer top-k from the STORED index: assign the query
@@ -1091,17 +1022,17 @@ object AnnStream {
     // would otherwise serve a tree silently missing a whole
     // non-retired cell until the next maintenance op. One existence
     // check per stage when clean.
-    graft.operators.Sinks.recoverSwap(spark, indexPath)
+    Sinks.recoverSwap(spark, indexPath)
     val hPath = new org.apache.hadoop.fs.Path(indexPath)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a fully-retired tree can exist with zero data files — schema
-    // inference would throw; serve it as the empty index it is. A
+    // a fully-retired tree can exist with zero data files — it has no
+    // schema to read; serve it as the empty index it is. A
     // NONEXISTENT path is a misconfiguration and must fail loudly,
     // not serve empty answers forever.
     require(fs.exists(hPath),
       s"ivfServeTopK: index path does not exist: $indexPath")
     // READ ORDER IS LOAD-BEARING: the tree's FILE LISTING pins first
-    // (spark.read.parquet builds its file index eagerly), the
+    // (a parquet read builds its file index eagerly), the
     // geometry second. A migration promote landing BETWEEN the two
     // leaves new geometry over an old listing whose files the promote
     // renamed away — the job fails loudly (FileNotFound), never
@@ -1111,15 +1042,13 @@ object AnnStream {
     // this order every interleaving of a concurrent promote is either
     // consistent or loud, matching the r17 invalidate design's
     // guarantee.
-    val indexRaw = if (DedupStream.hasParquetFiles(fs, hPath))
-      spark.read.parquet(indexPath)
-    else
+    val indexRaw = Sinks.readTree(spark, indexPath).getOrElse(
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(Seq(
           StructField(idCol, queries.schema(idCol).dataType),
           StructField("q", ArrayType(LongType)),
-          StructField("cell", LongType))))
+          StructField("cell", LongType)))))
     // embedded model first (a migrated republished tree commits its
     // geometry in the same rename as its rows — r18 zero-outage);
     // external store otherwise
@@ -1150,7 +1079,7 @@ object AnnStream {
   def trainPqCodebook(spark: SparkSession, indexPath: String,
       centroidsPath: String, m: Int, k: Int, iters: Int = 5,
       salt: String = "pqres"): Seq[Seq[Seq[Long]]] = {
-    graft.operators.Sinks.recoverSwap(spark, indexPath) // every-load repair
+    Sinks.recoverSwap(spark, indexPath) // every-load repair
     // the training slice is the batch-0 PARTITION, read through
     // partition pruning (`batch_id = 0` on the discovered partition
     // column), not a literal sub-path: once compactIndex folds the
@@ -1162,9 +1091,8 @@ object AnnStream {
         "the batch-0 training slice is no longer isolable (compacted " +
         "away?). Train and freeze the codebook BEFORE the first " +
         "compaction of the raw tree, like the coarse centroids.")
-    val hB0 = new org.apache.hadoop.fs.Path(indexPath, "batch_id=0")
-    require(DedupStream.hasParquetFiles(
-      hB0.getFileSystem(spark.sparkContext.hadoopConfiguration), hB0),
+    val slice = Sinks.treeSchema(spark, s"$indexPath/batch_id=0")
+    require(slice.isDefined,
       s"trainPqCodebook: the batch_id=0 partition under $indexPath " +
         "holds no data files (fully retired?) — there is no training " +
         "slice left. Train and freeze the codebook before retiring " +
@@ -1172,7 +1100,7 @@ object AnnStream {
     val cents = readCentroids(spark, centroidsPath)
     val dim = cents.head.length
     val centLit = typedLit(cents.map(_.toSeq))
-    val resid = spark.read.parquet(indexPath)
+    val resid = spark.read.schema(slice.get).parquet(indexPath)
       .filter(col("batch_id") === 0L)
       .withColumn("r", zip_with(col("q"),
         element_at(centLit, (col("cell") + 1).cast(IntegerType)),
@@ -1182,25 +1110,20 @@ object AnnStream {
   }
 
   /** Persist a trained codebook as `(j, code, c)` rows beside the
-    * centroids (same staged swap — a concurrent reader always sees a
+    * centroids (same staged commit — a concurrent reader always sees a
     * complete model). */
   def writePqCodebook(spark: SparkSession, cb: Seq[Seq[Seq[Long]]],
-      path: String): Unit =
-    graft.operators.Sinks.overwriteViaSwap(spark, codebookFrame(spark, cb),
-      path)
+      path: String): Unit = {
+    Sinks.recoverSwap(spark, path)
+    commitSmall(spark, path, CodebookSchema, codebookRows(cb))
+  }
 
-  /** Load the frozen codebook back as the nested literal model. */
+  /** Load the frozen codebook back as the nested literal model: one
+    * repair, one file read. */
   def readPqCodebook(spark: SparkSession, path: String): Seq[Seq[Seq[Long]]] = {
-    graft.operators.Sinks.recoverSwap(spark, path)
-    cachedModelRead[Seq[Seq[Seq[Long]]]](spark, path) {
-      val rows = spark.read.parquet(path)
-        .select("j", "code", "c").collect()
-        .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Long](2))
-        .toMap
-      val m = rows.keys.map(_._1).max + 1
-      val k = rows.keys.map(_._2).max + 1
-      (0 until m).map(j => (0 until k).map(c => rows((j, c)).toSeq))
-    }
+    Sinks.recoverSwap(spark, path)
+    codebookOf(SmallParquet.read(spark, path).getOrElse(
+      throw new java.io.FileNotFoundException(s"no PQ codebook at $path")))
   }
 
   /** Publish the raw ingest tree as a PQ-CODED serving index — the
@@ -1238,27 +1161,19 @@ object AnnStream {
   private def publishPqIndexWith(spark: SparkSession, indexPath: String,
       centroidsPath: String, codedPath: String, idCol: String,
       m: Int, k: Int, cbOpt: Option[Seq[Seq[Seq[Long]]]]): Unit = {
-    graft.operators.Sinks.recoverSwap(spark, indexPath) // every-load repair
-    graft.operators.Sinks.recoverSwap(spark, codedPath) // publishIndex rule
+    Sinks.recoverSwap(spark, indexPath) // every-load repair
     // a fully-retired raw tree keeps its batch_id= dirs but holds zero
-    // data files — schema inference would throw, and the correct
-    // publish of an EMPTY corpus is an EMPTY coded tree (the
-    // publishIndex erasure rule): previously published code rows must
-    // leave at this republish. A NONEXISTENT raw tree still fails
-    // loudly below (misconfigured path ≠ empty corpus).
+    // data files, and the correct publish of an EMPTY corpus is an
+    // EMPTY coded tree (the publishIndex erasure rule): previously
+    // published code rows must leave at this republish. A NONEXISTENT
+    // raw tree fails loudly (misconfigured path ≠ empty corpus). The
+    // coded tree's one repair is its swap's own, or the empty commit's.
     val hIdx = new org.apache.hadoop.fs.Path(indexPath)
-    val idxFs = hIdx.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (idxFs.exists(hIdx) && !DedupStream.hasParquetFiles(idxFs, hIdx)) {
-      val hCoded = new org.apache.hadoop.fs.Path(codedPath)
-      val cFs = hCoded.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (cFs.exists(hCoded) && DedupStream.hasParquetFiles(cFs, hCoded)) {
-        val empty = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          spark.read.parquet(codedPath).schema)
-        graft.operators.Sinks.overwriteViaSwap(spark, empty, codedPath,
-          Seq("cell"))
-      }
-      return
+    require(hIdx.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .exists(hIdx), s"publishPqIndex: index path does not exist: $indexPath")
+    val raw = Sinks.readTree(spark, indexPath) match {
+      case Some(df) => df
+      case None => emptyTree(spark, codedPath); return
     }
     val cents = readCentroids(spark, centroidsPath)
     val dim = cents.head.length
@@ -1268,8 +1183,8 @@ object AnnStream {
       cb.forall(_.forall(_.length == dim / m)),
       s"codebook must be m=$m × k=$k × sub=${dim / m}")
     val centLit = typedLit(cents.map(_.toSeq))
-    graft.operators.Sinks.overwriteViaSwap(spark,
-      spark.read.parquet(indexPath)
+    Sinks.overwriteViaSwap(spark,
+      raw
         .drop("batch_id")
         .withColumn("r", zip_with(col("q"),
           element_at(centLit, (col("cell") + 1).cast(IntegerType)),
@@ -1329,7 +1244,7 @@ object AnnStream {
     // missing non-retired cells
     val hCoded = new org.apache.hadoop.fs.Path(codedPath)
     val codedFs = hCoded.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.operators.Sinks.recoverSwap(spark, codedPath)
+    Sinks.recoverSwap(spark, codedPath)
     // READ ORDER IS LOAD-BEARING (the ivfServeTopK rule): the coded
     // tree's file listing pins FIRST, geometry second — a migration
     // promote landing between the two renames the listed files away
@@ -1337,15 +1252,13 @@ object AnnStream {
     // geometry (r18 review)
     require(codedFs.exists(hCoded),
       s"pqServeTopK: coded path does not exist: $codedPath")
-    val codesRaw = if (DedupStream.hasParquetFiles(codedFs, hCoded))
-      spark.read.parquet(codedPath)
-    else
+    val codesRaw = Sinks.readTree(spark, codedPath).getOrElse(
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(Seq(
           StructField(idCol, vectors.schema(idCol).dataType),
           StructField("codes", ArrayType(IntegerType)),
-          StructField("cell", LongType))))
+          StructField("cell", LongType)))))
     // embedded geometry next (r18 zero-outage: a migrated republished
     // coded tree carries the centroids AND the retrained codebook it
     // was encoded under, committed in the same rename as its rows);
@@ -1357,11 +1270,8 @@ object AnnStream {
     val dim = cents.head.length
     require(m > 0 && dim % m == 0, s"m=$m must divide dim=$dim")
     val sub = dim / m
-    val hCb = new org.apache.hadoop.fs.Path(codedPath, CodebookDir)
     val embedded =
-      if (codedFs.exists(hCb) && DedupStream.hasParquetFiles(codedFs, hCb))
-        Some(readPqCodebook(spark, hCb.toString))
-      else None
+      SmallParquet.read(spark, s"$codedPath/$CodebookDir").map(codebookOf)
     // a tree carrying an embedded codebook was ENCODED under it — an
     // explicit argument that disagrees is a stale external store (the
     // migration republished the tree; nobody refreshed the caller's

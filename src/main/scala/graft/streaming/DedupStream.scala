@@ -1,10 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField,
+  StructType}
 import graft.dedup.Dedup
+import graft.operators.Sinks
 
 /** Streaming ingest dedup: document files landing in a directory are
   * deduplicated per micro-batch against a persistent MinHash signature
@@ -35,21 +37,6 @@ import graft.dedup.Dedup
   * place. No append, no commit marker, no cross-batch mutation.
   */
 object DedupStream {
-
-  /** Index schema for an empty store: (idCol, shh, sig). The id field
-    * takes the CALLER's id type (string ids are supported everywhere
-    * else in the dedup framework, so the bootstrap batch must not
-    * coerce them to long). */
-  private def emptyIndex(spark: SparkSession, idCol: String,
-      idType: org.apache.spark.sql.types.DataType): DataFrame = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField(idCol, idType),
-      StructField("shh", ArrayType(LongType)),
-      StructField("sig", ArrayType(LongType))))
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
 
   /** Compact a committed per-batch index tree: fold every partition
     * with `batch_id <= upToBatch` into ONE `batch_id=upToBatch`
@@ -86,20 +73,21 @@ object DedupStream {
     // against a tree whose migration committed but never promoted,
     // folding the SUPERSEDED live tree would be discarded by the next
     // entry's roll-forward
-    graft.operators.Sinks.recoverSwap(spark, indexPath)
+    Sinks.recoverSwap(spark, indexPath)
     if (!fs.exists(hPath)) return
     val dirs = fs.listStatus(hPath).toSeq
       .filter(_.isDirectory).map(_.getPath)
       .filter(p => p.getName.startsWith("batch_id=") &&
         p.getName.stripPrefix("batch_id=").toLong <= upToBatch)
     if (dirs.length <= 1) return // nothing to fold
-    // all-empty prefix (every batch dropped everything): no rows to
-    // fold and nothing for schema inference to read — leave the
-    // (cheap, data-free) dirs alone
-    if (!dirs.exists(hasParquetFiles(fs, _))) return
+    // the prefix's data columns, from its first data file; an all-empty
+    // prefix (every batch dropped everything) has no rows to fold —
+    // leave the (cheap, data-free) dirs alone
+    val schema = dirs.iterator.flatMap(d => Sinks.treeSchema(spark, d.toString))
+      .nextOption().getOrElse(return)
     val tgt = dirs.map(_.getName.stripPrefix("batch_id=").toLong).max
-    val next = s"${graft.operators.Sinks.partitionStage(indexPath)}/batch_id=$tgt"
-    val folded = spark.read.parquet(indexPath)
+    val next = s"${Sinks.partitionStage(indexPath)}/batch_id=$tgt"
+    val folded = spark.read.schema(schema).parquet(indexPath)
       .filter(col("batch_id") <= tgt)
       .drop("batch_id")
     // sub-partitioned trees (the ANN raw tree's batch_id=N/cell=M) keep
@@ -123,8 +111,8 @@ object DedupStream {
     // the plan would re-read every source batch dir and re-run the
     // fold's shuffle once per sidecar job (r17 review).
     idCol.foreach(ic => StatsSidecar.writeForDir(spark,
-      spark.read.parquet(next), next, ic))
-    graft.operators.Sinks.commitPartitions(spark, indexPath,
+      spark.read.schema(schema).parquet(next), next, ic))
+    Sinks.commitPartitions(spark, indexPath,
       dirs.map(_.getName))
   }
 
@@ -225,12 +213,6 @@ object DedupStream {
     val conf = spark.sparkContext.hadoopConfiguration
     val hPath = new org.apache.hadoop.fs.Path(treePath)
     val fs = hPath.getFileSystem(conf)
-    def files(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
-      fs.listStatus(p).toSeq.flatMap { s =>
-        if (s.isDirectory) files(s.getPath)
-        else if (s.getPath.getName.endsWith(".parquet")) Seq(s.getPath)
-        else Nil
-      }
     // bounds of ONE file: one Option per non-empty row group (None =
     // "bounds unknown for this block"), merged — Some(empty interval)
     // for a zero-row file, None when any block is unbounded
@@ -297,7 +279,7 @@ object DedupStream {
             }
             hit
           }
-        case None => files(dir).exists { f =>
+        case None => parquetFiles(fs, dir).exists { f =>
           fileBounds(f) match {
             case None => true // unbounded: cannot prove absent
             case Some((mn, mx)) => mn <= mx && couldHit(mn, mx)
@@ -341,12 +323,6 @@ object DedupStream {
     val hPath = new org.apache.hadoop.fs.Path(treePath)
     val fs = hPath.getFileSystem(conf)
     if (!fs.exists(hPath)) return 0L
-    def files(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
-      fs.listStatus(p).toSeq.flatMap { s =>
-        if (s.isDirectory) files(s.getPath)
-        else if (s.getPath.getName.endsWith(".parquet")) Seq(s.getPath)
-        else Nil
-      }
     val parts = fs.listStatus(hPath).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
       // partFilter bounds the count to the COMMITTED prefix for callers
@@ -378,7 +354,7 @@ object DedupStream {
                 .map(_.group(1).toLong)
             }
           }.toOption.flatten
-          sidecar.getOrElse(files(dir).map { f =>
+          sidecar.getOrElse(parquetFiles(fs, dir).map { f =>
             val in = org.apache.parquet.hadoop.util.HadoopInputFile
               .fromPath(f, conf)
             val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
@@ -389,6 +365,15 @@ object DedupStream {
     }
     footerPool.invokeAll(tasks.asJava).asScala.map(_.get()).sum
   }
+
+  /** Every parquet file under `p`, recursively. */
+  private def parquetFiles(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
+    fs.listStatus(p).toSeq.flatMap { s =>
+      if (s.isDirectory) parquetFiles(fs, s.getPath)
+      else if (s.getPath.getName.endsWith(".parquet")) Seq(s.getPath)
+      else Nil
+    }
 
   /** Shared daemon pool for footer walks: the ingest guard runs one
     * walk per micro-batch and a queue drain one per tree — allocating
@@ -457,11 +442,10 @@ object DedupStream {
     // roll-forward would promote the staged PRE-retire tree,
     // resurrecting erased ids (the r17 drain-side bug class at a
     // different entry point — r18 advice)
-    graft.operators.Sinks.recoverSwap(spark, treePath)
+    Sinks.recoverSwap(spark, treePath)
     // no tree, or a tree with zero data files (every batch dropped or
-    // already retired everything): nothing to retire, and nothing for
-    // schema inference to read
-    if (!fs.exists(hPath) || !hasParquetFiles(fs, hPath)) return
+    // already retired everything): nothing to retire and no schema
+    val schema = Sinks.treeSchema(spark, treePath).getOrElse(return)
     val retire = ids.select(col(idCol)).distinct().cache()
     try {
       // stats-pruned probe front (round-16): footer min/max bounds the
@@ -481,8 +465,8 @@ object DedupStream {
       // O(candidate dirs), not O(tree dirs) — without this the probe's
       // Spark-side listing alone grows with the tree
       val tree = cand match {
-        case None => spark.read.parquet(treePath)
-        case Some(c) => spark.read.option("basePath", treePath)
+        case None => spark.read.schema(schema).parquet(treePath)
+        case Some(c) => spark.read.schema(schema).option("basePath", treePath)
           .parquet(c.map(n => s"$treePath/batch_id=$n"): _*)
       }
       // driver state: affected batch ids only (≤ #batches, never rows)
@@ -491,7 +475,7 @@ object DedupStream {
         .distinct().collect().map(_.getLong(0)).sorted
       if (affected.isEmpty) return
       val next = new org.apache.hadoop.fs.Path(
-        graft.operators.Sinks.partitionStage(treePath))
+        Sinks.partitionStage(treePath))
       val kept = tree
         .filter(col("batch_id").isin(affected: _*))
         .join(retire, Seq(idCol), "left_anti")
@@ -527,10 +511,10 @@ object DedupStream {
           idCol, bloomFrom = Some(treePath))
       else affected.foreach { b =>
         val staged = new org.apache.hadoop.fs.Path(next, s"batch_id=$b")
-        if (!hasParquetFiles(fs, staged))
+        if (!Sinks.hasDataFile(fs, staged))
           StatsSidecar.writeEmpty(spark, staged.toString, idCol)
       }
-      graft.operators.Sinks.commitPartitions(spark, treePath,
+      Sinks.commitPartitions(spark, treePath,
         affected.map(b => s"batch_id=$b"))
     } finally retire.unpersist()
   }
@@ -599,16 +583,17 @@ object DedupStream {
     val probed = fs.listStatus(qPath).toSeq
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .map(s => s.getPath -> scala.util.Try(
-        spark.read.parquet(s.getPath.toString)
-          .schema.fieldNames.contains(idCol)))
+        Sinks.fileSchema(spark, s).find(_.name == idCol)))
     archive(fs, new org.apache.hadoop.fs.Path(qPath, "_bad"),
-      probed.collect { case (p, scala.util.Success(false)) => p })
+      probed.collect { case (p, scala.util.Success(None)) => p })
     val pending = probed
-      .collect { case (p, scala.util.Success(true)) => p }
+      .collect { case (p, scala.util.Success(Some(f))) => (p, f) }
     if (pending.isEmpty) return 0
-    apply(spark.read.parquet(pending.map(_.toString): _*)
-      .select(col(idCol)))
-    archive(fs, new org.apache.hadoop.fs.Path(qPath, "_done"), pending)
+    // the first request's id column types the read, as inference would
+    apply(spark.read.schema(StructType(Seq(pending.head._2)))
+      .parquet(pending.map(_._1.toString): _*))
+    archive(fs, new org.apache.hadoop.fs.Path(qPath, "_done"),
+      pending.map(_._1))
     pending.size
   }
 
@@ -652,73 +637,60 @@ object DedupStream {
     * of the archived files IS the set of ids withdrawn so far — the
     * caller does not have to keep its own ledger. Nothing archived
     * yet (or no queue dir): the whole report is live. Schema note:
-    * this overload infers the report's schema from its files — a
+    * this overload takes the report's schema from its files — a
     * pairs tree whose every batch partition is EMPTY (no pair ever
-    * observed) has nothing to infer from; read such a tree with an
+    * observed) has nothing to take it from; read such a tree with an
     * explicit schema (the d17/d18 discipline) and use the
     * frame-argument overload. */
   def livePairs(spark: SparkSession, pairsPath: String, queueDir: String,
       idCol: String, aCol: String, bCol: String): DataFrame = {
-    val pairs = spark.read.parquet(pairsPath)
+    val pairs = Sinks.readTree(spark, pairsPath).getOrElse(
+      throw new IllegalArgumentException(s"livePairs: no pair file under " +
+        s"$pairsPath — read it with an explicit schema and pass the frame"))
     val done = new org.apache.hadoop.fs.Path(queueDir, "_done")
     val fs = done.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val archived =
       if (fs.exists(done))
         fs.listStatus(done).toSeq
           .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-          .map(_.getPath.toString)
       else Nil
     if (archived.isEmpty) pairs
-    else livePairs(pairs, spark.read.parquet(archived: _*), idCol,
-      aCol, bCol)
+    else livePairs(pairs,
+      spark.read.schema(Sinks.fileSchema(spark, archived.head))
+        .parquet(archived.map(_.getPath.toString): _*),
+      idCol, aCol, bCol)
   }
 
-  /** Does the tree hold at least one parquet DATA file? (Partition
-    * dirs can legitimately be empty — a batch that dropped everything,
-    * a fully-retired batch — and schema inference throws on a tree
-    * with zero data files.) Hidden entries — names starting `_` or `.`
-    * — are skipped, matching what the parquet reader itself lists:
-    * an embedded `_model`/`_codebook` sidecar dir (a migrated serving
-    * tree's geometry, r18) holds parquet files that are NOT data of
-    * this tree, and counting them would make a fully-retired tree
-    * look populated and send schema inference into a zero-data-file
-    * read. Package-visible so [[AnnStream]]'s publish/serve/train
-    * entry points apply the same all-empty-tree guard to the raw,
-    * published and coded layouts. */
-  private[streaming] def hasParquetFiles(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Boolean =
-    fs.listStatus(p).exists { s =>
-      val n = s.getPath.getName
-      if (n.startsWith("_") || n.startsWith(".")) false
-      else if (s.isDirectory) hasParquetFiles(fs, s.getPath)
-      else n.endsWith(".parquet")
-    }
-
-  /** The committed index as seen by batch `batchId`: signature
-    * partitions of all PRIOR batches. A partial `batch_id=batchId`
-    * dir left by a crashed attempt is excluded — it is this attempt's
-    * output, about to be overwritten. The schema is EXPLICIT: a
-    * crashed batch-0 attempt can leave the index dir existing with
-    * zero committed data files, and schema inference would throw on
-    * every replay — with the schema given, an empty tree reads as an
-    * empty frame and the replay proceeds. */
-  private def loadIndex(spark: SparkSession, path: String, idCol: String,
-      idType: org.apache.spark.sql.types.DataType, batchId: Long): DataFrame = {
-    import org.apache.spark.sql.types._
+  /** The committed tree at `path` as seen by batch `batchId`: the rows
+    * of all PRIOR batches, in the declared `schema` (data columns, then
+    * `batch_id`). A partial `batch_id=batchId` dir left by a crashed
+    * attempt is excluded — it is this attempt's output, about to be
+    * overwritten. The schema is EXPLICIT: a crashed batch-0 attempt can
+    * leave the dir existing with zero committed data files, which has
+    * no schema to read — with the schema given, an empty tree reads as
+    * an empty frame and the replay proceeds. The id field takes the
+    * CALLER's id type (string ids are supported everywhere else in the
+    * dedup framework, so the bootstrap batch must not coerce them). */
+  private def priorBatches(spark: SparkSession, path: String,
+      schema: StructType, batchId: Long): DataFrame = {
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.operators.Sinks.recoverSwap(spark, path) // every-load repair
-    val schema = StructType(Seq(
-      StructField(idCol, idType),
-      StructField("shh", ArrayType(LongType)),
-      StructField("sig", ArrayType(LongType)),
-      StructField("batch_id", LongType)))
+    Sinks.recoverSwap(spark, path) // every-load repair
+    val data = StructType(schema.filter(_.name != "batch_id"))
     if (fs.exists(hPath))
       spark.read.schema(schema).parquet(path)
         .filter(col("batch_id") < batchId)
-        .select(col(idCol), col("shh"), col("sig"))
-    else emptyIndex(spark, idCol, idType)
+        .select(data.fieldNames.map(col).toIndexedSeq: _*)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), data)
   }
+
+  /** The committed MinHash signature index: (idCol, shh, sig). */
+  private def loadIndex(spark: SparkSession, path: String, idCol: String,
+      idType: DataType, batchId: Long): DataFrame =
+    priorBatches(spark, path, StructType(Seq(StructField(idCol, idType),
+      StructField("shh", ArrayType(LongType)),
+      StructField("sig", ArrayType(LongType)),
+      StructField("batch_id", LongType))), batchId)
 
   /** One micro-batch of the ingest — exposed for direct (batch-mode)
     * use and testing. */
@@ -1062,8 +1034,11 @@ object DedupStream {
     val cached = scala.collection.mutable.ArrayBuffer[DataFrame]()
     def pin(df: DataFrame): DataFrame = { cached += df; df.cache() }
     try {
-      val index = pin(loadSigIndex(spark, indexPath, idCol,
-        sigs.schema(idCol).dataType, batchId))
+      // the committed signature index: (idCol, sig)
+      val index = pin(priorBatches(spark, indexPath, StructType(Seq(
+        StructField(idCol, sigs.schema(idCol).dataType),
+        StructField("sig", LongType),
+        StructField("batch_id", LongType))), batchId))
       // ingest contract: ids identify media — re-sent ids (across or
       // within a batch) are not new items
       val fresh = pin(sigs.dropDuplicates(idCol)
@@ -1106,8 +1081,11 @@ object DedupStream {
     val cached = scala.collection.mutable.ArrayBuffer[DataFrame]()
     def pin(df: DataFrame): DataFrame = { cached += df; df.cache() }
     try {
-      val index = pin(loadEmbIndex(spark, indexPath, idCol,
-        batch.schema(idCol).dataType, batch.schema(vecCol).dataType, vecCol,
+      // the committed embedding index: (idCol, vecCol, block)
+      val index = pin(priorBatches(spark, indexPath, StructType(Seq(
+        StructField(idCol, batch.schema(idCol).dataType),
+        StructField(vecCol, batch.schema(vecCol).dataType),
+        StructField("block", LongType), StructField("batch_id", LongType))),
         batchId))
       // ingest contract: ids identify vectors — re-sent ids (across or
       // within a batch) are not new items
@@ -1123,32 +1101,6 @@ object DedupStream {
         () => fresh.write.mode(SaveMode.Overwrite)
           .parquet(s"$indexPath/batch_id=$batchId"))
     } finally cached.foreach(_.unpersist())
-  }
-
-  /** The committed embedding index for batch `batchId` (prior batches
-    * only; explicit schema — the [[loadIndex]] crash-debris rule). */
-  private def loadEmbIndex(spark: SparkSession, path: String,
-      idCol: String, idType: org.apache.spark.sql.types.DataType,
-      vecType: org.apache.spark.sql.types.DataType, vecCol: String,
-      batchId: Long): DataFrame = {
-    import org.apache.spark.sql.types._
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.operators.Sinks.recoverSwap(spark, path) // every-load repair
-    val schema = StructType(Seq(
-      StructField(idCol, idType),
-      StructField(vecCol, vecType),
-      StructField("block", LongType),
-      StructField("batch_id", LongType)))
-    if (fs.exists(hPath))
-      spark.read.schema(schema).parquet(path)
-        .filter(col("batch_id") < batchId)
-        .select(col(idCol), col(vecCol), col("block"))
-    else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField(idCol, idType),
-          StructField(vecCol, vecType), StructField("block", LongType))))
   }
 
   /** Run the embedding near-dup monitor as a stream over parquet
@@ -1174,30 +1126,6 @@ object DedupStream {
           idCol, vecCol, blockOf, threshold)
       })
       .start()
-
-  /** The committed signature index for batch `batchId` (prior batches
-    * only; explicit schema — the [[loadIndex]] crash-debris rule). */
-  private def loadSigIndex(spark: SparkSession, path: String,
-      idCol: String, idType: org.apache.spark.sql.types.DataType,
-      batchId: Long): DataFrame = {
-    import org.apache.spark.sql.types._
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.operators.Sinks.recoverSwap(spark, path) // every-load repair
-    val schema = StructType(Seq(
-      StructField(idCol, idType),
-      StructField("sig", LongType),
-      StructField("batch_id", LongType)))
-    if (fs.exists(hPath))
-      spark.read.schema(schema).parquet(path)
-        .filter(col("batch_id") < batchId)
-        .select(col(idCol), col("sig"))
-    else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField(idCol, idType),
-          StructField("sig", LongType))))
-  }
 
   /** Run the signature near-dup monitor as a stream over parquet
     * files landing in `srcDir`: each micro-batch goes through the

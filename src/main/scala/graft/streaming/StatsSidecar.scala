@@ -191,10 +191,10 @@ object StatsSidecar {
     // nulls natively, count(lit(1)) counts everything (the
     // footerRowCount contract — r18 advice), count(_id) the Bloom
     // population
-    val stats: Map[Long, (Option[(Long, Long)], Long, Long)] =
-      if (!DedupStream.hasParquetFiles(fs, hPath)) Map.empty
-      else {
-        val df = spark.read.parquet(treePath)
+    val tree = graft.operators.Sinks.readTree(spark, treePath)
+    val stats: Map[Long, (Option[(Long, Long)], Long, Long)] = tree match {
+      case None => Map.empty
+      case Some(df) =>
         if (!df.schema.fieldNames.contains(idCol)) return
         df.schema(idCol).dataType match {
           case LT | IntegerType => ()
@@ -243,7 +243,7 @@ object StatsSidecar {
     val written = scala.collection.mutable.Set[Long]()
     if (stats.exists(_._2._3 > 0L)) {
       val packed = packedBloomWords(
-        spark.read.parquet(treePath)
+        tree.get
           .select(col(pcol).cast(LongType).as("_p"),
             col(idCol).cast(LongType).as("_id"))
           .na.drop(Seq("_id")),

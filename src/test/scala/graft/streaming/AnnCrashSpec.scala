@@ -238,6 +238,51 @@ class AnnCrashSpec extends SparkSpec {
     }
     assert(points == 10) // two whole-tree commits of 5
   }
+
+  /** `body`'s result and the WARN messages Spark's data source resolver
+    * logged meanwhile (the logger is set to WARN for the capture). */
+  private def dataSourceWarnings[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-spec-warnings", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.execution.datasources.DataSource").asInstanceOf[Logger]
+    val level = logger.getLevel
+    logger.addAppender(appender)
+    logger.setLevel(Level.WARN)
+    try {
+      val out = body
+      import scala.jdk.CollectionConverters._
+      (out, seen.asScala.toSeq)
+    } finally {
+      logger.removeAppender(appender)
+      logger.setLevel(level)
+      appender.stop()
+    }
+  }
+
+  test("a serve of a republished tree reads its embedded model without an ignored-path warning") {
+    val d = FaultFs.copyTree(base)
+    assert(migrate(spark, d, Published).exists(_.cells == 16))
+    val (answer, warnings) = dataSourceWarnings(serve(d, "serving"))
+    assert(!warnings.exists(_.contains("All paths were ignored")), warnings)
+    assert(graft.core.SmallParquet.read(spark,
+      at(d, s"serving/${AnnStream.ModelDir}")).map(_.size).contains(16))
+    // without the external model, the serve ranks under the embedded one
+    graft.core.TempDirs.deleteRecursively(d.resolve("centroids").toFile)
+    assert(serve(d, "serving") == answer)
+    // the capture sees the warning a read of the underscore dir logs
+    assert(dataSourceWarnings(spark.read.parquet(at(d, "serving/_model")))
+      ._2.exists(_.contains("All paths were ignored")))
+  }
 }
 
 object AnnCrashSpec {

@@ -218,7 +218,7 @@ class PartitionCommitCrashSpec extends SparkSpec {
       // move costs an exists and two renames (set-aside, promote), each
       // drop a delete (and an exists when there was nothing to delete),
       // plus the record and the stage delete
-      val base = AnnCrashSpec.fixture(spark, tmp("pc_mig_cost"))
+      val base = annBase
       for ((shape, want) <- Seq(
           AnnCrashSpec.DropOnly -> Map("create" -> 1, "rename" -> 5,
             "exists" -> 3, "delete" -> 5),
@@ -231,6 +231,37 @@ class PartitionCommitCrashSpec extends SparkSpec {
           assert(AnnCrashSpec.migrate(spark, d, shape).isDefined)) == want,
           shape)
       }
+    }
+  }
+
+  /** AnnCrashSpec's fixture: a two-batch raw tree, published. */
+  private lazy val annBase = AnnCrashSpec.fixture(spark, tmp("pc_ann"))
+
+  test("a full and a delta publish repair each of their three trees once") {
+    val d = FaultFs.copyTree(annBase)
+    val (idx, pub) = (d.resolve("index").toString, d.resolve("serving").toString)
+    def cost(method: String)(op: => Unit): Map[String, Int] = {
+      FaultFs.arm(if (method == "repair") FaultFs.Repair
+        else Seq(("graft.streaming.AnnStream$", method)))(_ => false)
+      try op finally FaultFs.disarm()
+      FaultFs.snapshot()
+    }
+    // the raw tree, the serving tree and its watermark: one clean repair
+    // (one exists) each; the totals add the listings, the swap's or
+    // partition commit's exists and Spark's own calls on this thread
+    FaultFs.installed(spark) {
+      // a watermark behind the raw tree, so the delta has a batch to fold
+      def rewind() = AnnStream.publishIndex(spark, idx, pub, Some(0L))
+      rewind()
+      assert(cost("repair")(AnnStream.publishIndexDelta(spark, idx, pub)) ==
+        Map("exists" -> 3))
+      rewind()
+      assert(cost("publishIndexDelta")(
+        AnnStream.publishIndexDelta(spark, idx, pub))("exists") == 16)
+      assert(cost("repair")(AnnStream.publishIndex(spark, idx, pub)) ==
+        Map("exists" -> 3))
+      assert(cost("publishIndex")(
+        AnnStream.publishIndex(spark, idx, pub))("exists") == 7)
     }
   }
 
