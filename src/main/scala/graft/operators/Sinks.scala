@@ -459,6 +459,11 @@ object Sinks {
       new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
+  /** An empty frame as an empty local relation, so the optimizer drops
+    * a join against it (an empty RDD's frame plans a shuffle join). */
+  def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), schema)
+
   /** Does the tree at `p` hold a visible data file? Partition dirs can
     * be empty (a batch that dropped everything, a fully retired one). */
   def hasDataFile(fs: FileSystem, p: Path): Boolean =

@@ -46,8 +46,7 @@ object IncrementalSync {
       if (fs.exists(new org.apache.hadoop.fs.Path(snapshotPath)))
         spark.read.schema(valueSchema).parquet(snapshotPath)
       else
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], valueSchema)
+        Sinks.emptyFrame(spark, valueSchema)
     // changes carry the extra `removed` column; the snapshot holds
     // only entity columns — applyDelta drops the flag on upserts
     Sinks.overwriteViaSwap(spark,

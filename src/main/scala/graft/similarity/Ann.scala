@@ -270,9 +270,9 @@ object Ann {
     * argmin with ties to the lower cell id, centroid update by
     * per-component floor-division mean, empty cells keep their
     * centroid — so every assignment after every iteration is
-    * bit-reproducible in any engine. Per iteration: one corpus scan
-    * for assignment + one shuffle for the per-cell component sums
-    * (k·dim rows to the driver — the model, never the corpus).
+    * bit-reproducible in any engine. Per iteration: one corpus scan,
+    * no shuffle: each partition's per-cell component sums go to the
+    * driver (k·dim longs — the model, never the corpus).
     * Returns (idCol, cell) under the final centroids. */
   def portableKmeansAssign(corpus: DataFrame, idCol: String, vecCol: String,
       dim: Int, k: Int, iters: Int, salt: String = "pkmeans"): DataFrame = {
@@ -409,7 +409,11 @@ object Ann {
     * produce (quantization is a pure function), so a retrain from the
     * store is bit-identical to a retrain from the source embeddings:
     * seeds by the same salted md5 order, exact integer Lloyd's with
-    * floorDiv means, frozen thereafter. */
+    * floorDiv means, frozen thereafter. Each iteration is one
+    * exchange-free [[graft.core.DriverFold]] job: partitions sum their
+    * vectors per nearest cell (k·dim longs, k counts), the driver adds
+    * them. A null vector is skipped, a null component or wrong length
+    * fails as in [[portableCellOf]], and an overflowing sum throws. */
   def portableKmeansCentroidsQuantized(corpus: DataFrame, idCol: String,
       qCol: String, dim: Int, k: Int, iters: Int,
       salt: String = "pkmeans"): Seq[Array[Long]] = {
@@ -424,20 +428,23 @@ object Ann {
       s"portableKmeansCentroids needs $k dim=$dim vectors to seed")
     var cents: Seq[Array[Long]] = seeds.toSeq
     for (_ <- 0 until iters) {
-      val sums = q.withColumn("cell", portableCellOf(col("q"), cents))
-        .select(col("cell"), posexplode(col("q")))
-        .toDF("cell", "pos", "v")
-        .groupBy("cell", "pos")
-        .agg(sum("v").as("s"), count(lit(1)).as("n"))
-        .collect()
-        .map(r => (r.getLong(0), r.getInt(1)) -> (r.getLong(2), r.getLong(3)))
-        .toMap
-      cents = cents.zipWithIndex.map { case (old, j) =>
-        if (!sums.contains((j.toLong, 0))) old
-        else Array.tabulate(dim) { i =>
-          val (s, n) = sums((j.toLong, i))
-          Math.floorDiv(s, n)
-        }
+      val cs = cents.toArray
+      // [cell-major sums (k·dim), counts (k)]
+      val acc = graft.core.DriverFold(q.select("q")) { it =>
+        val a = new Array[Long](k * dim + k)
+        it.foreach(r => if (!r.isNullAt(0)) {
+          val v = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+            r.getSeq[Any](0).toArray)
+          val c = graft.functions.PqKernels.nearestCellInt(v, cs).toInt
+          (0 until dim).foreach(i =>
+            a(c * dim + i) = Math.addExact(a(c * dim + i), v.getLong(i)))
+          a(k * dim + c) += 1
+        })
+        a
+      } { (a, b) => a.indices.foreach(i => a(i) = Math.addExact(a(i), b(i))); a }
+      cents = cs.indices.map { j =>
+        val n = acc(k * dim + j)
+        if (n == 0L) cs(j) else Array.tabulate(dim)(i => Math.floorDiv(acc(j * dim + i), n))
       }
     }
     cents

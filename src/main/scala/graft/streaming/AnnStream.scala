@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
-import graft.core.SmallParquet
+import graft.core.{DriverFold, SmallParquet}
 import graft.operators.Sinks
 import graft.similarity.Ann
 
@@ -538,7 +538,8 @@ object AnnStream {
     * index-sized touch per ingest batch — a column-pruned id scan of
     * every committed partition. For integral ids the scan is now
     * bounded to the partitions whose footer id bounds INTERSECT the
-    * batch's id hull (one tiny min/max aggregate over the batch, then
+    * batch's id hull (one exchange-free [[DriverFold]] job over the
+    * cached batch, which also builds the cache, then
     * [[DedupStream.footerCandidateParts]] — metadata only, short-
     * circuit per dir): a committed id can only collide with a batch
     * id if it lies inside the batch's [min, max], so partitions
@@ -554,8 +555,7 @@ object AnnStream {
     val idType = batch.schema(idCol).dataType
     val hPath = new org.apache.hadoop.fs.Path(indexPath)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val emptyIds = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+    val emptyIds = Sinks.emptyFrame(spark,
       StructType(Seq(StructField(idCol, idType))))
     if (!fs.exists(hPath)) return emptyIds
     val schema = StructType(Seq(
@@ -566,10 +566,15 @@ object AnnStream {
     val hull: Option[Option[(Long, Long)]] = idType match {
       case org.apache.spark.sql.types.LongType |
            org.apache.spark.sql.types.IntegerType =>
-        val r = batch.agg(
-          min(col(idCol).cast(LongType)).as("mn"),
-          max(col(idCol).cast(LongType)).as("mx")).collect()(0)
-        Some(if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1))))
+        // [min, max] of the non-null ids; min > max: none
+        val h = DriverFold(batch.select(col(idCol).cast(LongType))) { it =>
+          val a = Array(Long.MaxValue, Long.MinValue)
+          it.foreach(r => if (!r.isNullAt(0)) {
+            a(0) = math.min(a(0), r.getLong(0)); a(1) = math.max(a(1), r.getLong(0))
+          })
+          a
+        }((a, b) => Array(math.min(a(0), b(0)), math.max(a(1), b(1))))
+        Some(if (h(0) > h(1)) None else Some((h(0), h(1))))
       case _ => None // non-integral ids: stats do not apply
     }
     // the candidate prior batches; None for the full guard scan (non-
@@ -896,9 +901,7 @@ object AnnStream {
       // a fully-retired serving tree reads as the empty frame it is
       // (delta's schema — the merge below only needs its columns)
       val existing = Sinks.readTree(spark, servingPath).getOrElse(
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          delta.schema))
+        Sinks.emptyFrame(spark, delta.schema))
         .filter(col("cell").isin(affected.map(_.toLong): _*)) // pruned scan
       existing
         .join(delta.select(col(idCol)), Seq(idCol), "left_anti")
@@ -922,12 +925,11 @@ object AnnStream {
     * the published layout so serve answers stop returning them
     * immediately, without waiting for the next full republish.
     *
-    * Cost mirrors [[publishIndexDelta]]: one pruned semi-join finds
-    * the AFFECTED cells (driver state ≤ the cell count — each id
-    * lives in exactly one cell), only those cell directories are
-    * re-read, filtered, and swapped; untouched cells are not read,
-    * not shuffled, not rewritten. The publish watermark sidecar is
-    * deliberately NOT advanced or rewound: it records which raw
+    * Cost is [[DedupStream.retireRows]]'s, shared with the raw-tree
+    * retire: only the AFFECTED cells are re-read, filtered and
+    * swapped; untouched cells are not read, not shuffled, not
+    * rewritten. The publish watermark sidecar is deliberately NOT
+    * advanced or rewound: it records which raw
     * batches have been folded, and retiring rows changes no fold
     * history (a later [[publishIndexDelta]] still folds exactly the
     * raw batches past the watermark — if the retired ids were also
@@ -939,48 +941,14 @@ object AnnStream {
     * [[graft.operators.Sinks.recoverSwap]] — every cell-tree
     * reader and writer runs it on entry ([[ivfServeTopK]],
     * [[pqServeTopK]], [[publishIndex]], [[publishIndexDelta]], and
-    * this method) — and a re-invoked retire is idempotent (the
-    * anti-join removes nothing twice). */
+    * this method) — and a re-invoked retire is idempotent (the id
+    * filter removes nothing twice). */
   def retireIds(spark: SparkSession, servingPath: String, ids: DataFrame,
       idCol: String): Unit = {
     Sinks.recoverSwap(spark, servingPath)
-    // no tree, or a tree with zero data files (already fully retired):
-    // nothing to remove and no schema to read — a queue drain hitting
-    // this state every batch must be a no-op, not a stream-killer (the
-    // DedupStream.retireIds guard)
-    val schema = Sinks.treeSchema(spark, servingPath).getOrElse(return)
-    val retire = ids.select(col(idCol)).distinct().cache()
-    try {
-      // stats-pruned probe front (the DedupStream.retireIds rule):
-      // footer min/max bounds the candidate CELLS before any column
-      // data is read; the semi-join stays the exact decision over the
-      // candidates, so answers are unchanged
-      val cand = DedupStream.statsCandidateParts(spark, servingPath,
-        "cell=", retire, idCol)
-      if (cand.exists(_.isEmpty)) return // provably no row to retire
-      // candidates read by explicit partition paths (the
-      // DedupStream.retireIds rule): the scan's listing is O(candidate
-      // cells), not O(tree cells)
-      val tree = cand match {
-        case None => spark.read.schema(schema).parquet(servingPath)
-        case Some(c) => spark.read.schema(schema)
-          .option("basePath", servingPath)
-          .parquet(c.map(n => s"$servingPath/cell=$n"): _*)
-      }
-      // driver state: affected cell ids only (≤ cells, never rows)
-      val affected = tree.join(retire, Seq(idCol), "left_semi")
-        .select(col("cell").cast(LongType)).distinct()
-        .collect().map(_.getLong(0).toString).sorted
-      if (affected.isEmpty) return
-      tree.filter(col("cell").isin(affected.map(_.toLong): _*))
-        .join(retire, Seq(idCol), "left_anti")
-        .repartition(col("cell")).write.mode(SaveMode.Overwrite)
-        .partitionBy("cell")
-        .parquet(Sinks.partitionStage(servingPath))
-      // a cell whose every row retired stages nothing and is dropped
-      Sinks.commitPartitions(spark, servingPath,
-        affected.map(c => s"cell=$c"))
-    } finally retire.unpersist()
+    // a cell whose every row retired stages nothing and is dropped
+    DedupStream.retireRows(spark, servingPath, "cell", ids, idCol,
+      Nil)((_, _) => ())
   }
 
   /** The published tree's watermark — the highest raw `batch_id`
@@ -1043,19 +1011,17 @@ object AnnStream {
     // consistent or loud, matching the r17 invalidate design's
     // guarantee.
     val indexRaw = Sinks.readTree(spark, indexPath).getOrElse(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField(idCol, queries.schema(idCol).dataType),
-          StructField("q", ArrayType(LongType)),
-          StructField("cell", LongType)))))
+      Sinks.emptyFrame(spark, StructType(Seq(
+        StructField(idCol, queries.schema(idCol).dataType),
+        StructField("q", ArrayType(LongType)),
+        StructField("cell", LongType)))))
     // embedded model first (a migrated republished tree commits its
     // geometry in the same rename as its rows — r18 zero-outage);
     // external store otherwise
     val cents = readServingCentroids(spark, indexPath, centroidsPath)
     val q = Ann.portableQueryCells(queries, idCol, vecCol, cents, nprobe)
-    val probed = q.select("cell").distinct()
-      .collect().map(_.getLong(0)) // ≤ nprobe per query
+    // ≤ nprobe per query: a per-partition distinct, then the driver's
+    val probed = DriverFold.distinctLongs(q.select("cell")).sorted
     val index = indexRaw
       .filter(col("cell").isin(probed: _*))
       .select(col(idCol), col("q"), col("cell").cast(LongType).as("cell"))
@@ -1253,12 +1219,10 @@ object AnnStream {
     require(codedFs.exists(hCoded),
       s"pqServeTopK: coded path does not exist: $codedPath")
     val codesRaw = Sinks.readTree(spark, codedPath).getOrElse(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField(idCol, vectors.schema(idCol).dataType),
-          StructField("codes", ArrayType(IntegerType)),
-          StructField("cell", LongType)))))
+      Sinks.emptyFrame(spark, StructType(Seq(
+        StructField(idCol, vectors.schema(idCol).dataType),
+        StructField("codes", ArrayType(IntegerType)),
+        StructField("cell", LongType)))))
     // embedded geometry next (r18 zero-outage: a migrated republished
     // coded tree carries the centroids AND the retrained codebook it
     // was encoded under, committed in the same rename as its rows);

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField,
   StructType}
+import graft.core.DriverFold
 import graft.dedup.Dedup
 import graft.operators.Sinks
 
@@ -127,10 +128,13 @@ object DedupStream {
     *
     * Cost discipline, each clause measured by the retire_probe cells
     * of the round-16 ingest probe (in git history):
-    *  - the retire ids collect to the driver under a bounded limit
-    *    (erasure requests are requester-sized — the [[driverLosers]]
-    *    eligibility rule; past the limit or for non-integral id types
-    *    this returns None and the caller runs the unpruned probe);
+    *  - the retire ids collect to the driver ONCE, as sorted distinct
+    *    longs, in one exchange-free job ([[DriverFold]]),
+    *    capped at `idLimit` (erasure requests are requester-sized —
+    *    the [[driverLosers]] eligibility rule; past the cap or for
+    *    non-integral id types this returns None and the caller takes
+    *    the join path). They come back with the candidates, so the
+    *    caller filters by them instead of joining against them;
     *  - listing + footer opens run on a BOUNDED POOL, one task per
     *    partition dir (sequential footer reads cost ~10 ms each on a
     *    checksummed local fs — 16 s for one probe over a 60-dir ×
@@ -146,28 +150,27 @@ object DedupStream {
     * A partition whose bounds cannot be established (a block with
     * rows but no usable id stats, an unreadable footer) is an
     * unconditional candidate — stats only ever over-approximate, and
-    * the caller's semi-join stays the exact decision. */
+    * the caller's id filter stays the exact decision. The candidates
+    * are None when a partition dir does not parse (every partition is
+    * then a candidate), `Some(Nil)` when no row can hold an id. */
   private[streaming] def statsCandidateParts(spark: SparkSession,
       treePath: String, prefix: String, ids: DataFrame,
-      idCol: String, idLimit: Int = 100000): Option[Seq[Long]] = {
+      idCol: String, idLimit: Int = 100000)
+      : Option[(Array[Long], Option[Seq[Long]])] = {
     import org.apache.spark.sql.types.{IntegerType, LongType}
     ids.schema(idCol).dataType match {
       case LongType | IntegerType => ()
       case _ => return None
     }
-    // the driver holds at most idLimit+1 UNBOXED longs (the Long
-    // encoder collects primitive arrays, never Row objects), and the
+    // the driver holds at most about 2·idLimit UNBOXED longs, and the
     // default bound is requester-sized — erasure/re-crawl requests are
     // human- or crawler-issued lists, not corpus slices (r16 advice:
     // the prior 2M-Row bound could make this "metadata-only" path the
-    // largest driver allocation of a drain). Past the bound the caller
-    // runs the unpruned probe, exactly as for non-integral ids.
-    val idArr = ids.select(col(idCol).cast(LongType)).na.drop()
-      .limit(idLimit + 1)
-      .as[Long](org.apache.spark.sql.Encoders.scalaLong).collect()
-    if (idArr.length > idLimit) return None // not requester-sized
-    if (idArr.isEmpty) return Some(Nil)
-    val sorted = idArr.distinct.sorted
+    // largest driver allocation of a drain)
+    val sorted = DriverFold.distinctLongs(
+      ids.select(col(idCol).cast(LongType)).na.drop(), idLimit + 1).sorted
+    if (sorted.length > idLimit) return None // not requester-sized
+    if (sorted.isEmpty) return Some((sorted, Some(Nil)))
     def anyIdIn(mn: Long, mx: Long): Boolean = {
       var lo = 0; var hi = sorted.length // least index with value >= mn
       while (lo < hi) {
@@ -176,8 +179,8 @@ object DedupStream {
       }
       lo < sorted.length && sorted(lo) <= mx
     }
-    footerCandidateParts(spark, treePath, prefix, idCol,
-      _ => true, idsOpt = Some(sorted))(anyIdIn)
+    Some((sorted, footerCandidateParts(spark, treePath, prefix, idCol,
+      _ => true, idsOpt = Some(sorted))(anyIdIn)))
   }
 
   /** The footer walker behind [[statsCandidateParts]] and
@@ -412,14 +415,14 @@ object DedupStream {
     * an id does not rewrite them (callers wanting a live view filter
     * the report against the surviving id set: [[livePairs]]).
     *
-    * Cost: footer min/max stats first bound the CANDIDATE partitions
-    * ([[statsCandidateParts]] — metadata only, no column data, no
-    * job over the tree), then one column-pruned semi-join over just
-    * the candidates finds the AFFECTED partitions exactly (driver
-    * state = the affected batch ids, ≤ #batches); only those
-    * partitions are re-read, filtered and rewritten — untouched
-    * batches are not read, not shuffled, not rewritten, and with
-    * disjoint id ranges not even probed.
+    * Cost ([[retireRows]], shared with the serving-tree retire): footer
+    * min/max stats bound the CANDIDATE partitions
+    * ([[statsCandidateParts]] — metadata only, no job over the tree),
+    * one column-pruned, exchange-free pass over them finds the
+    * AFFECTED partitions (driver state ≤ #batches), and only those are
+    * re-read, filtered and rewritten — untouched batches are not read,
+    * not shuffled, not rewritten, and with disjoint id ranges not even
+    * probed.
     *
     * Crash safety: filtered copies of every affected partition commit
     * through [[graft.operators.Sinks.commitPartitions]] (a fully-
@@ -443,80 +446,91 @@ object DedupStream {
     // resurrecting erased ids (the r17 drain-side bug class at a
     // different entry point — r18 advice)
     Sinks.recoverSwap(spark, treePath)
-    // no tree, or a tree with zero data files (every batch dropped or
-    // already retired everything): nothing to retire and no schema
+    retireRows(spark, treePath, "batch_id", ids, idCol, partitionCols) {
+      (next, affected) =>
+        // a batch whose every row retired writes no partition dir — stage
+        // an EMPTY one, so the batch keeps its dir (with no rows) instead
+        // of being dropped by the commit
+        affected.foreach { b =>
+          val staged = new org.apache.hadoop.fs.Path(next, s"batch_id=$b")
+          if (!fs.mkdirs(staged))
+            throw new java.io.IOException(s"retire: cannot stage empty $staged")
+        }
+        // SIDECAR-MAINTAINED TREES STAY MAINTAINED: when any affected
+        // live dir carries a stats sidecar (a compaction or migration
+        // wrote one), the rewritten partitions stage fresh min/max/rows
+        // sidecars WITH their data (promoting in the same renames —
+        // atomic), blooms carried over from the live dirs (a retire only
+        // removes rows, so the old filter stays a sound superset; no
+        // bloom rebuild on the erasure critical path). A tree that never
+        // had sidecars pays NO extra job here — except the free rows=0
+        // entries for dirs this retire EMPTIED, which prune every future
+        // probe of them without a single footer open.
+        val anySidecar = affected.exists { b =>
+          StatsSidecar.read(fs,
+            new org.apache.hadoop.fs.Path(hPath, s"batch_id=$b"), idCol)
+            .isDefined
+        }
+        if (anySidecar)
+          StatsSidecar.writeForTree(spark, next.toString, "batch_id=",
+            idCol, bloomFrom = Some(treePath))
+        else affected.foreach { b =>
+          val staged = new org.apache.hadoop.fs.Path(next, s"batch_id=$b")
+          if (!Sinks.hasDataFile(fs, staged))
+            StatsSidecar.writeEmpty(spark, staged.toString, idCol)
+        }
+    }
+  }
+
+  /** The retire shared by [[retireIds]] and [[AnnStream.retireIds]],
+    * after the caller's repair, over a tree partitioned by `pcol` (then
+    * `partitionCols`). A requester-sized integral id set
+    * ([[statsCandidateParts]]) stays on the driver: footer stats bound
+    * the candidate partitions, one exchange-free job over them collects
+    * the AFFECTED partitions (≤ the partition count), and their rewrite
+    * filters by membership, keeping null ids as `left_anti` does. Other
+    * id sets take the semi- and anti-join. `stage` completes the staged
+    * copy of the affected partitions before the commit, which drops an
+    * affected partition that has no staged copy. */
+  private[streaming] def retireRows(spark: SparkSession, treePath: String,
+      pcol: String, ids: DataFrame, idCol: String,
+      partitionCols: Seq[String])(
+      stage: (org.apache.hadoop.fs.Path, Seq[Long]) => Unit): Unit = {
     val schema = Sinks.treeSchema(spark, treePath).getOrElse(return)
-    val retire = ids.select(col(idCol)).distinct().cache()
+    val probe = statsCandidateParts(spark, treePath, s"$pcol=", ids, idCol)
+    if (probe.exists(_._2.exists(_.isEmpty))) return // provably no row to retire
+    // candidates read by EXPLICIT partition paths (basePath keeps the
+    // partition column): the scan's own file listing is then
+    // O(candidate dirs), not O(tree dirs)
+    val tree = probe.flatMap(_._2) match {
+      case None => spark.read.schema(schema).parquet(treePath)
+      case Some(c) => spark.read.schema(schema).option("basePath", treePath)
+        .parquet(c.map(n => s"$treePath/$pcol=$n"): _*)
+    }
+    val retire = if (probe.isEmpty) Some(ids.select(col(idCol)).distinct().cache())
+      else None
     try {
-      // stats-pruned probe front (round-16): footer min/max bounds the
-      // CANDIDATE partitions before any column data is read, so the
-      // probe costs O(footers + |ids|·#partitions + candidate
-      // partitions' id columns) instead of one full id-column scan of
-      // the tree per request — at 100 TB the difference between a
-      // metadata touch and a corpus scan per erasure. The semi-join
-      // below stays the EXACT decision over the candidates (stats can
-      // only over-approximate), so answers are unchanged; non-integral
-      // id types fall back to the unpruned probe.
-      val cand = statsCandidateParts(spark, treePath, "batch_id=",
-        retire, idCol)
-      if (cand.exists(_.isEmpty)) return // provably no row to retire
-      // candidates read by EXPLICIT partition paths (basePath keeps the
-      // partition column): the scan's own file listing is then
-      // O(candidate dirs), not O(tree dirs) — without this the probe's
-      // Spark-side listing alone grows with the tree
-      val tree = cand match {
-        case None => spark.read.schema(schema).parquet(treePath)
-        case Some(c) => spark.read.schema(schema).option("basePath", treePath)
-          .parquet(c.map(n => s"$treePath/batch_id=$n"): _*)
+      val (hits, kept) = probe match {
+        case Some((sorted, _)) =>
+          // false for a null id, so `kept` keeps null-id rows
+          val in = graft.functions.SetFunctions.arrayAnyInLongSet(
+            array(col(idCol).cast(LongType)), sorted)
+          (tree.filter(in), tree.filter(!in))
+        case None => (tree.join(retire.get, Seq(idCol), "left_semi"),
+          tree.join(retire.get, Seq(idCol), "left_anti"))
       }
-      // driver state: affected batch ids only (≤ #batches, never rows)
-      val affected = tree.join(retire, Seq(idCol), "left_semi")
-        .select(col("batch_id").cast(org.apache.spark.sql.types.LongType))
-        .distinct().collect().map(_.getLong(0)).sorted
+      val affected = DriverFold.distinctLongs(hits.select(col(pcol).cast(LongType)))
+        .sorted.toSeq
       if (affected.isEmpty) return
-      val next = new org.apache.hadoop.fs.Path(
-        Sinks.partitionStage(treePath))
-      val kept = tree
-        .filter(col("batch_id").isin(affected: _*))
-        .join(retire, Seq(idCol), "left_anti")
-      kept.repartition((("batch_id" +: partitionCols).map(col)): _*)
+      val next = new org.apache.hadoop.fs.Path(Sinks.partitionStage(treePath))
+      kept.filter(col(pcol).isin(affected: _*))
+        .repartition((pcol +: partitionCols).map(col): _*)
         .write.mode(SaveMode.Overwrite)
-        .partitionBy(("batch_id" +: partitionCols): _*)
+        .partitionBy(pcol +: partitionCols: _*)
         .parquet(next.toString)
-      // a batch whose every row retired writes no partition dir — stage
-      // an EMPTY one, so the batch keeps its dir (with no rows) instead
-      // of being dropped by the commit
-      affected.foreach { b =>
-        val staged = new org.apache.hadoop.fs.Path(next, s"batch_id=$b")
-        if (!fs.mkdirs(staged))
-          throw new java.io.IOException(s"retire: cannot stage empty $staged")
-      }
-      // SIDECAR-MAINTAINED TREES STAY MAINTAINED: when any affected
-      // live dir carries a stats sidecar (a compaction or migration
-      // wrote one), the rewritten partitions stage fresh min/max/rows
-      // sidecars WITH their data (promoting in the same renames —
-      // atomic), blooms carried over from the live dirs (a retire only
-      // removes rows, so the old filter stays a sound superset; no
-      // bloom rebuild on the erasure critical path). A tree that never
-      // had sidecars pays NO extra job here — except the free rows=0
-      // entries for dirs this retire EMPTIED, which prune every future
-      // probe of them without a single footer open.
-      val anySidecar = affected.exists { b =>
-        StatsSidecar.read(fs,
-          new org.apache.hadoop.fs.Path(hPath, s"batch_id=$b"), idCol)
-          .isDefined
-      }
-      if (anySidecar)
-        StatsSidecar.writeForTree(spark, next.toString, "batch_id=",
-          idCol, bloomFrom = Some(treePath))
-      else affected.foreach { b =>
-        val staged = new org.apache.hadoop.fs.Path(next, s"batch_id=$b")
-        if (!Sinks.hasDataFile(fs, staged))
-          StatsSidecar.writeEmpty(spark, staged.toString, idCol)
-      }
-      Sinks.commitPartitions(spark, treePath,
-        affected.map(b => s"batch_id=$b"))
-    } finally retire.unpersist()
+      stage(next, affected)
+      Sinks.commitPartitions(spark, treePath, affected.map(b => s"$pcol=$b"))
+    } finally retire.foreach(_.unpersist())
   }
 
   /** Drain a RETIRE-REQUEST QUEUE: apply every pending request file
@@ -547,7 +561,7 @@ object DedupStream {
     * leftover instead of throwing (a reused name means a replayed
     * request — already applied, idempotent).
     *
-    * Crash safety: [[retireIds]] is idempotent (an anti-join removes
+    * Crash safety: [[retireIds]] is idempotent (a retire removes
     * nothing twice) and the file move into `_done` happens only AFTER
     * every tree processed the request — a crash anywhere replays the
     * drain against already-retired trees (no-op) and then completes

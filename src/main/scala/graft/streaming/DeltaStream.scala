@@ -99,7 +99,6 @@ object DeltaStream {
     if (fs.exists(hPath))
       spark.read.schema(schema).parquet(path)
     else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        schema)
+      Sinks.emptyFrame(spark, schema)
   }
 }

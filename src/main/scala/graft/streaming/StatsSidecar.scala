@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import graft.core.DriverFold
 
 /** Per-partition-directory stats sidecar for the maintenance probes —
   * the round-16 verdict's "stats manifest (+ bloom)" ask, placed where
@@ -43,8 +44,8 @@ import org.apache.spark.sql.types.LongType
   *
   * The Bloom filter is deterministic and engine-local: k positions per
   * id via chained xxhash64 (the same bits Spark's `xxhash64(id, i)`
-  * computes, so the EXECUTOR side builds positions with the built-in
-  * codegen'd expression and the DRIVER probe recomputes them with
+  * computes, so the tree build uses the built-in codegen'd expression
+  * while the per-dir build and the DRIVER probe compute them with
   * catalyst's XXH64 — no UDF, no serialized-filter format to keep
   * compatible). Sized ~16 bits/id (next power of two, floor 1024, cap
   * 2²⁰) at k = 5 → ~0.3% false-positive rate; a false positive only
@@ -97,11 +98,13 @@ object StatsSidecar {
 
   /** Write one sidecar into `dirPath` describing `rows` (a frame whose
     * `idCol` casts to long — non-integral id trees get no sidecar and
-    * keep the footer fallback). Two bounded jobs: one scalar aggregate
-    * (min/max over non-null ids — the SQL aggregates skip nulls
-    * natively — plus the TOTAL row count), and a packed-word Bloom
-    * build whose driver state is ≤ `bits`/8 bytes
-    * ([[packedBloomWords]]). */
+    * keep the footer fallback). One exchange-free
+    * [[DriverFold]] job: each partition counts its rows and
+    * non-null ids, bounds the non-null ids and sets their bits in a
+    * `MaxBits` filter; the driver ORs the partials as they arrive (one
+    * 128 KiB filter) and folds it down to `bitsFor(non-null ids)`,
+    * exactly: both are powers of two, so big word `i` lands in word
+    * `i & (bits/64 − 1)` — the words [[writeForTree]] builds. */
   def writeForDir(spark: SparkSession, rows: DataFrame, dirPath: String,
       idCol: String): Unit = {
     import org.apache.spark.sql.types.{IntegerType, LongType => LT}
@@ -109,43 +112,57 @@ object StatsSidecar {
       case LT | IntegerType => ()
       case _ => return
     }
-    val ids = rows.select(col(idCol).cast(LongType).as("_id"))
-    val r = ids.agg(min("_id"), max("_id"), count(lit(1)),
-      count(col("_id"))).collect()(0)
-    val total = r.getLong(2)
-    val nn = r.getLong(3) // non-null ids — the Bloom's population
+    // [min, max, total rows, non-null ids, MaxBits filter words…]
+    val s = DriverFold(rows.select(col(idCol).cast(LongType))) { it =>
+      val a = new Array[Long](4 + (MaxBits >>> 6))
+      a(0) = Long.MaxValue; a(1) = Long.MinValue
+      it.foreach { r =>
+        a(2) += 1
+        if (!r.isNullAt(0)) {
+          val id = r.getLong(0)
+          a(0) = math.min(a(0), id); a(1) = math.max(a(1), id); a(3) += 1
+          (0 until K).foreach { i =>
+            val p = position(id, i, MaxBits)
+            a(4 + (p >>> 6)) |= 1L << (p & 63)
+          }
+        }
+      }
+      a
+    } { (a, b) =>
+      a(0) = math.min(a(0), b(0)); a(1) = math.max(a(1), b(1))
+      a(2) += b(2); a(3) += b(3)
+      (4 until a.length).foreach(i => a(i) |= b(i))
+      a
+    }
+    val (total, nn) = (s(2), s(3)) // nn: non-null ids, the Bloom's population
     val entry =
       if (total == 0L) Entry(idCol, 1L, 0L, 0L, MinBits, None)
       else if (nn == 0L) Entry(idCol, 1L, 0L, total, MinBits, None)
       else {
-        val bits = bitsFor(nn)
-        val bs = new Array[Long]((bits + 63) >>> 6)
-        packedBloomWords(ids.na.drop(), Nil, bits)
-          .collect().foreach(w => bs(w.getInt(0)) = w.getLong(1))
-        Entry(idCol, r.getLong(0), r.getLong(1), total, bits, Some(bs))
+        val bs = new Array[Long](bitsFor(nn) >>> 6)
+        (0 until (MaxBits >>> 6)).foreach(i => bs(i & (bs.length - 1)) |= s(4 + i))
+        Entry(idCol, s(0), s(1), total, bitsFor(nn), Some(bs))
       }
     write(spark, dirPath, entry)
   }
 
-  /** The executor-side Bloom build shared by [[writeForDir]] and
-    * [[writeForTree]]: each `_id`'s K chained-xxhash64 positions
-    * become single-bit longs OR-merged per 64-bit WORD of the filter —
-    * the codegen'd built-ins `xxhash64`/`shiftleft`/`bit_or` end to
-    * end, so what crosses to the driver is the packed bitmask itself
-    * (≤ bits/64 non-zero words per group), never a position set (r18
+  /** The executor-side Bloom build of [[writeForTree]]: each `_id`'s K
+    * chained-xxhash64 positions become single-bit longs OR-merged per
+    * 64-bit WORD of the filter — the codegen'd built-ins
+    * `xxhash64`/`shiftleft`/`bit_or` end to end, so what crosses to
+    * the driver is the packed bitmask itself (≤ bits/64 non-zero words
+    * per dir), never a position set (r18
     * advice: the previous per-dir `collect_set` of Int positions held
     * up to 32× the filter's size in boxed driver state — multiple GB
-    * at a 600-dir migration). `groupCols` is empty for one dir, `_p`
-    * for a whole tree; output columns: [groupCols…, `_w` (word
-    * index, Int), `_word` (word value, Long)]. */
-  private def packedBloomWords(ids: DataFrame, groupCols: Seq[String],
-      bits: Int): DataFrame = {
+    * at a 600-dir migration). Input columns: [`_p` (dir), `_id`];
+    * output: [`_p`, `_w` (word index, Int), `_word` (word value)]. */
+  private def packedBloomWords(ids: DataFrame, bits: Int): DataFrame = {
     val posCols = (0 until K).map(i =>
       pmod(xxhash64(col("_id"), lit(i.toLong)), lit(bits.toLong))
         .cast("long"))
     ids
-      .select(groupCols.map(col) :+ explode(array(posCols: _*)).as("_pos"): _*)
-      .groupBy(groupCols.map(col) :+ expr("int(_pos div 64)").as("_w"): _*)
+      .select(col("_p"), explode(array(posCols: _*)).as("_pos"))
+      .groupBy(col("_p"), expr("int(_pos div 64)").as("_w"))
       .agg(expr("bit_or(shiftleft(1L, int(_pos % 64)))").as("_word"))
   }
 
@@ -246,8 +263,7 @@ object StatsSidecar {
         tree.get
           .select(col(pcol).cast(LongType).as("_p"),
             col(idCol).cast(LongType).as("_id"))
-          .na.drop(Seq("_id")),
-        Seq("_p"), bits)
+          .na.drop(Seq("_id")), bits)
         .orderBy("_p", "_w")
       // ordered toLocalIterator: Spark ships one range partition at a
       // time; the driver materializes one dir's words, writes its

@@ -437,4 +437,60 @@ class AnnSpec extends SparkSpec {
     assert(swept == curve,
       s"curve/artifact drift: artifact=$swept table=$curve")
   }
+
+  /** The per-(cell, component) grouped aggregate the one-pass Lloyd's
+    * replaced, as the reference it must match bit for bit. */
+  private def groupedLloyds(q: org.apache.spark.sql.DataFrame, dim: Int,
+      k: Int, iters: Int, salt: String): Seq[Array[Long]] = {
+    import graft.corpus.Selection
+    var cents: Seq[Array[Long]] = q
+      .orderBy(Selection.hashValue(Selection.saltedKey(col("vec_id"), salt)),
+        col("vec_id"))
+      .limit(k).select("q").collect().map(_.getSeq[Long](0).toArray).toSeq
+    for (_ <- 0 until iters) {
+      val sums = q.withColumn("cell", Ann.portableCellOfDeclarative(col("q"), cents))
+        .select(col("cell"), posexplode(col("q"))).toDF("cell", "pos", "v")
+        .groupBy("cell", "pos").agg(sum("v"), count(lit(1))).collect()
+        .map(r => (r.getLong(0), r.getInt(1)) -> (r.getLong(2), r.getLong(3)))
+        .toMap
+      cents = cents.zipWithIndex.map { case (old, j) =>
+        if (!sums.contains((j.toLong, 0))) old
+        else Array.tabulate(dim) { i =>
+          val (s, n) = sums((j.toLong, i)); Math.floorDiv(s, n)
+        }
+      }
+    }
+    cents
+  }
+
+  test("one-pass Lloyd's: bit-identical to the grouped aggregate; empty cells keep; overflow throws") {
+    import spark.implicits._
+    def check(q: org.apache.spark.sql.DataFrame, dim: Int, k: Int,
+        iters: Int): Seq[Seq[Long]] = {
+      val got = Ann.portableKmeansCentroidsQuantized(q, "vec_id", "q", dim,
+        k, iters, "pkmeans").map(_.toSeq)
+      assert(got == groupedLloyds(q, dim, k, iters, "pkmeans").map(_.toSeq))
+      got
+    }
+    val emb = Ann.portableAssignWithCentroids(
+        Tables.embeddings(spark, sf).select("vec_id", "embedding"),
+        "vec_id", "embedding", Seq(Array.fill(64)(0L)))
+      .select("vec_id", "q").repartition(3)
+    check(emb, 64, 8, 3)
+    // two distinct vectors for four cells: at least two cells empty
+    val two = (0L until 40L).map(i => (i, Seq(i % 2 * 1000L, -7L, 3L)))
+      .toDF("vec_id", "q")
+    val cents = check(two, 3, 4, 2)
+    assert(cents.distinct.size <= 2 || cents.size == 4)
+    // overflow fails loudly, inside a partition and across partials
+    val big = Seq((1L, Seq(Long.MaxValue - 1L)), (2L, Seq(Long.MaxValue - 1L)))
+      .toDF("vec_id", "q")
+    Seq(big.coalesce(1), big.repartition(2)).foreach { df =>
+      val e = intercept[Exception](
+        Ann.portableKmeansCentroidsQuantized(df, "vec_id", "q", 1, 1, 1))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException]), e)
+      intercept[Exception](groupedLloyds(df, 1, 1, 1, "pkmeans"))
+    }
+  }
 }

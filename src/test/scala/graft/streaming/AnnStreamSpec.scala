@@ -1744,4 +1744,29 @@ class AnnStreamSpec extends SparkSpec {
       queries, "vec_id", "embedding", topK = 1, nprobe = 2)
     assert(!back.isEmpty)
   }
+
+  test("batch 0's dedup write plans no join against the empty committed-id frame") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, LogicalPlan)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          d: Long): Unit = plans.add(f -> qe.optimizedPlan)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try AnnStream.processIvfBatch(emb, 0L, tmp("asnj_idx") + "/index",
+      tmp("asnj_cen") + "/centroids", "vec_id", "embedding", dim = 64,
+      cells = 8, iters = 2)
+    finally {
+      assert(org.apache.spark.sql.graftbridge.ListenerBusBridge.drain(
+        spark.sparkContext))
+      spark.listenerManager.unregister(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val all = plans.asScala.toSeq
+    assert(all.exists(_._1 == "command"), all.map(_._1))
+    assert(!all.exists(_._2.exists(_.isInstanceOf[Join])),
+      all.map(_._2.treeString).mkString("\n"))
+  }
 }

@@ -607,6 +607,13 @@ class DedupStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  /** [[DedupStream.statsCandidateParts]]'s candidate partitions alone. */
+  private def candidateParts(spark: org.apache.spark.sql.SparkSession,
+      tree: String, prefix: String, ids: org.apache.spark.sql.DataFrame,
+      idCol: String): Option[Seq[Long]] =
+    DedupStream.statsCandidateParts(spark, tree, prefix, ids, idCol)
+      .flatMap(_._2)
+
   test("retire probe: footer stats bound the candidate partitions; answers unchanged") {
     import spark.implicits._
     // range-sliced tree: each batch dir holds a contiguous id range, so
@@ -619,7 +626,7 @@ class DedupStreamSpec extends SparkSpec {
     // ids confined to batch dirs 1 and 4, plus a never-stored id far
     // outside every range
     val ids = Seq(55L, 57L, 230L, 900000L).toDF("doc_id")
-    val cand = DedupStream.statsCandidateParts(spark, treeP, "batch_id=",
+    val cand = candidateParts(spark, treeP, "batch_id=",
       ids, "doc_id")
     assert(cand.contains(Seq(1L, 4L)),
       s"stats candidates should be exactly dirs 1 and 4, got $cand")
@@ -633,13 +640,13 @@ class DedupStreamSpec extends SparkSpec {
     assert(new java.io.File(treeP, "batch_id=2").listFiles()
       .count(_.getName.endsWith(".parquet")) == 1)
     // ids with no overlap anywhere: probe proves no-op without a scan
-    assert(DedupStream.statsCandidateParts(spark, treeP, "batch_id=",
+    assert(candidateParts(spark, treeP, "batch_id=",
       Seq(800000L).toDF("doc_id"), "doc_id").contains(Nil))
     // non-integral id type: stats path declines, caller falls back
     val strTree = tmp("dsfs_str") + "/tree"
     Seq(("a", 0L), ("b", 1L)).toDF("doc_id", "batch_id")
       .write.partitionBy("batch_id").parquet(strTree)
-    assert(DedupStream.statsCandidateParts(spark, strTree, "batch_id=",
+    assert(candidateParts(spark, strTree, "batch_id=",
       Seq("a").toDF("doc_id"), "doc_id").isEmpty)
   }
 
@@ -655,18 +662,18 @@ class DedupStreamSpec extends SparkSpec {
       .write.partitionBy("batch_id").parquet(treeP)
     val ids = Seq(55L, 57L).toDF("doc_id") // both live in dirs 1 and 3
     // without sidecars: stats can't discriminate — every dir a candidate
-    assert(DedupStream.statsCandidateParts(spark, treeP, "batch_id=",
+    assert(candidateParts(spark, treeP, "batch_id=",
       ids, "doc_id").contains(0L to 5L))
     graft.streaming.StatsSidecar.writeForTree(spark, treeP,
       "batch_id=", "doc_id")
     // with sidecars: bloom membership bounds the candidates (a ~0.3%
     // fp could admit an extra dir; never fewer than the true holders)
-    val cand = DedupStream.statsCandidateParts(spark, treeP, "batch_id=",
+    val cand = candidateParts(spark, treeP, "batch_id=",
       ids, "doc_id").get
     assert(cand.contains(1L) && cand.contains(3L) && cand.length <= 3,
       s"bloom should prune the non-holding dirs, got $cand")
     // a provably-absent id set proves absence from sidecars alone
-    assert(DedupStream.statsCandidateParts(spark, treeP, "batch_id=",
+    assert(candidateParts(spark, treeP, "batch_id=",
       Seq(900000L).toDF("doc_id"), "doc_id").contains(Nil))
     // row counts come from the sidecars too
     assert(DedupStream.footerRowCount(spark, treeP, "batch_id=") == 300L)
@@ -680,7 +687,7 @@ class DedupStreamSpec extends SparkSpec {
     val left = spark.read.parquet(treeP).select("doc_id").as[Long]
       .collect().toSet
     assert(left == (0L until 300L).toSet -- Set(55L, 57L))
-    val reprobe = DedupStream.statsCandidateParts(spark, treeP,
+    val reprobe = candidateParts(spark, treeP,
       "batch_id=", ids, "doc_id").get
     assert(reprobe.toSet.subsetOf(Set(1L, 3L)),
       s"carried blooms must never admit new dirs, got $reprobe")
@@ -692,7 +699,7 @@ class DedupStreamSpec extends SparkSpec {
     assert(new java.io.File(treeP + "/batch_id=5",
       graft.streaming.StatsSidecar.FileName).exists())
     assert(DedupStream.footerRowCount(spark, treeP, "batch_id=") == 298L)
-    val cand2 = DedupStream.statsCandidateParts(spark, treeP, "batch_id=",
+    val cand2 = candidateParts(spark, treeP, "batch_id=",
       Seq(56L).toDF("doc_id"), "doc_id")
     assert(cand2.contains(Seq(5L)))
     // a sidecar written for ANOTHER id column is ignored (footer
@@ -703,7 +710,7 @@ class DedupStreamSpec extends SparkSpec {
       .write.partitionBy("batch_id").parquet(otherP)
     graft.streaming.StatsSidecar.writeForTree(spark, otherP,
       "batch_id=", "other_id")
-    assert(DedupStream.statsCandidateParts(spark, otherP, "batch_id=",
+    assert(candidateParts(spark, otherP, "batch_id=",
       Seq(5L).toDF("doc_id"), "doc_id").contains(Seq(0L)))
   }
 
@@ -726,17 +733,17 @@ class DedupStreamSpec extends SparkSpec {
     assert(DedupStream.footerRowCount(spark, treeP, "batch_id=") == 115L)
     // a held id names only dir 0; the all-null dir prunes (its empty
     // id interval can hold no probed long)
-    assert(DedupStream.statsCandidateParts(spark, treeP, "batch_id=",
+    assert(candidateParts(spark, treeP, "batch_id=",
       Seq(55L).toDF("doc_id"), "doc_id").contains(Seq(0L)))
     // absence still proves from sidecars alone
-    assert(DedupStream.statsCandidateParts(spark, treeP, "batch_id=",
+    assert(candidateParts(spark, treeP, "batch_id=",
       Seq(900000L).toDF("doc_id"), "doc_id").contains(Nil))
     // writeForDir (the compaction path) agrees on the total-rows rule
     val dirP = treeP + "/batch_id=0"
     graft.streaming.StatsSidecar.writeForDir(spark,
       spark.read.parquet(dirP), dirP, "doc_id")
     assert(DedupStream.footerRowCount(spark, treeP, "batch_id=") == 115L)
-    assert(DedupStream.statsCandidateParts(spark, treeP, "batch_id=",
+    assert(candidateParts(spark, treeP, "batch_id=",
       Seq(55L).toDF("doc_id"), "doc_id").contains(Seq(0L)))
   }
 
@@ -930,5 +937,80 @@ class DedupStreamSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().sorted.toSeq == idxAfterFirst)
     assert(spark.read.parquet(s"$survivorsPath/batch_id=0")
       .select("doc_id").as[Long].collect().sorted.toSeq == survAfterFirst)
+  }
+
+  test("one-pass sidecar: writeForDir writes the bytes writeForTree writes for a one-dir tree") {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    def bytes(dir: String) = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(dir, StatsSidecar.FileName)), "UTF-8")
+    def same(name: String, df: org.apache.spark.sql.DataFrame,
+        fromDir: Boolean = true): Unit = {
+      val tree = tmp(s"dsop_$name") + "/tree"
+      val dir = tree + "/batch_id=0"
+      df.repartition(3).write.parquet(dir) // several partials to merge
+      StatsSidecar.writeForTree(spark, tree, "batch_id=", "id")
+      val viaTree = bytes(dir)
+      StatsSidecar.writeForDir(spark,
+        if (fromDir) spark.read.schema(df.schema).parquet(dir) else df,
+        dir, "id")
+      assert(bytes(dir) == viaTree, name)
+    }
+    // 1,024 and 65,536 filter bits
+    same("long_small", (0L until 10L).map(i => (i * 7919L, s"p$i"))
+      .toDF("id", "payload"))
+    same("long_large", (0L until 3000L).map(i => (i * 2654435761L - 5L, s"p$i"))
+      .toDF("id", "payload"))
+    same("int_nulls", ((-20 until 40).map(Option(_)) ++
+      Seq.fill(4)(Option.empty[Int])).toDF("id"))
+    same("all_null", Seq.fill(5)(Option.empty[Long]).toDF("id"))
+    same("empty", spark.createDataFrame(
+      java.util.List.of[org.apache.spark.sql.Row](),
+      StructType(Seq(StructField("id", LongType)))))
+    // a frame with no partition at all folds as an empty one
+    same("no_partition", Sinks.emptyFrame(spark,
+      StructType(Seq(StructField("id", LongType)))), fromDir = false)
+  }
+
+  test("retire keeps null-id rows; an id set one over idLimit takes the join path to the same tree") {
+    val rows = (0L until 50L).map(i => (Option(i), i / 10)) ++
+      Seq((Option.empty[Long], 0L), (Option.empty[Long], 3L))
+    def build(name: String): String = {
+      val t = tmp(name) + "/tree"
+      rows.toDF("doc_id", "batch_id").repartition($"batch_id")
+        .write.partitionBy("batch_id").parquet(t)
+      t
+    }
+    def contents(t: String) = spark.read.parquet(t)
+      .select($"doc_id", $"batch_id".cast("long")).as[(Option[Long], Long)]
+      .collect().sorted.toSeq
+    val small = Seq(3L, 31L, 32L).toDF("doc_id")
+    // the same three ids plus 99,998 never stored: 100,001 distinct
+    val big = spark.range(1000000L, 1099998L).toDF("doc_id").union(small)
+    val (viaFilter, viaJoin) = (build("dsrn_filter"), build("dsrn_join"))
+    assert(DedupStream.statsCandidateParts(spark, viaJoin, "batch_id=",
+      big, "doc_id").isEmpty)
+    DedupStream.retireIds(spark, viaFilter, small, "doc_id")
+    DedupStream.retireIds(spark, viaJoin, big, "doc_id")
+    val expected = rows.filterNot(r => r._1.exists(Set(3L, 31L, 32L))).sorted
+    assert(contents(viaFilter) == expected)
+    assert(contents(viaJoin) == expected)
+    // the serving-tree retire, on both paths
+    def cellTree(name: String): String = {
+      val t = tmp(name) + "/serving"
+      rows.map { case (id, b) => (id, Seq(b), b % 2) }
+        .toDF("vec_id", "q", "cell").repartition($"cell")
+        .write.partitionBy("cell").parquet(t)
+      t
+    }
+    def cells(t: String) = spark.read.parquet(t)
+      .select($"vec_id", $"cell".cast("long")).as[(Option[Long], Long)]
+      .collect().sorted.toSeq
+    val expectedCells = expected.map { case (id, b) => (id, b % 2) }.sorted
+    Seq(small, big).foreach { ids =>
+      val t = cellTree("dsrn_cells")
+      AnnStream.retireIds(spark, t, ids.withColumnRenamed("doc_id", "vec_id"),
+        "vec_id")
+      assert(cells(t) == expectedCells)
+    }
   }
 }
