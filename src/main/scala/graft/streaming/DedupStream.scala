@@ -162,7 +162,7 @@ object DedupStream {
       case LongType | IntegerType => ()
       case _ => return None
     }
-    // the driver holds at most about 2·idLimit UNBOXED longs, and the
+    // the driver holds at most about 2·idLimit longs, and the
     // default bound is requester-sized — erasure/re-crawl requests are
     // human- or crawler-issued lists, not corpus slices (r16 advice:
     // the prior 2M-Row bound could make this "metadata-only" path the
