@@ -846,8 +846,9 @@ case class ODataCountPartition(count: Long) extends InputPartition
   * stop, byte/row statistics) and the streaming delta rounds
   * (deltaLink extraction), so the two can never drift on budget
   * accounting, maxPages discipline, or partition construction. Each
-  * page body is scanned exactly once ([[PageCursor.pageMeta]]:
-  * nextLink + deltaLink + row count from one streaming pass). */
+  * page body is fetched as its UTF-8 bytes and scanned exactly once
+  * ([[PageCursor.scanPage]]: nextLink + deltaLink + row count from one
+  * streaming pass); the budget counts those bytes. */
 private[v2] object PageWalk {
   final case class Result(parts: Array[InputPartition], totalBytes: Long,
       totalRows: Long, deltaLink: Option[String])
@@ -871,17 +872,16 @@ private[v2] object PageWalk {
             "merely shortens a full refresh but CORRUPTS a delta sync " +
             "(incomplete change set, deltaLink page never reached)")
       val path = next.get
-      val body = fetcher.fetch(path)
-      val bodyBytes = PageCursor.utf8Length(body)
-      bytes += bodyBytes
-      if (bodyBytes <= budget) {
-        budget -= bodyBytes
+      val body = fetcher.fetchBytes(path)
+      val meta = PageCursor.scanPage(body, path).meta
+      bytes += body.length
+      if (body.length <= budget) {
+        budget -= body.length
         out += ODataInputPartition(path, Some(body))
       } else {
         out += ODataInputPartition(path, None)
       }
       pages += 1
-      val meta = PageCursor.pageMeta(body, path)
       rows += meta.rows
       next = meta.nextLink
       if (next.isEmpty) deltaLink = meta.deltaLink
@@ -1162,9 +1162,10 @@ class ODataScan(required: StructType, pushed: Array[Filter], conf: ODataConf,
     new ODataReaderFactory(required, pushed, conf)
 }
 
-/** One page of the scan. `body` present ⇒ fetched on the driver within
-  * the byte budget; absent ⇒ the executor fetches `pagePath` itself. */
-case class ODataInputPartition(pagePath: String, body: Option[String])
+/** One page of the scan. `body` present ⇒ its UTF-8 bytes, fetched on
+  * the driver within the byte budget; absent ⇒ the executor fetches
+  * `pagePath` itself. */
+case class ODataInputPartition(pagePath: String, body: Option[Array[Byte]])
     extends InputPartition
 
 class ODataReaderFactory(required: StructType, pushed: Array[Filter],
@@ -1212,12 +1213,12 @@ class ODataPartitionReader(partition: ODataInputPartition,
 
   private val rows: Iterator[InternalRow] = {
     val body = partition.body.getOrElse(
-      conf.newFetcher().fetch(partition.pagePath))
+      conf.newFetcher().fetchBytes(partition.pagePath))
     val pageSchema = StructType(Seq(StructField("value", ArrayType(parseSchema))))
     val parser = new JacksonParser(pageSchema,
       new JSONOptions(Map("multiLine" -> "true"), "UTC"), false, Seq.empty)
-    val parsed = parser.parse[String](body, CreateJacksonParser.string,
-      UTF8String.fromString)
+    val parsed = parser.parse[UTF8String](UTF8String.fromBytes(body),
+      CreateJacksonParser.utf8String, identity)
     val filterEval = sourceFilter _
     // required is a prefix of parseSchema, so the pruning projection
     // reads ordinals 0..required.length-1 as-is; delta mode remaps by
@@ -1295,17 +1296,29 @@ class RetryableFetchException(msg: String, cause: Throwable = null)
   extends RuntimeException(msg, cause)
 
 /** Page transport: live mode is HTTP with auth, fixture mode reads
-  * local files. */
+  * local files. The readers take a page as its UTF-8 bytes
+  * ([[fetchBytes]]): the cursor scan and the executors' parse both run
+  * over them, so a body is never decoded to a `String` on the way. A
+  * transport that has only text implements [[fetch]]; the engine's
+  * transports ([[LocalPageFetcher]], [[HttpPageFetcher]]) implement
+  * [[fetchBytes]] and serve [[fetch]] as its decoded view, and
+  * [[RetryingPageFetcher]] retries whichever view is asked for. */
 trait PageFetcher extends Serializable {
   /** @return raw page body; throw [[RetryableFetchException]] for
     * transient failures, any other exception for permanent ones. */
   def fetch(path: String): String
+
+  /** The page body as its UTF-8 bytes; same failure contract as
+    * [[fetch]]. */
+  def fetchBytes(path: String): Array[Byte] =
+    fetch(path).getBytes(java.nio.charset.StandardCharsets.UTF_8)
 }
 
 class LocalPageFetcher extends PageFetcher {
   override def fetch(path: String): String =
-    new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-      java.nio.charset.StandardCharsets.UTF_8)
+    new String(fetchBytes(path), java.nio.charset.StandardCharsets.UTF_8)
+  override def fetchBytes(path: String): Array[Byte] =
+    java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
 }
 
 /** Live OData transport (the reference's authenticated GET,
@@ -1318,7 +1331,10 @@ class LocalPageFetcher extends PageFetcher {
 class HttpPageFetcher(tokenProvider: Option[TokenProvider])
     extends PageFetcher {
 
-  override def fetch(path: String): String = fetchOnce(path) match {
+  override def fetch(path: String): String =
+    new String(fetchBytes(path), java.nio.charset.StandardCharsets.UTF_8)
+
+  override def fetchBytes(path: String): Array[Byte] = fetchOnce(path) match {
     case Right(body) => body
     case Left(_) => // 401: token expired or revoked — refresh and retry
       tokenProvider.foreach(_.invalidate())
@@ -1337,7 +1353,7 @@ class HttpPageFetcher(tokenProvider: Option[TokenProvider])
     * same socket — and, against live Graph, the same TLS session — to
     * the next page. Only a transport failure, after which the socket's
     * state is unknown, disconnects. */
-  private def fetchOnce(path: String): Either[Int, String] = {
+  private def fetchOnce(path: String): Either[Int, Array[Byte]] = {
     val conn = java.net.URI.create(path).toURL.openConnection()
       .asInstanceOf[java.net.HttpURLConnection]
     def transportError(what: String, e: java.io.IOException): Nothing = {
@@ -1359,8 +1375,7 @@ class HttpPageFetcher(tokenProvider: Option[TokenProvider])
         // line — both must reach the O7 retry loop
         try {
           val in = conn.getInputStream
-          try Right(new String(in.readAllBytes(),
-            java.nio.charset.StandardCharsets.UTF_8))
+          try Right(in.readAllBytes())
           finally in.close()
         } catch { case e: java.io.IOException =>
           transportError("reading body for", e) }
@@ -1381,17 +1396,24 @@ class HttpPageFetcher(tokenProvider: Option[TokenProvider])
 
 /** O7 — bounded fixed-backoff retry (the reference's 429 loop:
   * ≤5 tries, fixed sleep; MD-PS:138-148). Retries ONLY retryable
-  * failures; permanent errors surface on the first attempt. */
+  * failures; permanent errors surface on the first attempt. Each view
+  * retries the same view of `inner`, so a text-only transport is not
+  * re-encoded for a caller that asked for text. */
 class RetryingPageFetcher(inner: PageFetcher, maxRetries: Int,
     sleepMs: Long) extends PageFetcher {
-  override def fetch(path: String): String = {
-    var attempt = 0
+  override def fetch(path: String): String = retrying(inner.fetch(path))
+
+  override def fetchBytes(path: String): Array[Byte] =
+    retrying(inner.fetchBytes(path))
+
+  private def retrying[T](attempt: => T): T = {
+    var failures = 0
     while (true) {
-      try return inner.fetch(path)
+      try return attempt
       catch {
         case e: RetryableFetchException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
+          failures += 1
+          if (failures > maxRetries) throw e
           if (sleepMs > 0) Thread.sleep(sleepMs)
       }
     }
@@ -1469,10 +1491,12 @@ object PageCursor {
   def isUrl(p: String): Boolean =
     p.startsWith("http://") || p.startsWith("https://")
 
+  private val UTF_8 = java.nio.charset.StandardCharsets.UTF_8
+
   /** UTF-8 encoded length of a string without materializing the byte
-    * array — the body-budget knobs are named *Bytes, so they must
-    * count bytes (a `String.length` count undercounts non-ASCII bodies
-    * by up to 3×, silently overshooting the driver-heap budget).
+    * array, for a caller that holds a page as text and counts it as the
+    * readers' budgets do, in bytes (a `String.length` count
+    * undercounts non-ASCII bodies by up to 3×).
     * A surrogate PAIR encodes as 4 bytes — each half contributes 2
     * (testing only the high half would count the low half's fall-
     * through as 3 and overcount every supplementary char by 1). */
@@ -1523,7 +1547,8 @@ object PageCursor {
   /** The OData inline count (`@odata.count`, stated when the request
     * carried `$count=true` or the fixture declares it) — the chain's
     * TOTAL row count as asserted by the server on the first page. */
-  def inlineCount(body: String): Option[Long] = scan(body).count
+  def inlineCount(body: String): Option[Long] =
+    scan(body.getBytes(UTF_8)).meta.count
 
   /** A page's root-level cursor fields: links resolved (by
     * [[pageMeta]]), `rows` = the size of `value[]`, `count` =
@@ -1531,29 +1556,51 @@ object PageCursor {
   final case class PageMeta(nextLink: Option[String],
       deltaLink: Option[String], rows: Int, count: Option[Long])
 
+  /** One page's scan: its cursor fields, and the byte spans of its
+    * `value[]` elements, element `i` at `[spans(2i), spans(2i + 1))`
+    * of the body. The spans are empty when the page yields no rows:
+    * `value` missing, `null` or not an array, or an array holding any
+    * element that is neither an object nor `null` — a page-level parse
+    * of such a page nulls its whole `value`. A `null` element's span
+    * is its `null` literal (one all-null row). */
+  final case class PageScan(meta: PageMeta, spans: Array[Int])
+
   /** Everything the cursor walk needs from a page, in ONE streaming
     * pass over the body. */
-  def pageMeta(body: String, currentPath: String): PageMeta = {
-    val m = scan(body)
-    m.copy(nextLink = m.nextLink.map(resolve(_, currentPath)),
-      deltaLink = m.deltaLink.map(resolve(_, currentPath)))
+  def pageMeta(body: String, currentPath: String): PageMeta =
+    scanPage(body.getBytes(UTF_8), currentPath).meta
+
+  /** [[pageMeta]] and the element spans of a page's UTF-8 bytes, in
+    * the same pass. */
+  def scanPage(body: Array[Byte], currentPath: String): PageScan = {
+    val s = scan(body)
+    s.copy(meta = s.meta.copy(
+      nextLink = s.meta.nextLink.map(resolve(_, currentPath)),
+      deltaLink = s.meta.deltaLink.map(resolve(_, currentPath))))
   }
 
   private val factory = new com.fasterxml.jackson.core.JsonFactory()
 
-  /** One root-level token scan: the cursor fields are read, every other
-    * field's children are skipped without building a tree (a page is
-    * mostly `value[]` rows the cursor never looks at). Semantics match
-    * a `readTree` of the page: only ROOT-level keys count (a row's own
-    * `@odata.nextLink` inside `value[]` is not a cursor), the last
-    * duplicate key wins, an explicit `null` link is absent, and a
-    * truncated or malformed body — or a link that is an object or an
-    * array — throws: a shortened walk must never pass for a complete
-    * one. */
-  private def scan(body: String): PageMeta = {
+  /** One root-level token scan over the body's bytes: the cursor fields
+    * are read, every other field's children are skipped without
+    * building a tree (a page is mostly `value[]` rows the cursor never
+    * looks at). Semantics match a `readTree` of the page: only
+    * ROOT-level keys count (a row's own `@odata.nextLink` inside
+    * `value[]` is not a cursor), the last duplicate key wins (for
+    * `value`, its spans too), an explicit `null` link is absent, and a
+    * truncated or malformed body — bytes that are not UTF-8, or a link
+    * that is an object or an array — throws: a shortened walk must
+    * never pass for a complete one. */
+  private def scan(body: Array[Byte]): PageScan = {
     import com.fasterxml.jackson.core.{JsonParseException, JsonParser}
     import com.fasterxml.jackson.core.JsonToken._
     val p = factory.createParser(body)
+    // the byte parser is chosen for UTF-8 input only; Jackson reads a
+    // UTF-16 or UTF-32 body through a char parser with no byte offsets
+    if (!p.isInstanceOf[com.fasterxml.jackson.core.json.UTF8StreamJsonParser]) {
+      p.close()
+      throw new JsonParseException(p, "page body is not UTF-8")
+    }
     def link(field: String): Option[String] = p.currentToken match {
       case VALUE_NULL => None
       case START_OBJECT | START_ARRAY => throw new JsonParseException(p,
@@ -1569,10 +1616,24 @@ object PageCursor {
         if (d >= Long.MinValue && d <= Long.MaxValue) Some(d.toLong) else None
       case _ => p.skipChildren(); None
     }
+    val spans = new scala.collection.mutable.ArrayBuilder.ofInt
     def elements(): Int = {
+      spans.clear()
       if (p.currentToken != START_ARRAY) { p.skipChildren(); return 0 }
+      var rowsOnly = true
       var n = 0
-      while (p.nextToken() != END_ARRAY) { p.skipChildren(); n += 1 }
+      while (p.nextToken() != END_ARRAY) {
+        val t = p.currentToken
+        val from = p.currentTokenLocation.getByteOffset.toInt
+        p.skipChildren()
+        if (t == START_OBJECT || t == VALUE_NULL) {
+          spans += from
+          spans += (if (t == VALUE_NULL) from + 4
+                    else p.currentLocation.getByteOffset.toInt)
+        } else rowsOnly = false
+        n += 1
+      }
+      if (!rowsOnly) spans.clear()
       n
     }
     try {
@@ -1590,7 +1651,7 @@ object PageCursor {
           }
         }
       } else p.skipChildren()
-      meta
+      PageScan(meta, spans.result())
     } finally p.close()
   }
 

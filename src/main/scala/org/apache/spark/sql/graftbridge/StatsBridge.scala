@@ -1,27 +1,34 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.types.StructType
 
-/** Size statistics for an RDD-backed relation. `read.json` over a
-  * `Dataset[String]` builds a `LogicalRDD` that reports no statistics,
-  * so the planner sizes it at `spark.sql.defaultSizeInBytes` (never
-  * broadcast); `LogicalRDD`'s statistics argument and `Dataset.ofRows`
-  * are `private[sql]`, so this forwarder lives under the
-  * org.apache.spark.sql package. Only this call crosses the boundary.
+/** A frame over an RDD of rows that reports its size. A `LogicalRDD`
+  * built the public way reports no statistics, so the planner sizes it
+  * at `spark.sql.defaultSizeInBytes` (never broadcast); `LogicalRDD`'s
+  * statistics argument, `Dataset.ofRows` and `StructType.asNullable`
+  * are `private[sql]`/`private[spark]`, so this forwarder lives under
+  * the org.apache.spark.sql package. Only this call crosses the
+  * boundary.
   */
 object StatsBridge {
-  /** `df` with its `LogicalRDD` reporting `sizeInBytes`, which the
-    * planner's `autoBroadcastJoinThreshold` then compares. A DataFrame
-    * whose plan is anything else is returned unchanged. */
-  def withSizeInBytes(df: DataFrame, sizeInBytes: Long): DataFrame =
-    df.queryExecution.logical match {
-      case r: LogicalRDD =>
-        val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
-        classic.Dataset.ofRows(spark,
-          r.copy()(spark, Some(Statistics(sizeInBytes = BigInt(sizeInBytes))), None))
-      case _ => df
-    }
+  /** A frame over `rows`, which hold `schema`'s columns, as one
+    * `LogicalRDD` reporting `sizeInBytes` (which the planner's
+    * `autoBroadcastJoinThreshold` then compares). Every column is
+    * nullable, as `read.json`'s are. Building the frame runs no query
+    * and no job. */
+  def rowsFrame(spark: SparkSession, schema: StructType,
+      rows: RDD[InternalRow], sizeInBytes: Long): DataFrame = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    classic.Dataset.ofRows(s,
+      LogicalRDD(DataTypeUtils.toAttributes(schema.asNullable), rows)(
+        s, Some(Statistics(sizeInBytes = BigInt(sizeInBytes))), None))
+  }
 }

@@ -191,6 +191,234 @@ class SourcesSpec extends SparkSpec {
     } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
+  // ------------------------------------------ URL runs parsed from bytes
+
+  import graft.sources.v2.PageFetcher
+  import java.nio.charset.StandardCharsets.UTF_8
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.execution.LogicalRDD
+  import org.apache.spark.sql.functions.{col, explode}
+  import org.apache.spark.sql.types._
+
+  /** Serves pages from memory as their exact bytes (falling back to
+    * local files), as the engine's transports do. */
+  private def bytesFetcher(pages: Map[String, Array[Byte]]) = new PageFetcher {
+    private val local = new graft.sources.v2.LocalPageFetcher
+    override def fetch(path: String): String = new String(fetchBytes(path), UTF_8)
+    override def fetchBytes(path: String): Array[Byte] =
+      pages.getOrElse(path, local.fetchBytes(path))
+  }
+
+  /** A URL chain `https://svc/<tag>/p1..pn` whose page `i` holds the
+    * root members `members(i)` plus the nextLink (or `last` on the
+    * final page). */
+  private def urlChain(tag: String, members: Seq[String],
+      last: String = ""): Seq[(String, String)] =
+    members.zipWithIndex.map { case (m, i) =>
+      val tail =
+        if (i < members.size - 1) s""","@odata.nextLink":"https://svc/$tag/p${i + 2}""""
+        else last
+      s"https://svc/$tag/p${i + 1}" -> s"{$m$tail}"
+    }
+
+  /** The page-level parse the URL runs replaced: one `read.json` over
+    * the bodies, then `explode` + `v.*`. */
+  private def pageLevel(bodies: Seq[String], valueSchema: StructType): DataFrame = {
+    import spark.implicits._
+    spark.read.schema(StructType(Seq(
+        StructField("value", ArrayType(valueSchema)),
+        StructField("@odata.nextLink", StringType))))
+      .json(spark.createDataset(bodies))
+      .select(explode(col("value")).as("v")).select(col("v.*"))
+  }
+
+  private def sameRows(got: DataFrame, want: DataFrame): Unit = {
+    assert(got.schema == want.schema)
+    assert(got.collect().toSeq == want.collect().toSeq)
+  }
+
+  /** The slices a URL run's relation plans, one per partition. */
+  private def urlSlices(df: DataFrame): Seq[ElementSlice] =
+    df.queryExecution.analyzed.collectLeaves().collect { case r: LogicalRDD =>
+      r.rdd.dependencies.head.rdd
+        .asInstanceOf[org.apache.spark.rdd.RDD[ElementSlice]].glom().collect()
+        .map { p => assert(p.length == 1); p.head }
+    }.flatten
+
+  private val corpusSchema = StructType(Seq(
+    StructField("id", StringType), StructField("name", StringType),
+    StructField("n", LongType), StructField("tags", ArrayType(StringType)),
+    StructField("sub", StructType(Seq(StructField("a", IntegerType))))))
+
+  private val corpus = Seq(
+    // non-ASCII text, a supplementary character, escaped quotes
+    """"value":[{"id":"a1","name":"Zoë, naïve café 😀 中文","n":1},""" +
+      """{"id":"a2","name":"say \"hi\" \\ back","n":2,"tags":["x","\u00e9"]}]""",
+    // type mismatches keep the row with the field null; a null element
+    // is one all-null row
+    """"value":[{"id":"b1","n":"not-a-number","name":"kept"},null,""" +
+      """{"id":"b3","sub":{"a":"bad"},"tags":"not-an-array"}]""",
+    // an element that is not an object or null drops the page
+    """"value":[{"id":"c1"},7]""",
+    """"value":[{"id":"c2"},["h",8]]""",
+    // a value that is not an array, missing, or null: no rows
+    """"value":{"id":"not-an-array"}""",
+    """"other":1""",
+    """"value":null""",
+    // duplicate value keys: the last wins
+    """"value":[{"id":"dup-first"}],"value":[{"id":"dup-last"},{"id":"dup-last2"}]""",
+    // an empty page, and a row's own nextLink is data
+    """"value":[]""",
+    """"value":[{"id":"f1","n":10,"@odata.nextLink":"https://elsewhere"}]""")
+
+  test("a URL run parses to the page-level read.json rows, in order") {
+    val chain = urlChain("corpus", corpus)
+    val df = ODataPageReader.readPages(spark, chain.head._1, corpusSchema,
+      fetcher = bytesFetcher(chain.map { case (u, b) => u -> b.getBytes(UTF_8) }.toMap))
+    sameRows(df, pageLevel(chain.map(_._2), corpusSchema))
+    assert(df.select("id").collect().map(_.getString(0)).toSeq ==
+      Seq("a1", "a2", "b1", null, "b3", "dup-last", "dup-last2", "f1"))
+    val b1 = df.filter(col("id") === "b1").collect().head
+    assert(b1.isNullAt(2) && b1.getString(1) == "kept")
+    // one page per slice here: 10 pages, 4 cores
+    assert(urlSlices(df).size == 4)
+
+    // a field named like the session's corrupt-record column is plain
+    // data inside `value[]`: a malformed element leaves it null
+    val withCorrupt = corpusSchema.add("_corrupt_record", StringType)
+    val quarantine = urlChain("corrupt", Seq(
+      """"value":[{"id":"q1","n":"bad"},{"id":"q2","_corrupt_record":"own"}]"""))
+    sameRows(ODataPageReader.readPages(spark, quarantine.head._1, withCorrupt,
+        fetcher = bytesFetcher(quarantine.map { case (u, b) => u -> b.getBytes(UTF_8) }.toMap)),
+      pageLevel(quarantine.map(_._2), withCorrupt))
+  }
+
+  test("a URL run with fewer rows than cores, and a delta run's tombstones, match the page-level parse") {
+    val small = urlChain("small", Seq(""""value":[{"id":"s1"}]""",
+      """"value":[{"id":"s2","n":5}]"""))
+    val smallDf = ODataPageReader.readPages(spark, small.head._1, corpusSchema,
+      fetcher = bytesFetcher(small.map { case (u, b) => u -> b.getBytes(UTF_8) }.toMap))
+    sameRows(smallDf, pageLevel(small.map(_._2), corpusSchema))
+    assert(urlSlices(smallDf).size == 2)
+
+    val delta = urlChain("delta", Seq(
+      """"value":[{"id":"d1","name":"upd"},{"id":"d2","@removed":{"reason":"deleted"}}]""",
+      """"value":[null,{"id":"d3","@removed":{"reason":"changed"},"name":"x"}]"""),
+      last = ""","@odata.deltaLink":"https://svc/delta?$deltatoken=t9"""")
+    val (changes, link) = ODataPageReader.readDeltaPages(spark, delta.head._1,
+      corpusSchema, fetcher = bytesFetcher(delta.map { case (u, b) => u -> b.getBytes(UTF_8) }.toMap))
+    assert(link.contains("https://svc/delta?$deltatoken=t9"))
+    val removedField = ODataPageReader.removedField
+    val want = pageLevel(delta.map(_._2), corpusSchema.add(
+        StructField(removedField, ODataPageReader.removedMarkerSchema)))
+      .withColumn("removed", col(removedField).isNotNull).drop(removedField)
+    sameRows(changes, want)
+    assert(changes.select("id", "removed").collect().map(r =>
+      (r.getString(0), r.getBoolean(1))).toSeq ==
+      Seq(("d1", false), ("d2", true), (null, false), ("d3", true)))
+  }
+
+  test("a mixed file/URL chain matches the page-level parse of its bodies, in page order") {
+    // a URL page cannot link to a local file, so the files come first
+    val dir = Files.createTempDirectory("graft_mixed_diff")
+    val url = urlChain("mix", Seq(
+      """"value":[{"id":"u1","name":"ünï"},{"id":"u2","n":"x"}]""",
+      """"value":[null,{"id":"u3"}]"""))
+    val files = Seq(
+      s"""{"value":[{"id":"f1","n":1}],"@odata.nextLink":"f2.json"}""",
+      s"""{"value":[{"id":"f2"},7],"@odata.nextLink":"f3.json"}""",
+      s"""{"value":[{"id":"f3","sub":{"a":2}}],"@odata.nextLink":"${url.head._1}"}""")
+    files.zipWithIndex.foreach { case (b, i) =>
+      Files.writeString(dir.resolve(s"f${i + 1}.json"), b) }
+    val df = ODataPageReader.readPages(spark, dir.resolve("f1.json").toString,
+      corpusSchema, fetcher = bytesFetcher(url.map { case (u, b) => u -> b.getBytes(UTF_8) }.toMap))
+    sameRows(df, pageLevel(files ++ url.map(_._2), corpusSchema))
+    assert(df.select("id").collect().map(_.getString(0)).toSeq ==
+      Seq("f1", "f3", "u1", "u2", null, "u3"))
+  }
+
+  test("a 5-page URL run on 4 cores plans 4 balanced slices") {
+    // pages of 40, 120, 10, 80 and 40 rows: one slice per page would
+    // put 120 rows in one task
+    val sizes = Seq(40, 120, 10, 80, 40)
+    val chain = urlChain("bal", sizes.zipWithIndex.map { case (n, p) =>
+      (1 to n).map(i => s"""{"id":"p$p-r$i","name":"${"x" * (i % 17)}","n":$i}""")
+        .mkString(""""value":[""", ",", "]")
+    })
+    val df = ODataPageReader.readPages(spark, chain.head._1, corpusSchema,
+      fetcher = bytesFetcher(chain.map { case (u, b) => u -> b.getBytes(UTF_8) }.toMap))
+    assert(spark.sparkContext.defaultParallelism == 4)
+    assert(df.rdd.getNumPartitions == 4)
+    val slices = urlSlices(df)
+    assert(slices.size == 4)
+    val bytes = slices.map(_.data.length.toLong).sum
+    val largest = slices.flatMap(s => s.ends.indices.map(i =>
+      s.ends(i) - (if (i == 0) 0 else s.ends(i - 1)))).max
+    assert(slices.forall(_.data.length <= (bytes + 3) / 4 + largest),
+      slices.map(_.data.length))
+    assert(slices.forall(_.ends.nonEmpty))
+    sameRows(df, pageLevel(chain.map(_._2), corpusSchema))
+  }
+
+  test("readPages over a URL chain runs no SQL execution and no Spark job until an action") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val chain = urlChain("lazy", (1 to 5).map(p =>
+      s""""value":[{"id":"l$p-1"},{"id":"l$p-2"}]"""))
+    val fetcher = bytesFetcher(chain.map { case (u, b) => u -> b.getBytes(UTF_8) }.toMap)
+    val executions = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        executions.incrementAndGet()
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        executions.incrementAndGet()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val (df, jobs) = graft.JobLog.during(spark)(ODataPageReader.readPages(
+        spark, chain.head._1, corpusSchema, fetcher = fetcher))
+      assert(jobs.isEmpty, jobs)
+      assert(executions.get() == 0)
+      val (n, actionJobs) = graft.JobLog.during(spark)(df.collect().length)
+      assert(n == 10 && actionJobs.nonEmpty)
+      assert(executions.get() >= 1) // the listener sees the action
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("a URL page that is not valid UTF-8 fails the read and leaves a sync round's snapshot and cursor") {
+    import com.fasterxml.jackson.core.JsonParseException
+    import graft.pipeline.IncrementalSync
+    // 0xFF never starts a UTF-8 sequence; a replacing decode would
+    // load "a\uFFFDb" as the id
+    val bad = """{"value":[{"id":"a?b"}],"@odata.deltaLink":"https://svc/r2"}"""
+      .getBytes(UTF_8).map(b => if (b == '?'.toByte) 0xFF.toByte else b)
+    val good = """{"value":[{"id":"g1","name":"one"}],"@odata.deltaLink":"https://svc/r1"}"""
+    val fetcher = bytesFetcher(Map(
+      "https://svc/r0" -> good.getBytes(UTF_8), "https://svc/r1" -> bad))
+    for (read <- Seq[() => Any](
+        () => ODataPageReader.readPages(spark, "https://svc/r1", corpusSchema,
+          fetcher = fetcher),
+        () => ODataPageReader.readDeltaPages(spark, "https://svc/r1",
+          corpusSchema, fetcher = fetcher))) {
+      val e = intercept[JsonParseException](read())
+      assert(e.getMessage.contains("Invalid UTF-8"), e.getMessage)
+    }
+    val work = Files.createTempDirectory("graft_bad_utf8")
+    val snapshot = work.resolve("snapshot").toString
+    val cursor = work.resolve("cursor").toString
+    val c1 = IncrementalSync.runRound(spark, "https://svc/r0", corpusSchema,
+      snapshot, cursor, fetcher = fetcher)
+    assert(c1.contains("https://svc/r1"))
+    def snap() = spark.read.schema(corpusSchema).parquet(snapshot)
+      .collect().map(_.toString).toSeq
+    val before = snap()
+    assert(before.size == 1)
+    intercept[JsonParseException](IncrementalSync.runRound(spark, c1.get,
+      corpusSchema, snapshot, cursor, fetcher = fetcher))
+    assert(IncrementalSync.loadCursor(spark, cursor) == c1)
+    assert(snap() == before)
+  }
+
   test("record-level error policy: PERMISSIVE quarantines, DROPMALFORMED skips, FAILFAST throws") {
     // the record-level analog of the reference's entity-level skip
     // policy (O9, MD-PS:151-162): one bad record must not abandon the
